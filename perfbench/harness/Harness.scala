@@ -1,14 +1,20 @@
 package perfbench
 
 import java.io.{ByteArrayOutputStream, File, PrintStream}
+import java.lang.management.{ManagementFactory, MemoryType}
 import java.nio.file.{Files, Path, Paths}
 import java.sql.DriverManager
 import java.util.Properties
+import java.util.concurrent.atomic.AtomicLong
+import javax.management.NotificationEmitter
+import javax.management.openmbean.CompositeData
 
 import scala.jdk.CollectionConverters._
 import scala.util.Random
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import com.sun.management.GarbageCollectionNotificationInfo
+import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -16,8 +22,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Queries
-import graft.io.{GeoNodeApi, JdbcBoundary, MetadataUpsert}
-import graft.jobs.{EovToKeywords, ExportInObis, LoadPortal, LoadPortalMain}
+import graft.io.{GeoNodeApi, JdbcBoundary, Shapefile, Xlsx}
+import graft.jobs.{EovToKeywords, ExportInObis, LoadPortal, LoadPortalMain, SpatialExport}
 
 /** The benchmark's JVM side. Drives the program only through its public
   * entry points, times each call, checks nothing itself: it records what
@@ -32,6 +38,8 @@ object Harness {
   def main(args: Array[String]): Unit = {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val a = args.map { kv => val i = kv.indexOf('='); kv.take(i) -> kv.drop(i + 1) }.toMap
+    Hooks.register(a("work"))
+    Memory.watch()
     val out = a("mode") match {
       case "etl" => Etl.run(a)
       case "catalog" => Catalog.run(a)
@@ -50,10 +58,11 @@ object Harness {
     case x => x.asInstanceOf[AnyRef]
   }
 
-  /** One session config for every call the harness makes; the same
-    * settings `LoadPortalMain` and `Bench` pass to their builders.
+  /** The session of the calls the harness makes itself (K5, E2, E3 and
+    * the catalog); the same settings `LoadPortalMain` and `Bench` pass to
+    * their builders. E1 builds its own.
     */
-  def session(work: String): SparkSession =
+  def session(): SparkSession =
     SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
@@ -61,8 +70,6 @@ object Harness {
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", s"$work/spark-local")
-      .config("spark.sql.warehouse.dir", s"$work/warehouse")
       .getOrCreate()
 
   def peakRssKb: Long =
@@ -92,8 +99,88 @@ object Harness {
       "groups" -> groups,
       "plan" -> plan,
       "jobs" -> t.jobIntervals.asScala.map { case (g, l) => g -> l.asScala.toSeq.map(_.toSeq) }.toMap,
-      "layers_ns" -> t.layerNs.asScala.map { case (k, v) => k -> v.get }.toMap)
+      "layers_ns" -> t.layerNs.asScala.map { case (k, v) => k -> v.get }.toMap,
+      "sampler_gap_ns" -> t.gapNs.get)
   }
+}
+
+/** Measurement hooks Spark instantiates itself from the JVM's `spark.*`
+  * system properties, as it does `--conf` settings of spark-submit, so
+  * they reach every session, the one `LoadPortalMain` builds included.
+  * They forward to the tracer of the current run.
+  */
+object Hooks {
+  @volatile var tracer: Tracer = new Tracer(enabled = false)
+
+  def register(work: String): Unit = {
+    System.setProperty("spark.extraListeners", classOf[JobHook].getName)
+    System.setProperty("spark.sql.queryExecutionListeners", classOf[QueryHook].getName)
+    System.setProperty("spark.sql.warehouse.dir", s"$work/warehouse")
+  }
+}
+
+class JobHook extends SparkListener {
+  private def t = { val x = Hooks.tracer; if (x.enabled) Some(x.listener) else None }
+  override def onJobStart(e: SparkListenerJobStart): Unit = t.foreach(_.onJobStart(e))
+  override def onJobEnd(e: SparkListenerJobEnd): Unit = t.foreach(_.onJobEnd(e))
+  override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = t.foreach(_.onStageSubmitted(e))
+  override def onTaskEnd(e: SparkListenerTaskEnd): Unit = t.foreach(_.onTaskEnd(e))
+}
+
+class QueryHook extends QueryExecutionListener {
+  private def t = { val x = Hooks.tracer; if (x.enabled) Some(x.qeListener) else None }
+  override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+    t.foreach(_.onSuccess(funcName, qe, durationNs))
+  override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+    t.foreach(_.onFailure(funcName, qe, exception))
+}
+
+/** Memory the program uses, with the harness's fixed heap taken out:
+  * the largest heap occupancy any collection leaves behind (the live
+  * set at its peak, from the collectors' notifications) and the peak of
+  * everything resident outside the heap (VmHWM minus the committed heap,
+  * which the pre-touched fixed heap keeps resident from the start).
+  */
+object Memory {
+  val peakLiveBytes = new AtomicLong()
+
+  def watch(): Unit = {
+    val heapPools = ManagementFactory.getMemoryPoolMXBeans.asScala
+      .filter(_.getType == MemoryType.HEAP).map(_.getName).toSet
+    ManagementFactory.getGarbageCollectorMXBeans.asScala.foreach {
+      case e: NotificationEmitter =>
+        e.addNotificationListener((n: javax.management.Notification, _: Any) =>
+          if (n.getType == GarbageCollectionNotificationInfo.GARBAGE_COLLECTION_NOTIFICATION) {
+            val after = GarbageCollectionNotificationInfo.from(n.getUserData.asInstanceOf[CompositeData])
+              .getGcInfo.getMemoryUsageAfterGc.asScala
+            val live = after.collect { case (pool, u) if heapPools(pool) => u.getUsed }.sum
+            peakLiveBytes.accumulateAndGet(live, math.max)
+          }, null, null)
+      case _ => ()
+    }
+  }
+
+  def summary: Map[String, Long] = Map(
+    "peak_rss_kb" -> Harness.peakRssKb,
+    "heap_committed_bytes" -> ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getCommitted,
+    "peak_live_heap_bytes" -> peakLiveBytes.get)
+}
+
+/** Counts the statements K5 hands to the real `JdbcExecutor` as they
+  * pass. Task closures are serialized even in local mode, so the counts
+  * live in JVM-static counters the driver reads after the run.
+  */
+class CountingExecutor(inner: JdbcBoundary.SqlExecutor) extends JdbcBoundary.SqlExecutor with AutoCloseable {
+  def execute(stmt: JdbcBoundary.Stmt): Unit = {
+    CountingExecutor.statements.incrementAndGet()
+    if (stmt.sql.startsWith("insert")) CountingExecutor.inserts.incrementAndGet()
+    inner.execute(stmt)
+  }
+  def close(): Unit = inner match { case c: AutoCloseable => c.close(); case _ => () }
+}
+object CountingExecutor {
+  val statements = new AtomicLong()
+  val inserts = new AtomicLong()
 }
 
 /** The benchmark's JDBC target: embedded Derby with the GeoNode tables
@@ -196,18 +283,6 @@ class BundleApi(data: String) extends GeoNodeApi.HttpJson with Serializable {
     else throw new IllegalArgumentException(s"no canned payload for $url")
 }
 
-/** Execution time of every Spark SQL action a session runs, stamped with
-  * its planning start so actions outside the timed window can be left out.
-  */
-class QueryTimes extends QueryExecutionListener {
-  val times = java.util.Collections.synchronizedList(new java.util.ArrayList[(Long, Long)]())
-  override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
-    val phases = qe.tracker.phases.values
-    times.add((if (phases.isEmpty) System.currentTimeMillis() else phases.map(_.startTimeMs).min, durationNs))
-  }
-  override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
-}
-
 /** E1 → K5 → E2 → E3 over one generated bundle, in a closed loop. */
 object Etl {
   val ApiBase = "http://geonode.invalid"
@@ -226,26 +301,21 @@ object Etl {
       System.gc()
       val gc0 = Tracer.gcMs
       val captured = new ByteArrayOutputStream()
-      val queries = new QueryTimes
-      val t0Ms = System.currentTimeMillis()
+      Hooks.tracer = tracer
+      CountingExecutor.statements.set(0)
+      CountingExecutor.inserts.set(0)
       val t0 = System.nanoTime()
-      var spark = tracer.span("session") { Harness.session(work) }
-      spark.listenerManager.register(queries)
-      if (tracer.enabled) tracer.install(spark)
-      spark.sparkContext.setLogLevel("ERROR")
-      tracer.span("e1_load_portal_main", Some(spark)) {
+      // E1 builds, configures and stops its own session
+      tracer.span("e1_load_portal_main") {
         Console.withOut(new PrintStream(captured, true)) { LoadPortalMain.main(Array(data, out)) }
       }
-      spark = tracer.span("session") { Harness.session(work) }
-      spark.listenerManager.register(queries)
-      if (tracer.enabled) tracer.install(spark)
+      val spark = tracer.span("session") { Harness.session() }
       spark.sparkContext.setLogLevel("ERROR")
       val job = new LoadPortal(spark, data)
-      val meta = tracer.span("k5_upsert_metadata", Some(spark)) {
+      tracer.span("k5_upsert_metadata", Some(spark)) {
         val m = job.withLayerPks(job.withUserPks(job.withIdentifiers),
           GeoNodeApi.layers(spark, api, ApiBase))
-        JdbcBoundary.upsertMetadata(m, () => new JdbcBoundary.JdbcExecutor(url, props))
-        m
+        JdbcBoundary.upsertMetadata(m, () => new CountingExecutor(new JdbcBoundary.JdbcExecutor(url, props)))
       }
       tracer.span("e2_eov_to_keywords", Some(spark)) {
         EovToKeywords.run(spark, url, props, url, props, api, ApiBase, s"$out/backup/layers_layer_eovs")
@@ -255,17 +325,15 @@ object Etl {
         Files.writeString(Paths.get(s"$out/export_in_obis.sql"), stmts.mkString("", "\n", "\n"))
       }
       val wall = (System.nanoTime() - t0) / 1e9
-      val t1Ms = System.currentTimeMillis()
       val gcS = (Tracer.gcMs - gc0) / 1e3
       // ---- untimed: what this run produced
-      val stmts = meta.filter(col("pk").isNotNull).collect().toSeq.map(MetadataUpsert.statementsFor)
       spark.stop() // drains the listener bus
-      val queryS = queries.times.asScala.toSeq.collect { case (ms, ns) if ms >= t0Ms && ms <= t1Ms => ns / 1e9 }
+      Hooks.tracer = new Tracer(enabled = false)
       val obs = observe(out, url, new String(captured.toByteArray, "UTF-8")) ++ Map(
-        "query_s" -> queryS,
-        "jdbc_statements" -> stmts.map(_.size).sum,
-        "jdbc_inserts" -> stmts.flatten.count(_.sql.startsWith("insert")),
-        "gc_s" -> gcS)
+        "jdbc_statements" -> CountingExecutor.statements.get,
+        "jdbc_inserts" -> CountingExecutor.inserts.get,
+        "gc_s" -> gcS) ++
+        (if (tracer.enabled) Map("readers" -> readers(data)) else Map.empty)
       (wall, tracer.spans.filter(s => s.parent < 0).toSeq, obs)
     }
 
@@ -291,7 +359,27 @@ object Etl {
     }
     Derby.shutdown()
     Map("ready_ms" -> readyMs, "warmup" -> Map("wall_s" -> warm._1, "obs" -> warm._3),
-      "runs" -> runs, "peak_rss_kb" -> Harness.peakRssKb)
+      "runs" -> runs, "memory" -> Memory.summary)
+  }
+
+  /** Wall of the driver-side readers E1 calls, on the files it calls
+    * them on, timed directly (median of five passes, right after a traced
+    * run): `Shapefile.read` on the IMMA and Finland copies and every
+    * windfarm SHP, `Xlsx.readSheet` on EuroSea and WESPAS. These reads
+    * take a few milliseconds, too short for the sampler to see.
+    */
+  def readers(data: String): Map[String, Double] = {
+    def shpUnder(d: File): Seq[File] =
+      if (!d.isDirectory) Nil
+      else d.listFiles().toSeq.sortBy(_.getName).flatMap(f => if (f.isDirectory) shpUnder(f)
+        else if (f.getName.endsWith(".shp")) Seq(f) else Nil)
+    val shp = SpatialExport.shapefileCopies.map { case (_, rel) => s"$data/$rel" } ++
+      shpUnder(new File(s"$data/${SpatialExport.windfarmFolder}")).map(_.getPath)
+    val xlsx = Seq(s"$data/EuroSea.xlsx", s"$data/${SpatialExport.wespasXlsx}")
+    def median5(body: => Unit): Double =
+      Seq.fill(5) { val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9 }.sorted.apply(2)
+    Map("shp_s" -> median5(shp.foreach(Shapefile.read)),
+      "xlsx_s" -> median5(xlsx.foreach(Xlsx.readSheet(_, 1))))
   }
 
   /** Counts an output check needs, read back from the files and tables. */
@@ -364,33 +452,35 @@ object Catalog {
     val names = a("queries").split(",").toSeq
     val byName = Queries.all.map(q => q.name -> q).toMap
     val qs = names.map(byName)
-    val spark = Harness.session(work)
+    val spark = Harness.session()
     spark.sparkContext.setLogLevel("ERROR")
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec", org.apache.logging.log4j.Level.ERROR)
     val tables = new File(sf).listFiles().filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
     val inRows = tables.map(t => spark.read.parquet(t.getPath).count()).sum
     val inBytes = tables.map(t => Harness.treeStats(t.toPath)._2).sum
-    // ---- set-up ends with one untimed pass in catalog order through the
-    // same noop sink the timed passes use
-    qs.foreach { q =>
-      try q.fn(spark, sf).write.format("noop").mode("overwrite").save()
-      catch { case scala.util.control.NonFatal(_) => () } // counted by the timed passes
-    }
+    // ---- set-up ends with one untimed pass in catalog order that also
+    // makes the output check: every query's result digest
+    val checks = qs.map { q =>
+      q.name -> (try Harness.toJava(digest(q.fn(spark, sf)))
+                 catch { case e: Throwable => Map("error" -> String.valueOf(e.getMessage)) })
+    }.toMap
     val readyMs = System.currentTimeMillis()
     val passes = scala.collection.mutable.ArrayBuffer.empty[Map[String, Any]]
     var timed = 0.0
     var k = 0
-    while (timed < seconds || passes.size < 2) {
+    while (timed < seconds || passes.size < (if (traced) 2 else 1)) {
       val order = new Random(seed * 1000003L + k).shuffle(qs)
       val tr = new Tracer(enabled = traced && k % 2 == 1)
-      if (tr.enabled) tr.install(spark)
-      System.gc()
-      val gc0 = Tracer.gcMs
+      Hooks.tracer = tr
+      // GC time inside the timed executions only: the explicit collections
+      // between queries are the harness's, not the program's
+      var gcMs = 0L
       var failed = 0
       val times = order.map { q =>
         spark.catalog.clearCache()
         System.gc()
+        val gc0 = Tracer.gcMs
         val t0 = System.nanoTime()
         try {
           val (t1, t2) = tr.span(q.name, Some(spark)) {
@@ -403,32 +493,27 @@ object Catalog {
         } catch { case e: Throwable =>
           failed += 1
           Map("name" -> q.name, "error" -> String.valueOf(e.getMessage), "s" -> (System.nanoTime() - t0) / 1e9)
-        }
+        } finally gcMs += Tracer.gcMs - gc0
       }
       val wall = times.map(_("s").asInstanceOf[Double]).sum
-      val gcS = (Tracer.gcMs - gc0) / 1e3
+      val gcS = gcMs / 1e3
       Thread.sleep(100) // listener-bus drain before the counters are read
-      if (tr.enabled) tr.uninstall(spark)
+      Hooks.tracer = new Tracer(enabled = false)
       timed += wall
       passes += Map("wall_s" -> wall, "traced" -> tr.enabled, "failed" -> failed, "gc_s" -> gcS,
         "calls" -> times) ++
         (if (tr.enabled) Map("trace" -> Harness.traceSummary(tr, tr.spans.filter(_.parent < 0).toSeq)) else Map.empty)
       k += 1
     }
-    // ---- untimed output check: every query's result digest
-    val checks = qs.map { q =>
-      q.name -> (try Harness.toJava(digest(q.fn(spark, sf)))
-                 catch { case e: Throwable => Map("error" -> String.valueOf(e.getMessage)) })
-    }.toMap
     Map("ready_ms" -> readyMs, "checks" -> checks, "runs" -> passes,
-      "input_rows" -> inRows, "input_bytes" -> inBytes, "peak_rss_kb" -> Harness.peakRssKb)
+      "input_rows" -> inRows, "input_bytes" -> inBytes, "memory" -> Memory.summary)
   }
 
   /** Digests of a `graft.Verify` output directory (one parquet dir per
     * query) — how the catalog goldens are made.
     */
   def digestDir(a: Map[String, String]): Map[String, Any] = {
-    val spark = Harness.session(a("work"))
+    val spark = Harness.session()
     spark.sparkContext.setLogLevel("ERROR")
     a("queries").split(",").map { q =>
       q -> Harness.toJava(digest(spark.read.parquet(s"${a("verify")}/$q")))

@@ -38,6 +38,9 @@ class Counters {
 class Tracer(val enabled: Boolean, sampleMs: Int = 10) {
   val spans = mutable.ArrayBuffer.empty[Span]
   @volatile private var open = List.empty[Int]
+  // name of the open top-level span: the group of jobs submitted without
+  // a job group (by a session the program builds itself)
+  @volatile private var openTop: String = null
   // wall-clock anchor: spans are kept in nanoTime, listener events in ms
   val anchorNs: Long = System.nanoTime()
   val anchorMs: Long = System.currentTimeMillis()
@@ -61,6 +64,7 @@ class Tracer(val enabled: Boolean, sampleMs: Int = 10) {
     val parent = open.headOption.getOrElse(-1)
     spans += Span(id, name, System.nanoTime(), -1L, parent)
     open = id :: open
+    if (parent < 0) openTop = name
     val tag = if (enabled) spark else None
     tag.foreach(_.sparkContext.setJobGroup(name, name))
     val cg0 = Tracer.codegenCount
@@ -69,13 +73,15 @@ class Tracer(val enabled: Boolean, sampleMs: Int = 10) {
       if (enabled) counters(name).add("codegen_classes", Tracer.codegenCount - cg0)
       spans(id) = spans(id).copy(endNs = System.nanoTime())
       open = open.tail
+      if (parent < 0) openTop = null
       tag.foreach(s => if (!s.sparkContext.isStopped) s.sparkContext.clearJobGroup())
     }
   }
 
   val listener: SparkListener = new SparkListener {
     override def onJobStart(e: SparkListenerJobStart): Unit = {
-      val g = Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("none")
+      val g = Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+        .orElse(Option(openTop)).getOrElse("none")
       jobGroupOf.put(e.jobId, g)
       jobStart.put(e.jobId, e.time)
       e.stageIds.foreach(s => stageGroup.put(s, g))
@@ -135,16 +141,6 @@ class Tracer(val enabled: Boolean, sampleMs: Int = 10) {
     }
   }
 
-  def install(spark: SparkSession): Unit = {
-    spark.sparkContext.addSparkListener(listener)
-    spark.listenerManager.register(qeListener)
-  }
-
-  def uninstall(spark: SparkSession): Unit = {
-    spark.sparkContext.removeSparkListener(listener)
-    spark.listenerManager.unregister(qeListener)
-  }
-
   // ------------------------------------------------------------ sampling
 
   /** Layer time from stack samples: every `sampleMs` the driver thread
@@ -152,10 +148,14 @@ class Tracer(val enabled: Boolean, sampleMs: Int = 10) {
     * executor task thread parsing CSV to `io.csv`. Consecutive driver
     * samples of one layer become one span under the open top-level span;
     * driver time outside any sub-layer stays the top-level span's own.
+    * A sampling interval inside a top-level span that overran `sampleMs`
+    * by more than `GapFactor` times is time the samples did not observe;
+    * its excess is kept in `gapNs` and counts as unaccounted.
     */
   @volatile private var sampling = false
   private var sampler: Thread = _
   val layerNs = new ConcurrentHashMap[String, AtomicLong]()
+  val gapNs = new AtomicLong()
   private val sampled = mutable.ArrayBuffer.empty[(String, Long, Long, Int)]
 
   def startSampling(main: Thread): Unit = {
@@ -172,6 +172,7 @@ class Tracer(val enabled: Boolean, sampleMs: Int = 10) {
         val dt = now - last
         last = now
         val parent = open.lastOption.getOrElse(-1)
+        if (parent >= 0 && dt > Tracer.GapFactor * sampleMs * 1000000L) gapNs.addAndGet(dt - sampleMs * 1000000L)
         val layer = if (parent < 0) null else Tracer.driverLayer(main.getStackTrace)
         if (cur != null && (layer == null || layer != cur._1 || parent != cur._3)) {
           sampled.synchronized(sampled += ((cur._1, cur._2, now - dt, cur._3)))
@@ -206,6 +207,8 @@ class Tracer(val enabled: Boolean, sampleMs: Int = 10) {
 
 object Tracer {
   object Plans extends AdaptiveSparkPlanHelper
+
+  val GapFactor = 5
 
   def codegenCount: Long =
     org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount

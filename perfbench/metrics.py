@@ -7,7 +7,10 @@ without a JVM.
 import json
 import statistics
 
-SELF_TIME_TOLERANCE = 0.05   # traced run_s vs the sum of span self times
+# share of a traced run's wall the trace may leave unobserved: time outside
+# every top-level span plus sampler intervals that overran (a breach fails
+# the run, as the per-layer figures then rest on time nobody saw)
+UNACCOUNTED_TOLERANCE = 0.10
 
 
 def median(xs):
@@ -58,6 +61,22 @@ def self_times(spans):
     return out
 
 
+def unaccounted_share(wall_s, spans, sampler_gap_ns):
+    """Share of a traced run's wall the trace did not observe: the part
+    no top-level span covers, plus the excess of every sampling interval
+    that overran (the sampler was starved and its layer split is a guess)."""
+    top = union_length([(s["start_ms"], s["end_ms"]) for s in spans if s["parent"] < 0]) / 1000.0
+    return (abs(wall_s - top) + sampler_gap_ns / 1e9) / wall_s
+
+
+def peak_mem_mb(memory):
+    """Peak live heap plus peak off-heap resident memory, in MiB: VmHWM
+    minus the fixed heap, which is committed and pre-touched from the
+    start, leaves what the program held outside the heap at its peak."""
+    off_heap = memory["peak_rss_kb"] * 1024 - memory["heap_committed_bytes"]
+    return (memory["peak_live_heap_bytes"] + off_heap) / 2 ** 20
+
+
 def driver_only_ms(span, job_intervals):
     """Span wall minus the union of its job group's job intervals."""
     clipped = [(max(a, span["start_ms"]), min(b, span["end_ms"])) for a, b in job_intervals]
@@ -99,7 +118,10 @@ def end_to_end(raw, mode, spawn_ms, expected=None):
     setup_s = (raw["ready_ms"] - spawn_ms) / 1000.0
     run_s = median([r["wall_s"] for r in runs])
     if mode == "etl":
-        calls = [q for r in runs for q in r["obs"]["query_s"]]
+        # latency of the portal load's four jobs (E1, K5, E2, E3), the
+        # calls an operator starts and waits for; the harness's own
+        # session start is not one of them
+        calls = [c["s"] for r in runs for c in r["calls"] if c["name"] != "session"]
         records = expected["input"]["records"]
         out_per_in = median([r["obs"]["out_bytes"] for r in runs]) / expected["input"]["bytes"]
     else:
@@ -118,7 +140,7 @@ def end_to_end(raw, mode, spawn_ms, expected=None):
         "records_per_s": records / run_s if run_s else 0.0,
         "query_s_p50": percentile(calls, 50),
         "query_s_p95": percentile(calls, 95),
-        "peak_rss_mb": raw["peak_rss_kb"] / 1024.0,
+        "peak_mem_mb": peak_mem_mb(raw["memory"]),
         "out_bytes_per_in_byte": out_per_in,
     }
 
@@ -150,15 +172,13 @@ def layer_metrics_of_run(run, mode, expected=None, input_rows=None):
     m["spark.driver_only_s"] = sum(
         driver_only_ms(s, t["jobs"].get(s["name"], [])) for s in top if s["name"] != "session") / 1000.0
     selfs = self_times(spans)
-    wall = run["wall_s"]
-    m["trace.unaccounted_share"] = abs(wall - sum(selfs.values()) / 1000.0) / wall
+    m["trace.unaccounted_share"] = unaccounted_share(run["wall_s"], spans, t.get("sampler_gap_ns", 0))
     layer = {k: v / 1e9 for k, v in t["layers_ns"].items()}
     by_name = {}
     for s in top:
         by_name[s["name"]] = by_name.get(s["name"], 0.0) + (s["end_ms"] - s["start_ms"]) / 1000.0
     e1_self = sum(selfs[s["id"]] for s in top if s["name"] == "e1_load_portal_main") / 1000.0
     m.update({
-        "io.xlsx.busy_s": layer.get("io.xlsx", 0.0), "io.shp.busy_s": layer.get("io.shp", 0.0),
         "io.csv.busy_s": layer.get("io.csv", 0.0),
         "io.csv.rows": sum(p["value"] for p in plan if p["key"] == "csv_rows"),
         "jobs.load_portal.busy_s": e1_self,
@@ -174,6 +194,7 @@ def layer_metrics_of_run(run, mode, expected=None, input_rows=None):
         fmt = expected["input"]["by_format"]
         m.update({
             "io.xlsx.rows": fmt["xlsx"], "io.shp.features": fmt["shp"],
+            "io.xlsx.busy_s": o["readers"]["xlsx_s"], "io.shp.busy_s": o["readers"]["shp_s"],
             "io.jdbc.statements": o["jdbc_statements"],
             "io.jdbc.rows_written": o["jdbc_inserts"] + o["derby"]["base_resourcebase_tkeywords"],
             "io.jdbc.scan_rows": o["backup_rows"],
@@ -186,7 +207,8 @@ def layer_metrics_of_run(run, mode, expected=None, input_rows=None):
     else:
         calls = [c for c in run["calls"] if "error" not in c]
         m.update({
-            "io.xlsx.rows": 0, "io.shp.features": 0, "io.jdbc.statements": 0, "io.jdbc.rows_written": 0,
+            "io.xlsx.rows": 0, "io.shp.features": 0, "io.xlsx.busy_s": 0.0, "io.shp.busy_s": 0.0,
+            "io.jdbc.statements": 0, "io.jdbc.rows_written": 0,
             "io.jdbc.scan_rows": 0, "io.jdbc.overwrite_rows": 0,
             "jobs.spatial_export.files": 0, "jobs.spatial_export.bytes": 0,
             "Queries.build_s": sum(c["build_s"] for c in calls),
