@@ -312,8 +312,10 @@ def generate(out, scale, seed):
                         "resp_firstname": r.choice(FIRST), "resp_lastname": r.choice(LAST),
                         "resp_email": r.choice(emails) if r.random() < 0.9 else ""})
     r.shuffle(s2_rows)
-    dup = dict(r.choice([x for x in s2_rows if x["prog_name"] in set(matched)]))
-    s2_rows.insert(r.randrange(len(s2_rows) + 1), dup)   # exact duplicate row (fan-out 2)
+    # exact duplicate row (fan-out 2); never a site dataset's, whose features
+    # would then be written twice and make the output volume seed-dependent
+    dup = dict(r.choice([x for x in s2_rows if x["prog_name"] in set(matched) and x["prog_name"] not in site_names]))
+    s2_rows.insert(r.randrange(len(s2_rows) + 1), dup)
     header2 = ["", "ErinSpatialGeoJSON", "prog_name", "resp_firstname", "resp_lastname",
                "resp_email"] + [f"X{i}" for i in range(20)]
     with open(os.path.join(out, SURVEY2), "w", encoding="utf-8", newline="") as f:

@@ -215,6 +215,29 @@ object Tracer {
 
   def gcMs: Long = ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
 
+  /** Waits, outside any timed window, until the JIT compilers have been
+    * idle for `quietMs` (their total compilation time stops growing), at
+    * most `capMs`; returns the wait in seconds. Compilations queued by
+    * earlier work (Derby's boot) then do not compete with the timed run
+    * for the cores.
+    */
+  def quiesceJit(quietMs: Long = 300, capMs: Long = 15000): Double = {
+    val jit = ManagementFactory.getCompilationMXBean
+    val t0 = System.nanoTime()
+    var last = jit.getTotalCompilationTime
+    var still = 0L
+    while (still < quietMs && (System.nanoTime() - t0) / 1000000 < capMs) {
+      Thread.sleep(50)
+      val now = jit.getTotalCompilationTime
+      if (now == last) still += 50 else { still = 0; last = now }
+    }
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  /** CPU time of the whole JVM: every thread, JIT and GC included. */
+  def processCpuNs: Long =
+    ManagementFactory.getOperatingSystemMXBean.asInstanceOf[com.sun.management.OperatingSystemMXBean].getProcessCpuTime
+
   /** Ids of the executor task threads, found without a stack walk. */
   def taskThreadIds: Array[Long] = {
     var root = Thread.currentThread().getThreadGroup

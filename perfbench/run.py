@@ -134,17 +134,22 @@ def main():
     classes = build()
     work = os.path.join(BUILD, "work", a.workload)
     shutil.rmtree(work, ignore_errors=True)
-    args = {"mode": w["mode"], "seconds": a.seconds, "trace": a.trace, "seed": a.seed}
+    args = {"mode": w["mode"], "seconds": a.seconds, "min_runs": w["min_runs"], "trace": a.trace, "seed": a.seed}
     expected = None
     problems = []
     if w["mode"] == "etl":
         data = os.path.join(work, "bundle")
         expected = portal.generate(data, w["scale"], a.seed)
+        if a.trace:
+            # the tracing overhead needs an untraced cold run to compare
+            # with: one more process, untraced, over the same bundle
+            plain, _ = run_jvm(classes, dict(args, data=data, trace=0), os.path.join(work, "plain"))
         raw, spawn_ms = run_jvm(classes, dict(args, data=data), work)
-        checked = [raw["warmup"]] + raw["runs"]
-        for r in checked:
+        if a.trace:
+            raw["runs"] += plain["runs"]
+        for r in raw["runs"]:
             problems += metrics.etl_mismatches(expected, r["obs"])
-        attempted, failed = len(checked), 0
+        attempted, failed = len(raw["runs"]), 0
     else:
         sf = os.environ.get("PERFBENCH_SF_DIR", w["sf"])
         if not os.path.isdir(sf):

@@ -66,7 +66,7 @@ def etl_raw():
              "plan": [{"t_ms": 50, "span": "e1_load_portal_main", "key": "plan_ns", "value": 10 ** 8}],
              "jobs": {"e1_load_portal_main": [[100, 300]]}, "layers_ns": {"io.shp": 10 ** 8},
              "sampler_gap_ns": 0}
-    return {"ready_ms": 3000.0, "memory": MEMORY, "warmup": {"obs": obs},
+    return {"ready_ms": 3000.0, "memory": MEMORY,
             "runs": [{"wall_s": 1.51, "traced": True, "calls": [{"name": "e1", "s": 1.0}], "obs": obs,
                       "trace": trace},
                      {"wall_s": 1.4, "traced": False, "calls": [{"name": "session", "s": 0.1}, {"name": "e1", "s": 0.9}, {"name": "k5", "s": 0.5}],
