@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.collection.immutable.ListMap
 
 /** Cross-engine check of [[graft.operators.Dedup.substringSpans]]'s
   * `maxMatchRows` gate estimate (the r18 q129-gate standard: a
@@ -17,24 +17,18 @@ import org.apache.spark.sql.SparkSession
   */
 object ABGateEstimate {
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     val docs = spark.read.parquet(args(0) + "/documents.parquet")
     try {
       graft.operators.Dedup.substringSpans(docs, "text", "doc_id",
         maxMatchRows = 1L).count()
-      println("""{"gate_estimate":"NOT_FIRED"}""")
+      println(Json(Map("gate_estimate" -> "NOT_FIRED")))
     } catch {
       case e: IllegalArgumentException =>
         val m = "would emit (\\d+) match rows".r.findFirstMatchIn(e.getMessage)
-        println(s"""{"gate_estimate":${m.map(_.group(1)).getOrElse("-1")},"sf":"${args(0)}"}""")
+        println(Json(ListMap(
+          "gate_estimate" -> new java.math.BigInteger(m.map(_.group(1)).getOrElse("-1")),
+          "sf" -> args(0))))
     }
     spark.stop()
   }

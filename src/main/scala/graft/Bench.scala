@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.functions._
 
 /** Per-round benchmark main (driver contract): runs the catalog on
@@ -12,49 +13,9 @@ import org.apache.spark.sql.functions._
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    // pin the JVM default locale: Spark's non-ASCII lowercase path
-    // reads it while the kernels use Locale.ROOT explicitly — a
-    // non-ROOT default (tr-TR 'I'→'ı') would desync the two (r16
-    // advisor); ROOT is what every committed hash was captured under
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // lenient: warn (not refuse) below the measured 0.375 GB/slot spill
-    // floor so a deliberate starved-heap experiment still runs, but a
-    // mis-sized SPARK_DRIVER_MEM/SPARK_GRAFT_CPUS combination
-    // identifies itself up front instead of dying in the spill writer
-    Preflight.checkSpillFloor(spark, lenient = true)
-    // ... and the r19 reader-batch ceiling: a corpus carrying multi-MB
-    // documents OOMs the vectorized parquet reader at the default
-    // 4096-row batch BEFORE any operator runs — one cheap
-    // max(octet_length) pass identifies it and prints the sized-down
-    // columnarReaderBatchSize recipe up front
-    // NonFatal, not Throwable: the probe's own OutOfMemoryError must
-    // propagate — continuing the bench on a possibly corrupted heap
-    // after swallowing a VM error is worse than no preflight (r20
-    // advisor). NonFatal still absorbs a missing documents.parquet.
-    try Preflight.checkReaderBatch(spark,
-      spark.read.parquet(s"$sfDir/documents.parquet"), Seq("text"),
-      lenient = true)
-    catch { case scala.util.control.NonFatal(_) => () }
-    // every unpartitioned window left in the catalog is constant-
-    // bounded by construction and pinned to an explicit allowlist by
-    // PlanShapeSpec's catalog-wide governance test — silence the
-    // per-instance WindowExec warning so the bench tail stays readable
-    // and a REAL regression surfaces as a test failure, not log spam
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = GraftSession()
+    Preflight.catalogRun(spark, sfDir)
     // warm the JVM + parquet footers once so per-query numbers measure
     // the plan, not first-touch JIT/IO
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
@@ -187,21 +148,19 @@ object Bench {
     }
     canaries += canaryOnce()
     val canarySec = canaries.sorted.apply(canaries.size / 2)
-    val qs = results.filter(_._3).map { case (k, v, _, _, _) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+    def r3(x: Double) = math.rint(x * 1000) / 1000
+    val ok = results.filter(_._3)
     // per-query spill deltas (bytes), only for queries that spilled —
     // on an 8g heap these maps are empty; the starved-heap leg reads them
     def spillMap(pick: ((String, Double, Boolean, Long, Long)) => Long) =
-      results.filter(r => r._3 && pick(r) > 0L)
-        .map(r => "\"" + r._1 + "\":" + pick(r)).mkString("{", ",", "}")
-    val spillMemJson = spillMap(_._4)
-    val spillDiskJson = spillMap(_._5)
-    val spillTotals = s""""spill_mem_total":${results.filter(_._3).map(_._4).sum},"spill_disk_total":${results.filter(_._3).map(_._5).sum}"""
+      ListMap.from(ok.filter(pick(_) > 0L).map(r => r._1 -> pick(r)))
+    val spillTotals = ListMap(
+      "spill_mem_total" -> ok.map(_._4).sum, "spill_disk_total" -> ok.map(_._5).sum)
     // failed queries are listed explicitly so a broken query can't
     // masquerade as a fast pass; their time-to-failure is excluded
     // from the headline total
-    val failed = results.filterNot(_._3).map("\"" + _._1 + "\"").mkString("[", ",", "]")
-    val total = results.filter(_._3).map(_._2).sum
+    val failed = results.filterNot(_._3).map(_._1)
+    val total = ok.map(_._2).sum
     // Full per-query detail goes to a file: with a 120+-query catalog the
     // all-queries map is ~4 KB, and the driver keeps only the last 2 KB of
     // stdout — a line that long loses its opening brace and parses as
@@ -215,17 +174,25 @@ object Bench {
     // stale capture left over from an earlier round as round N's.
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_full.json")
     val capturedUnix = System.currentTimeMillis() / 1000
-    val canaryList = canaries.map(c => math.rint(c * 1000) / 1000).mkString("[", ",", "]")
-    val detail =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"canary_sec":${math.rint(canarySec * 1000) / 1000},"canary_runs":$canaryList,"runs_per_query":$runsPerQuery,"spill_mem":$spillMemJson,"spill_disk":$spillDiskJson,$spillTotals,"captured_unix":$capturedUnix,"sf":"$sfDir"}"""
+    val canaryList = canaries.map(r3).toSeq
+    val detail = Json(ListMap(
+      "metric" -> "total", "value" -> total, "unit" -> "sec",
+      "queries" -> ListMap.from(ok.map(r => r._1 -> r._2)), "failed" -> failed,
+      "canary_sec" -> r3(canarySec), "canary_runs" -> canaryList,
+      "runs_per_query" -> runsPerQuery,
+      "spill_mem" -> spillMap(_._4), "spill_disk" -> spillMap(_._5)) ++ spillTotals ++
+      ListMap("captured_unix" -> capturedUnix, "sf" -> sfDir))
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get(detailPath),
         (detail + "\n").getBytes("UTF-8"))
     } catch { case _: Throwable => () }
-    val slowest = results.filter(_._3).sortBy(-_._2).take(20)
-      .map { case (k, v, _, _, _) => "\"" + k + "\":" + math.rint(v * 1000) / 1000 }
-      .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${math.rint(total * 1000) / 1000},"unit":"sec","n_queries":${results.size},"n_ok":${results.count(_._3)},"queries":$slowest,"failed":$failed,"canary_sec":${math.rint(canarySec * 1000) / 1000},"canary_runs":$canaryList,"runs_per_query":$runsPerQuery,$spillTotals,"captured_unix":$capturedUnix,"detail":"$detailPath","sf":"$sfDir"}""")
+    val slowest = ListMap.from(ok.sortBy(-_._2).take(20).map(r => r._1 -> r3(r._2)))
+    println(Json(ListMap(
+      "metric" -> "total", "value" -> r3(total), "unit" -> "sec",
+      "n_queries" -> results.size, "n_ok" -> ok.size, "queries" -> slowest,
+      "failed" -> failed, "canary_sec" -> r3(canarySec), "canary_runs" -> canaryList,
+      "runs_per_query" -> runsPerQuery) ++ spillTotals ++
+      ListMap("captured_unix" -> capturedUnix, "detail" -> detailPath, "sf" -> sfDir)))
     spark.stop()
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.Multimodal
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -34,11 +33,6 @@ object CanonicalSliceDump {
         graft.plans.Kernels.mix64(r + 0xB7)))).take(n)
 
   def main(args: Array[String]): Unit = {
-    // pin the JVM default locale: Spark's non-ASCII lowercase path
-    // reads it while the kernels use Locale.ROOT explicitly — a
-    // non-ROOT default (tr-TR 'I'→'ı') would desync the two (r16
-    // advisor); ROOT is what every committed hash was captured under
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val (sfDir, outDir, nRes) = (args(0), args(1), args(2))
     // "image" (q189, default) or "audio" (q197) — the canonical
     // machinery is modality-generic, and so is this harness. Round 13
@@ -48,16 +42,7 @@ object CanonicalSliceDump {
     // bounds the DuckDB replay cost of re-deriving every sample/pixel
     // at 10×.
     val mode = if (args.length > 3) args(3) else "image"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     val rs = residues(nRes.toInt)
     new java.io.File(outDir).mkdirs()
     val docs = Tables.documents(spark, sfDir)
@@ -126,7 +111,7 @@ object CanonicalSliceDump {
     }
     out.coalesce(1).write.mode("overwrite").parquet(s"$outDir/slice")
     Files.write(Paths.get(s"$outDir/residues.json"),
-      rs.mkString("[", ",", "]").getBytes("UTF-8"))
+      Json(rs).getBytes("UTF-8"))
     spark.stop()
   }
 }

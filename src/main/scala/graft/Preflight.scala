@@ -19,11 +19,38 @@ import org.apache.spark.sql.functions._
   * [[heapPerSlotWarning]] is the pure check (unit-testable);
   * [[checkSpillFloor]] applies it to a live session — refusing below
   * the measured floor unless `lenient`, where it logs instead. Wired
-  * into the Bench/Verify mains as a warning so a mis-sized
-  * SPARK_DRIVER_MEM/SPARK_GRAFT_CPUS combination identifies itself
-  * up front.
+  * into the Bench/Verify mains (through [[catalogRun]]) as a warning
+  * so a mis-sized SPARK_DRIVER_MEM/SPARK_GRAFT_CPUS combination
+  * identifies itself up front.
   */
 object Preflight {
+
+  /** The preamble of a catalog sweep (Bench, Verify) over `sfDir`.
+    *
+    * Both checks are lenient: they warn (not refuse) so a deliberate
+    * starved-heap or giant-document experiment still runs, but a
+    * mis-sized configuration identifies itself before the first query
+    * instead of dying in the spill writer or the parquet reader.
+    */
+  def catalogRun(spark: SparkSession, sfDir: String): Unit = {
+    checkSpillFloor(spark, lenient = true)
+    // NonFatal, not Throwable: the probe's own OutOfMemoryError must
+    // propagate — continuing the sweep on a possibly corrupted heap
+    // after swallowing a VM error is worse than no preflight (r20
+    // advisor). NonFatal still absorbs a missing documents.parquet.
+    try checkReaderBatch(spark,
+      spark.read.parquet(s"$sfDir/documents.parquet"), Seq("text"),
+      lenient = true)
+    catch { case scala.util.control.NonFatal(_) => () }
+    // every unpartitioned window left in the catalog is constant-
+    // bounded by construction and pinned to an explicit allowlist by
+    // PlanShapeSpec's catalog-wide governance test — silence the
+    // per-instance WindowExec warning so the log stays readable and a
+    // REAL regression surfaces as a test failure, not log spam
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec",
+      org.apache.logging.log4j.Level.ERROR)
+  }
 
   /** The measured spill-writer floor, bytes of heap per executor slot
     * (0.375 GB/slot completed with 86 GB spilled; 0.09 GB/slot died in

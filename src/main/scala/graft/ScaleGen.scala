@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.immutable.ListMap
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scaling-curve dataset generator: writes a `factor`× replica of a
@@ -216,11 +218,6 @@ object ScaleGen {
   }
 
   def main(args: Array[String]): Unit = {
-    // pin the JVM default locale: Spark's non-ASCII lowercase path
-    // reads it while the kernels use Locale.ROOT explicitly — a
-    // non-ROOT default (tr-TR 'I'→'ı') would desync the two (r16
-    // advisor); ROOT is what every committed hash was captured under
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val (src, dst, factorS) = (args(0), args(1), args(2))
     val factor = factorS.toInt
     val depthFactor = if (args.length > 3) args(3).toInt else 1
@@ -229,15 +226,7 @@ object ScaleGen {
     require(factor >= 1 && depthFactor >= 1 && brandSplit >= 1)
     requireLengthFactor(lengthFactor)
     val plantNonAscii = !sys.env.get("SPARK_GRAFT_ASCII").contains("1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     val offset = 1000000000L
     def replicate(t: DataFrame)(per: (DataFrame, Int) => DataFrame): DataFrame =
@@ -363,7 +352,8 @@ object ScaleGen {
           java.nio.file.Paths.get(s"$dst/$t.parquet"),
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
-    println(s"""{"scaled":"$dst","factor":$factor,"depth_factor":$depthFactor,"brand_split":$brandSplit,"length_factor":$lengthFactor,"non_ascii":$plantNonAscii}""")
+    println(Json(ListMap("scaled" -> dst, "factor" -> factor, "depth_factor" -> depthFactor,
+      "brand_split" -> brandSplit, "length_factor" -> lengthFactor, "non_ascii" -> plantNonAscii)))
     spark.stop()
   }
 }

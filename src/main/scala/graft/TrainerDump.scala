@@ -1,7 +1,8 @@
 package graft
 
+import scala.collection.immutable.ListMap
+
 import graft.operators.Trainer
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -11,7 +12,7 @@ import java.nio.file.{Files, Paths}
   * label) on `<sfDir>/documents`, then writes
   *
   *  - `weights.json` — all `iters+1` per-iteration weight vectors
-  *    (w₀ = zeros first), full `%.17g` precision;
+  *    (w₀ = zeros first), each double in its exact round-trip form;
   *  - `scores` (parquet) — the engine's final (doc_id, y, score);
   *  - `sql.json` — the [[OracleSql.gdTrainerStepSql]] artifacts: the
   *    once-materialized term-stream prefix, the one-iteration step
@@ -28,22 +29,8 @@ import java.nio.file.{Files, Paths}
   */
 object TrainerDump {
   def main(args: Array[String]): Unit = {
-    // pin the JVM default locale: Spark's non-ASCII lowercase path
-    // reads it while the kernels use Locale.ROOT explicitly — a
-    // non-ROOT default (tr-TR 'I'→'ı') would desync the two (r16
-    // advisor); ROOT is what every committed hash was captured under
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     val m = 1024
     val iters = 6
@@ -58,14 +45,11 @@ object TrainerDump {
         round(graft.plans.Exprs.linearTextScore(col("text"), hist.last), 6)
           .as("score"))
       .write.mode("overwrite").parquet(s"$outDir/scores")
-    val wjson = hist.map(_.map(x => "%.17g".format(x)).mkString("[", ",", "]"))
-      .mkString("[", ",", "]")
-    Files.write(Paths.get(s"$outDir/weights.json"), wjson.getBytes("UTF-8"))
+    Files.write(Paths.get(s"$outDir/weights.json"), Json(hist).getBytes("UTF-8"))
     val (prefix, stepPartial, update, score) = OracleSql.gdTrainerStepSql(m, lr)
-    def js(s: String) =
-      "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"").replace("\n", "\\n") + "\""
-    val sqlJson =
-      s"""{"prefix":${prefix.map(js).mkString("[", ",", "]")},"step_partial":${js(stepPartial)},"update":${js(update)},"score":${js(score)},"m":$m,"iters":$iters,"lr":$lr,"train_sec":$trainSec}"""
+    val sqlJson = Json(ListMap("prefix" -> prefix, "step_partial" -> stepPartial,
+      "update" -> update, "score" -> score, "m" -> m, "iters" -> iters, "lr" -> lr,
+      "train_sec" -> trainSec))
     Files.write(Paths.get(s"$outDir/sql.json"), sqlJson.getBytes("UTF-8"))
     println(s"[trainerdump] wrote $outDir (train ${"%.1f".format(trainSec)} s)")
     spark.stop()

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -20,64 +19,11 @@ import java.nio.file.{Files, Paths}
   */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // pin the JVM default locale: Spark's non-ASCII lowercase path
-    // reads it while the kernels use Locale.ROOT explicitly — a
-    // non-ROOT default (tr-TR 'I'→'ı') would desync the two (r16
-    // advisor); ROOT is what every committed hash was captured under
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // classic (non-ANSI) semantics: junk casts → null, silent 64-bit
-      // wraparound — matches the R reference and the DuckDB-oracle
-      // queries, which guard their own overflow
-      .config("spark.sql.ansi.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS) which Spark's vectorized
-      // reader rejects; read as Long and normalize in Tables.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // lenient: warn (not refuse) below the measured 0.375 GB/slot spill
-    // floor so a deliberate starved-heap experiment still runs, but a
-    // mis-sized SPARK_DRIVER_MEM/SPARK_GRAFT_CPUS combination
-    // identifies itself up front instead of dying in the spill writer
-    Preflight.checkSpillFloor(spark, lenient = true)
-    // ... and the r19 reader-batch ceiling (see Bench): warn with the
-    // columnarReaderBatchSize recipe when the corpus carries documents
-    // big enough to OOM the vectorized reader at the configured batch
-    // NonFatal, not Throwable: a VM error from the probe itself must
-    // propagate, not leave the sweep running on a corrupted heap (r20
-    // advisor; see Bench for the full note)
-    try Preflight.checkReaderBatch(spark,
-      spark.read.parquet(s"$sfDir/documents.parquet"), Seq("text"),
-      lenient = true)
-    catch { case scala.util.control.NonFatal(_) => () }
-    // remaining unpartitioned windows are constant-bounded and
-    // allowlisted (PlanShapeSpec catalog-wide governance test); keep
-    // the dump log readable — see Bench for the full rationale
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = GraftSession()
+    Preflight.catalogRun(spark, sfDir)
     new java.io.File(outDir).mkdirs()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), Json(SparkEntry.oracleSql))
     // optional comma-separated name filter for single-query iteration
     // (builder-side convenience; the driver always runs the full set)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)

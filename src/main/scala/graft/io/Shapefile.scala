@@ -1,7 +1,7 @@
 package graft.io
 
-import java.io.{DataInputStream, EOFException, FileInputStream, File}
-import java.nio.{ByteBuffer, ByteOrder}
+import java.io.{File, IOException}
+import java.nio.{BufferUnderflowException, ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -22,6 +22,10 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * is absent but the .dbf exists (the IMMA bundle in the reference data
   * ships without its .shp), attribute rows are returned with null
   * geometry so feature counts remain testable.
+  *
+  * Both files are checked against their own headers: a record or a
+  * table that does not fit in the file raises [[MalformedShapefileException]]
+  * instead of returning fewer or emptier features.
   */
 object Shapefile {
 
@@ -60,13 +64,26 @@ object Shapefile {
 
   private def readShp(path: String): Seq[(String, String)] = {
     val bytes = Files.readAllBytes(Paths.get(path))
+    def fail(off: Long, detail: String) = throw new MalformedShapefileException(path, off, detail)
+    val be = ByteBuffer.wrap(bytes).order(ByteOrder.BIG_ENDIAN)
+    if (bytes.length < 100) fail(0, s"${bytes.length}-byte file is shorter than the 100-byte header")
+    // the header's file length counts 16-bit words
+    val declared = (be.getInt(24) & 0xFFFFFFFFL) * 2
+    if (declared > bytes.length)
+      fail(bytes.length, s"file is truncated: the header declares $declared bytes, the file has ${bytes.length}")
     val out = Seq.newBuilder[(String, String)]
     var off = 100 // past the 100-byte header
-    while (off + 8 <= bytes.length) {
-      val contentLen = ByteBuffer.wrap(bytes, off + 4, 4).order(ByteOrder.BIG_ENDIAN).getInt * 2
-      val rec = ByteBuffer.wrap(bytes, off + 8, contentLen).order(ByteOrder.LITTLE_ENDIAN)
-      out += parseRecord(rec)
-      off += 8 + contentLen
+    while (off < bytes.length) {
+      if (off + 8 > bytes.length) fail(off, "record header is truncated")
+      // content length counts 16-bit words and must hold the shape type
+      val contentLen = (be.getInt(off + 4) & 0xFFFFFFFFL) * 2
+      if (contentLen < 4 || off + 8 + contentLen > bytes.length)
+        fail(off, s"record content length $contentLen does not fit in the ${bytes.length}-byte file")
+      val rec = ByteBuffer.wrap(bytes, off + 8, contentLen.toInt).order(ByteOrder.LITTLE_ENDIAN)
+      out += (try parseRecord(rec) catch {
+        case _: BufferUnderflowException => fail(off, "geometry runs past the end of its record")
+      })
+      off += 8 + contentLen.toInt
     }
     out.result()
   }
@@ -140,10 +157,16 @@ object Shapefile {
 
   private def readDbf(path: String): (Seq[String], Seq[Map[String, String]]) = {
     val bytes = Files.readAllBytes(Paths.get(path))
+    def fail(off: Long, detail: String) = throw new MalformedShapefileException(path, off, detail)
+    if (bytes.length < 32) fail(0, s"${bytes.length}-byte file is shorter than the 32-byte header")
     val b = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    val nRec = b.getInt(4)
+    val nRec = b.getInt(4) & 0xFFFFFFFFL
     val headerSize = b.getShort(8) & 0xFFFF
     val recSize = b.getShort(10) & 0xFFFF
+    if (headerSize < 33) fail(8, s"header size $headerSize is below the 33-byte minimum")
+    if (headerSize + nRec * recSize > bytes.length)
+      fail(bytes.length, s"file is truncated: the header declares $nRec records of $recSize bytes " +
+        s"after a $headerSize-byte header, the file has ${bytes.length} bytes")
     val nFields = (headerSize - 33) / 32
     val fields = (0 until nFields).map { i =>
       val off = 32 + i * 32
@@ -152,7 +175,11 @@ object Shapefile {
       val len = bytes(off + 16) & 0xFF
       (name, len)
     }
-    val rows = (0 until nRec).map { r =>
+    // a record is the deletion flag plus every field
+    val fieldBytes = 1 + fields.map(_._2).sum
+    if (nRec > 0 && fieldBytes > recSize)
+      fail(32, s"fields span $fieldBytes bytes, more than the $recSize-byte record")
+    val rows = (0 until nRec.toInt).map { r =>
       val recOff = headerSize + r * recSize
       var fieldOff = recOff + 1 // skip deletion flag
       fields.map { case (name, len) =>
@@ -164,3 +191,8 @@ object Shapefile {
     (fields.map(_._1), rows)
   }
 }
+
+/** A shapefile component (.shp or .dbf) whose bytes do not fit its own
+  * header: `offset` is the byte at which the file stops making sense. */
+final class MalformedShapefileException(val path: String, val offset: Long, detail: String)
+  extends IOException(s"$path: $detail (byte offset $offset)")

@@ -1,7 +1,5 @@
 package graft.jobs
 
-import org.apache.spark.sql.SparkSession
-
 /** E1 entry point: runs the whole LoadPortal pipeline against a data
   * directory and writes every artifact the reference produces —
   * per-identifier geometry files, the Django fixtures, and the
@@ -14,15 +12,7 @@ object LoadPortalMain {
   def main(args: Array[String]): Unit = {
     val dataDir = args.headOption.getOrElse("/root/reference/data")
     val outDir = args.lift(1).getOrElse("/tmp/graft_e1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
 
     val job = new LoadPortal(spark, dataDir)
     val combined = job.withIdentifiers

@@ -10,8 +10,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *
   * {{{
   * spark-submit --conf spark.sql.extensions=graft.plans.GraftExtensions ...
-  * // or
-  * SparkSession.builder().withExtensions(new GraftExtensions) ...
+  * // or, on a session builder
+  * builder.withExtensions(new GraftExtensions) ...
   * }}}
   *
   * Covers the scalar kernels (simhash64, minhash_sig, shingle_hashes,

@@ -12,21 +12,5 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    // pin the JVM default locale: Spark's String.toLowerCase non-ASCII
-    // path reads it, the kernels use Locale.ROOT explicitly — under a
-    // non-ROOT default (tr-TR: 'I'→'ı') the two lowerings desync
-    // (r16 advisor)
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = GraftSession()
 }

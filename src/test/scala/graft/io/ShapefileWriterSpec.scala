@@ -1,6 +1,7 @@
 package graft.io
 
-import java.nio.file.Files
+import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -84,6 +85,67 @@ class ShapefileWriterSpec extends AnyFunSuite {
         feats.map(ft => ShapefileWriter.wktToParts(ft.wkt)), f.getName)
       assert(feats2.map(_.attrs) === feats.map(_.attrs), f.getName)
     }
+  }
+
+  /** A three-point layer; its .shp records sit at 100, 128 and 156. */
+  private def pointLayer(): String = {
+    val dir = Files.createTempDirectory("shpbad").toString
+    ShapefileWriter.write(dir, "layer", Seq("id", "name"),
+      Seq(("POINT (1 2)", Seq("1", "alpha")), ("POINT (3 4)", Seq("2", "beta")),
+        ("POINT (5 6)", Seq("3", "gamma"))))
+    s"$dir/layer"
+  }
+
+  /** Reading `base`.shp fails on `file` at byte `offset`. */
+  private def rejects(base: String, file: String, offset: Long): Unit = {
+    val e = intercept[MalformedShapefileException](Shapefile.read(s"$base.shp"))
+    assert(e.path === file && e.getMessage.contains(file), e.getMessage)
+    assert(e.offset === offset, e.getMessage)
+  }
+
+  test("a truncated or mis-sized .shp record fails naming the file and offset") {
+    val base = pointLayer()
+    val shp = s"$base.shp"
+    val good = Files.readAllBytes(Paths.get(shp))
+    assert(good.length === 184)
+    def rejectsBytes(bytes: Array[Byte], offset: Long): Unit = {
+      Files.write(Paths.get(shp), bytes)
+      rejects(base, shp, offset)
+    }
+    def secondRecordLength(words: Int): Array[Byte] = {
+      val b = good.clone()
+      ByteBuffer.wrap(b).order(ByteOrder.BIG_ENDIAN).putInt(128 + 4, words)
+      b
+    }
+    // cut mid-record, then at a record boundary: the file ends before
+    // the length its header declares
+    rejectsBytes(good.take(175), 175)
+    rejectsBytes(good.take(156), 156)
+    // the second record's content length: oversized, zero, and too
+    // short for the point it holds
+    rejectsBytes(secondRecordLength(0x7FFFFFFF), 128)
+    rejectsBytes(secondRecordLength(0), 128)
+    rejectsBytes(secondRecordLength(2), 128)
+    Files.write(Paths.get(shp), good)
+    assert(Shapefile.read(shp)._2.map(_.wkt) === Seq("POINT (1 2)", "POINT (3 4)", "POINT (5 6)"))
+  }
+
+  test("a truncated .dbf fails instead of reading null fields") {
+    val base = pointLayer()
+    val dbf = s"$base.dbf"
+    val good = Files.readAllBytes(Paths.get(dbf))
+    Files.write(Paths.get(dbf), good.dropRight(4))
+    rejects(base, dbf, good.length - 4)
+    // without its .shp (the IMMA shape) the same check applies
+    Files.delete(Paths.get(s"$base.shp"))
+    rejects(base, dbf, good.length - 4)
+    // a header size that leaves no room for the field terminator
+    val small = good.clone()
+    ByteBuffer.wrap(small).order(ByteOrder.LITTLE_ENDIAN).putShort(8, 32.toShort)
+    Files.write(Paths.get(dbf), small)
+    rejects(base, dbf, 8)
+    Files.write(Paths.get(dbf), good)
+    assert(Shapefile.read(s"$base.shp")._2.map(_.attrs("name")) === Seq("alpha", "beta", "gamma"))
   }
 
   test("mixed geometry types in one layer are rejected") {
