@@ -2,6 +2,7 @@ package graft.io
 
 import java.sql.{Connection, DriverManager, PreparedStatement}
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.DataFrame
 
 /** JDBC boundaries (SURVEY §2.1 S11, §2.2 K5/K6), designed so every
@@ -25,14 +26,29 @@ object JdbcBoundary {
     * `PreparedStatement` per distinct SQL text, explicit batching —
     * the Spark replacement for the reference's per-row driver loop
     * (index.Rmd:765-770).
+    *
+    * The connection is one transaction: `close` flushes and commits.
+    * Inside a Spark task, a task that ends without `close` (it failed or
+    * was killed) rolls the transaction back and closes the connection
+    * from a task completion listener registered when the connection
+    * opens, so no partition is ever half-applied.
     */
   class JdbcExecutor(url: String, props: java.util.Properties)
       extends SqlExecutor with AutoCloseable {
-    // lazy like conn: a serialized-then-deserialized instance rebuilds
-    // its cache on first use instead of NPE-ing on a null @transient val
-    @transient private lazy val conn: Connection = DriverManager.getConnection(url, props)
+    // opened on first use: a serialized-then-deserialized instance starts
+    // without a connection
+    @transient private var conn: Connection = _
     @transient private lazy val stmts = scala.collection.mutable.Map.empty[String, PreparedStatement]
     @transient private var pendingSql: String = _
+
+    private def connection(): Connection = {
+      if (conn == null) {
+        conn = DriverManager.getConnection(url, props)
+        conn.setAutoCommit(false)
+        Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => abort()))
+      }
+      conn
+    }
 
     /** Consecutive statements with the same SQL text accumulate into one
       * JDBC batch; a different text (or `close`) flushes first, so the
@@ -41,16 +57,29 @@ object JdbcBoundary {
       */
     def execute(stmt: Stmt): Unit = {
       if (pendingSql != null && pendingSql != stmt.sql) flush()
-      val ps = stmts.getOrElseUpdate(stmt.sql, conn.prepareStatement(stmt.sql))
+      val ps = stmts.getOrElseUpdate(stmt.sql, connection().prepareStatement(stmt.sql))
       stmt.params.zipWithIndex.foreach { case (p, i) => ps.setObject(i + 1, p) }
       ps.addBatch()
       pendingSql = stmt.sql
     }
     private def flush(): Unit =
       if (pendingSql != null) { stmts(pendingSql).executeBatch(); pendingSql = null }
-    def close(): Unit = {
-      try flush()
-      finally { stmts.values.foreach(_.close()); conn.close() }
+
+    /** Flushes and commits; a failed flush or commit rolls back. */
+    def close(): Unit = if (conn != null) {
+      try { flush(); conn.commit() }
+      catch { case e: Throwable => abort(); throw e }
+      release()
+    }
+
+    /** Rolls back whatever is uncommitted and closes; a no-op once closed. */
+    private def abort(): Unit = if (conn != null) {
+      try conn.rollback() finally release()
+    }
+
+    private def release(): Unit = {
+      try stmts.values.foreach(_.close())
+      finally { conn.close(); conn = null; stmts.clear(); pendingSql = null }
     }
   }
 
@@ -77,13 +106,18 @@ object JdbcBoundary {
     * per row). At cluster scale this is the only executor→database
     * boundary; rows without a layer pk are skipped like the reference's
     * `if (!is.na(df_combined$pk[i]))` guard.
+    *
+    * The executor is closed only after the partition's last statement,
+    * so with [[JdbcExecutor]] each partition commits as one transaction;
+    * a partition that throws is never closed and its transaction is
+    * rolled back (a retried task starts from the committed state).
     */
   def upsertMetadata(df: DataFrame, executorFor: () => SqlExecutor): Unit = {
     val rows = df.filter(df.col("pk").isNotNull)
     rows.foreachPartition { it: Iterator[org.apache.spark.sql.Row] =>
       val ex = executorFor()
-      try it.foreach(r => MetadataUpsert.statementsFor(r).foreach(ex.execute))
-      finally ex match { case c: AutoCloseable => c.close(); case _ => () }
+      it.foreach(r => MetadataUpsert.statementsFor(r).foreach(ex.execute))
+      ex match { case c: AutoCloseable => c.close(); case _ => () }
     }
   }
 

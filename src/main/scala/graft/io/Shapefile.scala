@@ -4,9 +4,6 @@ import java.io.{File, IOException}
 import java.nio.{BufferUnderflowException, ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
-
 /** Minimal ESRI Shapefile (.shp + .dbf) reader (reference `read_sf`,
   * notebooks/index.Rmd:473-474,499). Offline constraint: no GDAL/Sedona
   * jars, so this parses the two binary formats directly and emits WKT
@@ -17,8 +14,7 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * clockwise (negative shoelace area), holes counter-clockwise; holes
   * attach to the preceding outer ring. Multiple outers → MULTIPOLYGON.
   *
-  * Driver-side source (spatial layers are config-scale); the DataFrame
-  * it produces joins distributed plans as a broadcast side. If the .shp
+  * Driver-side source (spatial layers are config-scale). If the .shp
   * is absent but the .dbf exists (the IMMA bundle in the reference data
   * ships without its .shp), attribute rows are returned with null
   * geometry so feature counts remain testable.
@@ -44,17 +40,6 @@ object Shapefile {
       Feature(if (i < attrs.length) attrs(i) else Map.empty, wkt, gt)
     }
     (fieldNames, feats)
-  }
-
-  /** One row per feature: DBF columns (as strings) + `wkt` + `geom_type`. */
-  def toDataFrame(spark: SparkSession, shpPath: String): DataFrame = {
-    val (fieldNames, feats) = read(shpPath)
-    val schema = StructType(
-      fieldNames.map(f => StructField(f, StringType, nullable = true)) ++
-        Seq(StructField("wkt", StringType, nullable = true),
-          StructField("geom_type", StringType, nullable = true)))
-    val rows = feats.map(f => Row.fromSeq(fieldNames.map(f.attrs.get(_).orNull) ++ Seq(f.wkt, f.geomType)))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
   }
 
   // ------------------------------------------------------------- .shp

@@ -19,9 +19,7 @@ import java.nio.file.{Files, Paths}
   * holes counter-clockwise, rings closed), so `write → Shapefile.read`
   * round-trips WKT byte-for-byte for spec-oriented input.
   *
-  * Driver-side like the reader (per-dataset layers are config-scale);
-  * the distributed analogue for huge layers remains
-  * [[GeoJsonSink.writePartitioned]].
+  * Driver-side like the reader (per-dataset layers are config-scale).
   */
 object ShapefileWriter {
 

@@ -1,8 +1,9 @@
 package graft.io
 
-import java.util.zip.ZipFile
-import javax.xml.parsers.SAXParserFactory
-import org.xml.sax.Attributes
+import java.io.{IOException, InputStream}
+import java.util.zip.{ZipEntry, ZipException, ZipFile}
+import javax.xml.parsers.{SAXParser, SAXParserFactory}
+import org.xml.sax.{Attributes, SAXException}
 import org.xml.sax.helpers.DefaultHandler
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -22,6 +23,9 @@ import scala.collection.mutable
   * This is a DRIVER-SIDE source: spreadsheets are small config-scale
   * inputs (hundreds of rows). The resulting DataFrame participates in
   * distributed plans as a broadcast-sized side.
+  *
+  * A workbook that is not well-formed SpreadsheetML fails as one
+  * [[MalformedXlsxException]] naming the file and the zip entry.
   */
 object Xlsx {
 
@@ -31,14 +35,18 @@ object Xlsx {
     * match the reference's read.xlsx → character coercion.
     */
   def readSheet(path: String, sheet: Int = 1): (Seq[String], Seq[Seq[String]]) = {
-    val zip = new ZipFile(path)
+    val sheetEntry = s"xl/worksheets/sheet$sheet.xml"
+    val zip = try new ZipFile(path) catch {
+      case e: ZipException =>
+        throw new MalformedXlsxException(path, sheetEntry, s"not a readable zip archive (${e.getMessage})", e)
+    }
     try {
       val shared = Option(zip.getEntry("xl/sharedStrings.xml"))
-        .map(e => parseSharedStrings(zip.getInputStream(e)))
+        .map(e => parseEntry(path, zip, e)(parseSharedStrings))
         .getOrElse(Vector.empty)
-      val entry = Option(zip.getEntry(s"xl/worksheets/sheet$sheet.xml"))
+      val entry = Option(zip.getEntry(sheetEntry))
         .getOrElse(throw new IllegalArgumentException(s"no sheet$sheet in $path"))
-      val rows = parseSheet(zip.getInputStream(entry), shared)
+      val rows = parseEntry(path, zip, entry)(parseSheet(_, shared))
       if (rows.isEmpty) (Nil, Nil)
       else {
         val width = rows.map(_.length).max
@@ -64,6 +72,31 @@ object Xlsx {
 
   // ------------------------------------------------------------------
 
+  /** The last column SpreadsheetML allows (XFD). */
+  private val MaxColumns = 16384
+
+  /** Runs `parse` over one zip entry; a part that does not inflate or
+    * does not parse fails as a [[MalformedXlsxException]] naming the
+    * file and the entry.
+    */
+  private def parseEntry[A](path: String, zip: ZipFile, entry: ZipEntry)(parse: InputStream => A): A =
+    try {
+      val in = zip.getInputStream(entry)
+      try parse(in) finally in.close()
+    } catch {
+      case e @ (_: IOException | _: SAXException) =>
+        throw new MalformedXlsxException(path, entry.getName, e.getMessage, e)
+    }
+
+  /** OOXML parts never carry a DOCTYPE; refusing one rules out external
+    * entities (XXE) and entity expansion.
+    */
+  private def saxParser(): SAXParser = {
+    val f = SAXParserFactory.newInstance()
+    f.setFeature("http://apache.org/xml/features/disallow-doctype-decl", true)
+    f.newSAXParser()
+  }
+
   private def parseSharedStrings(in: java.io.InputStream): Vector[String] = {
     val out = Vector.newBuilder[String]
     val handler = new DefaultHandler {
@@ -85,15 +118,18 @@ object Xlsx {
       override def characters(ch: Array[Char], start: Int, length: Int): Unit =
         if (inT) sb.appendAll(ch, start, length)
     }
-    SAXParserFactory.newInstance().newSAXParser().parse(in, handler)
+    saxParser().parse(in, handler)
     out.result()
   }
 
-  /** Column letter(s) of an A1-style cell ref → 0-based index. */
-  private[io] def colIndex(ref: String): Int = {
+  /** Column letter(s) of an A1-style cell ref → 0-based index; a ref
+    * past column XFD is rejected before it can size a row.
+    */
+  private def colIndex(ref: String): Int = {
     var i = 0; var acc = 0
     while (i < ref.length && ref.charAt(i).isLetter) {
       acc = acc * 26 + (ref.charAt(i) - 'A' + 1); i += 1
+      if (acc > MaxColumns) throw new SAXException(s"cell reference $ref is past column XFD")
     }
     acc - 1
   }
@@ -110,6 +146,7 @@ object Xlsx {
     val handler = new DefaultHandler {
       private var row: mutable.ArrayBuffer[String] = _
       private var cellType: String = _
+      private var cellRef: String = _
       private var cellCol: Int = -1
       private var inV = false
       private var inIs = false
@@ -119,7 +156,8 @@ object Xlsx {
           case "row" => row = mutable.ArrayBuffer.empty
           case "c" =>
             cellType = Option(a.getValue("t")).getOrElse("n")
-            cellCol = Option(a.getValue("r")).map(colIndex).getOrElse(row.length)
+            cellRef = a.getValue("r")
+            cellCol = Option(cellRef).map(colIndex).getOrElse(row.length)
             sb.clear()
           case "v" => inV = true
           case "is" => inIs = true
@@ -133,7 +171,9 @@ object Xlsx {
             val raw = sb.toString
             val value = cellType match {
               case _ if raw.isEmpty && !inIs => null
-              case "s" => shared(raw.trim.toInt)
+              case "s" => raw.trim.toIntOption.filter(i => i >= 0 && i < shared.length).map(shared)
+                .getOrElse(throw new SAXException(s"cell $cellRef: shared-string index '${raw.trim}' " +
+                  s"is not one of the ${shared.length} shared strings"))
               case "b" => if (raw.trim == "1") "TRUE" else "FALSE"
               case "str" | "inlineStr" => raw
               case _ => formatNumeric(raw)
@@ -149,7 +189,16 @@ object Xlsx {
       override def characters(ch: Array[Char], start: Int, length: Int): Unit =
         if (inV) sb.appendAll(ch, start, length)
     }
-    SAXParserFactory.newInstance().newSAXParser().parse(in, handler)
+    saxParser().parse(in, handler)
     rows.result()
   }
 }
+
+/** A workbook that cannot be read as SpreadsheetML: a zip that does not
+  * open, or a part that does not inflate or parse, or that holds a
+  * DOCTYPE, a cell past column XFD or a shared-string index outside the
+  * table. `entry` is the zip entry being read (for an archive that does
+  * not open, the sheet that was asked for).
+  */
+final class MalformedXlsxException(val path: String, val entry: String, detail: String, cause: Throwable)
+  extends IOException(s"$path ($entry): $detail", cause)

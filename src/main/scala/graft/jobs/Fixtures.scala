@@ -46,8 +46,10 @@ object Fixtures {
   /** `output/users.json` content (index.Rmd:680-688): model
     * "people.profile", fields = all user columns except pk.
     */
-  def usersJson(users: DataFrame): String = {
-    val rows = users
+  def usersJson(users: DataFrame): String = usersDocs(users).mkString("[", ",", "]")
+
+  private def usersDocs(users: DataFrame): Array[String] =
+    users
       .orderBy(col("pk"))
       .select(to_json(struct(
         lit("people.profile").as("model"),
@@ -60,16 +62,17 @@ object Fixtures {
           col("is_superuser")).as("fields")),
         Map("ignoreNullFields" -> "false")).as("doc"))
       .collect().map(_.getString(0))
-    rows.mkString("[", ",", "]")
-  }
 
   def writeEovs(spark: SparkSession, outDir: String): Unit = {
     Files.createDirectories(Paths.get(outDir))
     Files.writeString(Paths.get(outDir, "eovs.json"), eovsJson(spark))
   }
 
-  def writeUsers(users: DataFrame, outDir: String): Unit = {
+  /** Writes `output/users.json`; returns the number of users written. */
+  def writeUsers(users: DataFrame, outDir: String): Int = {
+    val docs = usersDocs(users)
     Files.createDirectories(Paths.get(outDir))
-    Files.writeString(Paths.get(outDir, "users.json"), usersJson(users))
+    Files.writeString(Paths.get(outDir, "users.json"), docs.mkString("[", ",", "]"))
+    docs.length
   }
 }

@@ -20,11 +20,10 @@ object LoadPortalMain {
 
     // K2/K3 Django fixtures (index.Rmd:648-656, 680-688)
     Fixtures.writeEovs(spark, s"$outDir/output")
-    Fixtures.writeUsers(job.users, s"$outDir/output")
+    val userCount = Fixtures.writeUsers(job.users, s"$outDir/output")
 
     val dupCount = job.duplicates.count()
-    val missingCount = spatial.missingSpatial.count()
-    val userCount = job.users.count()
+    val missingCount = spatial.missingIdentifiers.length
 
     // reports (the reference prints these as notebook tables)
     job.duplicates.coalesce(1).write.mode("overwrite")

@@ -1,8 +1,8 @@
 package graft.jobs
 
 import graft.functions.GeoFunctions
-import graft.io.{GeoJsonSink, Shapefile, Sources, Xlsx}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import graft.io.{Shapefile, ShapefileWriter, Sources, Xlsx}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** E1 stage 4 — the reference's spatial-export section
@@ -18,11 +18,11 @@ import org.apache.spark.sql.functions._
   *  6. the WESPAS cruise track (points → LINESTRING);
   *  7. empty files for everything still without spatial data (G9).
   *
-  * Output is the reference's shapefile bundle per identifier
-  * ([[graft.io.ShapefileWriter]], K1) plus a GeoJSON FeatureCollection
-  * mirror. `run` returns the combined frame with `has_shapefile` set
-  * exactly as the reference's mutable flags would leave it, plus the
-  * missing-spatial report.
+  * Output is the reference's shapefile bundle per identifier and nothing
+  * else (`.shp/.shx/.dbf/.prj`, [[graft.io.ShapefileWriter]], K1). `run`
+  * returns the combined frame with `has_shapefile` set exactly as the
+  * reference's mutable flags would leave it, plus the missing-spatial
+  * report.
   */
 object SpatialExport {
 
@@ -79,24 +79,27 @@ object SpatialExport {
   val wespasName = "Western European Shelf Pelagic Acoustic Survey (WESPAS)"
   val wespasXlsx = "eurosea_spatial/WESPAS 2020_Positions.xlsx"
 
+  /** `missingIdentifiers` is the identifier column of `missingSpatial`,
+    * in the same order, already collected.
+    */
   case class Result(withShapefileFlag: DataFrame, missingSpatial: DataFrame,
-                    geojsonIdentifiers: Seq[String])
+                    missingIdentifiers: Seq[String])
 
-  /** Runs the whole export. `combined` is [[LoadPortal.withIdentifiers]].
-    * File writes are per-identifier FeatureCollections (driver-side —
-    * the layers are config-scale; [[GeoJsonSink.writePartitioned]] is
-    * the distributed path for big layers).
+  /** Runs the whole export. `combined` is [[LoadPortal.withIdentifiers]];
+    * it is read once, and every step below works from that one
+    * driver-side copy of (name, identifier, geometry_geojson). File
+    * writes are per-identifier bundles, driver-side: the layers are
+    * config-scale.
     */
   def run(spark: SparkSession, combined: DataFrame, dataDir: String,
           outDir: String): Result = {
-    // ---- 1. geometry_geojson column (index.Rmd:400-416)
-    val geoRows = combined
-      .filter(col("geometry_geojson").isNotNull && col("geometry_geojson") =!= "null")
-      .select(col("identifier"), col("geometry_geojson"))
-      .collect()
-    val geojsonWritten = geoRows.flatMap { r =>
-      val identifier = r.getString(0)
-      val feats = geojsonFeatures(r.getString(1))
+    val rows = combined.select(col("name"), col("identifier"), col("geometry_geojson"))
+      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
+
+    // ---- 1. geometry_geojson column (index.Rmd:400-416); null, blank
+    // and "null" documents parse to no features
+    val geojsonWritten = rows.flatMap { case (_, identifier, geojson) =>
+      val feats = geojsonFeatures(geojson)
       val types = feats.map(_._2).distinct
       if (feats.nonEmpty && types.length == 1) {
         writeFeatures(outDir, identifier, feats.map(_._1).map(w => (w, Seq.empty[(String, String)])))
@@ -105,9 +108,8 @@ object SpatialExport {
     }.toSet
 
     // name → identifiers mapping (duplicate names → multiple outputs, J6)
-    val nameIdents: Map[String, Seq[String]] = combined
-      .select(col("name"), col("identifier")).collect()
-      .groupBy(_.getString(0)).view.mapValues(_.map(_.getString(1)).toSeq).toMap
+    val nameIdents: Map[String, Seq[String]] =
+      rows.groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
 
     // ---- 2. site CSVs (index.Rmd:423-463) — distributed read + filter.
     // The reference flags has_shapefile BEFORE any file I/O
@@ -189,19 +191,22 @@ object SpatialExport {
     }
 
     // ---- has_shapefile (the reference's mutable flag, set-based)
-    val flagged = (geojsonWritten ++ csvIdentifiers ++ windfarmIdents ++
-      copyIdents ++ spainIdents ++ wespasIdents).toSeq.distinct
+    val flagged = geojsonWritten ++ csvIdentifiers ++ windfarmIdents ++
+      copyIdents ++ spainIdents ++ wespasIdents
     val out = combined.withColumn("has_shapefile",
-      col("identifier").isin(flagged: _*))
+      col("identifier").isin(flagged.toSeq: _*))
 
     // ---- 7. missing report + empty files (index.Rmd:566-587, F3 + G9)
     val missing = out.filter(!col("has_shapefile"))
       .select(col("name"), col("identifier"), col("url"))
       .orderBy(col("identifier"))
-    missing.select(col("identifier")).collect().foreach(r =>
-      writeFeatures(outDir, r.getString(0), Seq.empty))
+    // the rows of `missing`: `isin` is null on a null identifier, so
+    // such a row is neither flagged nor missing
+    val missingIdentifiers = rows.iterator.map(_._2)
+      .filter(i => i != null && !flagged.contains(i)).toSeq.sorted
+    missingIdentifiers.distinct.foreach(writeFeatures(outDir, _, Seq.empty))
 
-    Result(out, missing, geojsonWritten.toSeq.sorted)
+    Result(out, missing, missingIdentifiers)
   }
 
   /** GeoJSON document → per-feature (wkt, type); FeatureCollections
@@ -247,20 +252,17 @@ object SpatialExport {
     s"""{"type":"$t","coordinates":${render(m("coordinates"))}}"""
   }
 
-  /** Per-dataset sink: the reference's actual artifact is the shapefile
-    * bundle `{identifier}/{identifier}.shp` (index.Rmd:410-411 etc.);
-    * the GeoJSON FeatureCollection is written alongside as the
-    * open-standard mirror (both driver-side — config-scale layers).
+  /** Per-dataset sink: the reference's artifact, the shapefile bundle
+    * `{identifier}/{identifier}.shp` (index.Rmd:410-411 etc.).
     */
   private def writeFeatures(outDir: String, identifier: String,
                             feats: Seq[(String, Seq[(String, String)])]): Unit = {
-    GeoJsonSink.writeFeatureCollection(outDir, identifier, feats)
     val fields = feats.flatMap(_._2.map(_._1)).distinct
     val rows = feats.map { case (w, props) =>
       val m = props.toMap
       (w, fields.map(f => m.get(f).orNull))
     }
-    graft.io.ShapefileWriter.write(s"$outDir/$identifier", identifier, fields, rows)
+    ShapefileWriter.write(s"$outDir/$identifier", identifier, fields, rows)
   }
 
   private def listShapefiles(dir: java.io.File): Seq[java.io.File] = {

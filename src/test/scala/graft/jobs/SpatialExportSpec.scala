@@ -26,10 +26,9 @@ class SpatialExportSpec extends SparkSpec {
     val outDirs = new java.io.File(SpatialExportSpec.lastOutDir).listFiles()
     assert(outDirs.length === 627)
     outDirs.foreach { d =>
-      assert(new java.io.File(d, s"${d.getName}.geojson").exists(), s"missing file in $d")
-      // the reference's actual artifact: the shapefile bundle (K1)
-      Seq("shp", "shx", "dbf", "prj").foreach(ext =>
-        assert(new java.io.File(d, s"${d.getName}.$ext").exists(), s"missing .$ext in $d"))
+      // the reference's artifact: the shapefile bundle (K1), and it reads back
+      assert(d.list().toSet === SpatialExportSpec.bundle(d.getName), s"wrong files in $d")
+      Shapefile.read(new java.io.File(d, s"${d.getName}.shp").getPath)
     }
   }
 
@@ -81,12 +80,11 @@ class SpatialExportSpec extends SparkSpec {
       .filter(col("name") === SpatialExport.windfarmName)
       .select(col("identifier")).collect().map(_.getString(0))
     assert(idents.nonEmpty)
-    val f = Paths.get(SpatialExportSpec.lastOutDir, idents.head, s"${idents.head}.geojson")
-    val json = Files.readString(f)
-    assert(json.contains("\"Polygon\""))
-    assert(!json.contains("\"Point\""), "point layer must be filtered out")
-    // 3 polygon shapefiles × 1 feature each
-    assert("\\{\"type\":\"Feature\"".r.findAllIn(json).length === 3)
+    val feats = SpatialExportSpec.written(idents.head)
+    // 3 polygon shapefiles × 1 feature each; the point layer is filtered out
+    assert(feats.length === 3)
+    assert(feats.forall(f => f.geomType == "POLYGON" || f.geomType == "MULTIPOLYGON"))
+    assert(!feats.exists(_.geomType == "POINT"), "point layer must be filtered out")
   }
 
   test("WESPAS output is a single LINESTRING of 116 points (G8)") {
@@ -94,10 +92,9 @@ class SpatialExportSpec extends SparkSpec {
       .filter(col("name") === SpatialExport.wespasName)
       .select(col("identifier")).collect().map(_.getString(0))
     assert(idents.length === 1)
-    val json = Files.readString(
-      Paths.get(SpatialExportSpec.lastOutDir, idents.head, s"${idents.head}.geojson"))
-    assert(json.contains("\"LineString\""))
-    assert("\\[-?\\d".r.findAllIn(json).length === 116)
+    val feats = SpatialExportSpec.written(idents.head)
+    assert(feats.map(_.geomType) === Seq("LINESTRING"))
+    assert(feats.head.wkt.stripPrefix("LINESTRING (").stripSuffix(")").split(", ").length === 116)
   }
 
   test("Spain TSV reprojects UTM 30N → plausible Basque-coast WGS84 (G7)") {
@@ -105,19 +102,65 @@ class SpatialExportSpec extends SparkSpec {
       .filter(col("name") === SpatialExport.spainName)
       .select(col("identifier")).collect().map(_.getString(0))
     assert(idents.nonEmpty)
-    val json = Files.readString(
-      Paths.get(SpatialExportSpec.lastOutDir, idents.head, s"${idents.head}.geojson"))
     // Basque coast: lon ≈ -3.5..-1.5, lat ≈ 43..44
-    val coords = "\\[(-?\\d+\\.\\d+),(\\d+\\.\\d+)\\]".r
-      .findAllMatchIn(json).map(m => (m.group(1).toDouble, m.group(2).toDouble)).toSeq
+    val coords = SpatialExportSpec.written(idents.head).map { f =>
+      val Array(lon, lat) = f.wkt.stripPrefix("POINT (").stripSuffix(")").split(" ").map(_.toDouble)
+      (lon, lat)
+    }
     assert(coords.nonEmpty)
     coords.foreach { case (lon, lat) =>
       assert(lon > -4 && lon < -1, s"lon $lon out of Basque range")
       assert(lat > 42.5 && lat < 44.5, s"lat $lat out of Basque range")
     }
   }
+
+  test("hand-built combined frame: one bundle per identifier, flags and missing rows") {
+    import spark.implicits._
+    def point(x: Int, y: Int) = s"""{"type":"Point","coordinates":[$x,$y]}"""
+    def collection(geoms: String*) = geoms.map(g =>
+      s"""{"type":"Feature","geometry":$g,"properties":{}}""")
+      .mkString("""{"type":"FeatureCollection","features":[""", ",", "]}")
+    val combined = Seq[(String, String, String, String)](
+      ("Point net", "point_net", point(1, 2), "u1"),
+      ("Two net", "two_net", collection(point(1, 2), point(3, 4)), "u2"),
+      ("Mixed net", "mixed_net",
+        collection(point(1, 2), """{"type":"LineString","coordinates":[[0,0],[1,1]]}"""), "u3"),
+      ("Null string net", "null_string_net", "null", "u4"),
+      ("Null net", "null_net", null, "u5"),
+      // registered site CSV whose input file is absent: flagged, empty bundle
+      ("Movebank", "movebank", null, "u6"))
+      .toDF("name", "identifier", "geometry_geojson", "url")
+    val dataDir = Files.createTempDirectory("graft_spatial_data").toString
+    val out = Files.createTempDirectory("graft_spatial_out").toString
+    val r = SpatialExport.run(spark, combined, dataDir, out)
+
+    val dirs = new java.io.File(out).listFiles().map(_.getName).toSet
+    assert(dirs === Set("point_net", "two_net", "mixed_net", "null_string_net", "null_net", "movebank"))
+    dirs.foreach(id => assert(new java.io.File(out, id).list().toSet === SpatialExportSpec.bundle(id), id))
+    val counts = dirs.map(id => id -> Shapefile.read(s"$out/$id/$id.shp")._2.length).toMap
+    assert(counts === Map("point_net" -> 1, "two_net" -> 2, "mixed_net" -> 0,
+      "null_string_net" -> 0, "null_net" -> 0, "movebank" -> 0))
+
+    val flags = r.withShapefileFlag.select(col("identifier"), col("has_shapefile"))
+      .collect().map(row => row.getString(0) -> row.getBoolean(1)).toMap
+    assert(flags === Map("point_net" -> true, "two_net" -> true, "mixed_net" -> false,
+      "null_string_net" -> false, "null_net" -> false, "movebank" -> true))
+
+    val missing = Seq(("Mixed net", "mixed_net", "u3"), ("Null net", "null_net", "u5"),
+      ("Null string net", "null_string_net", "u4"))
+    assert(r.missingSpatial.collect().map(row => (row.getString(0), row.getString(1), row.getString(2))).toSeq
+      === missing)
+    assert(r.missingIdentifiers === missing.map(_._2))
+  }
 }
 
 object SpatialExportSpec {
   @volatile var lastOutDir: String = _
+
+  /** The files of one identifier's output directory. */
+  def bundle(id: String): Set[String] = Set("shp", "shx", "dbf", "prj").map(ext => s"$id.$ext")
+
+  /** Features of the shapefile written for `id` in the last reference run. */
+  def written(id: String): Seq[Shapefile.Feature] =
+    Shapefile.read(Paths.get(lastOutDir, id, s"$id.shp").toString)._2
 }

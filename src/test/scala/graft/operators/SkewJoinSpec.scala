@@ -1,12 +1,9 @@
 package graft.operators
 
 import graft.SparkSpec
-import graft.io.GeoJsonSink
 import org.apache.spark.sql.functions._
 
-/** Salted skew join correctness + the distributed per-identifier
-  * GeoJSON sink (the 100-TB write path).
-  */
+/** Salted skew join correctness. */
 class SkewJoinSpec extends SparkSpec {
 
   test("saltedEquiJoin equals the plain join, including a pathological hot key") {
@@ -33,26 +30,5 @@ class SkewJoinSpec extends SparkSpec {
       .select(col("k"), col("v"), col("w")).collect()
     assert(out.length === 3)
     assert(out.count(_.isNullAt(2)) === 1)
-  }
-
-  test("GeoJsonSink.writePartitioned: one directory per identifier, parseable features") {
-    import spark.implicits._
-    val df = Seq(
-      ("net_a", "POINT (1 2)", "s1"),
-      ("net_a", "POINT (3 4)", "s2"),
-      ("net_b", "LINESTRING (0 0, 1 1)", "s3")).toDF("identifier", "wkt", "site")
-    val out = java.nio.file.Files.createTempDirectory("graft_pw").toString
-    GeoJsonSink.writePartitioned(df, "identifier", "wkt", out)
-    val aDir = new java.io.File(s"$out/identifier=net_a")
-    val bDir = new java.io.File(s"$out/identifier=net_b")
-    assert(aDir.exists() && bDir.exists())
-    val aLines = aDir.listFiles().filter(_.getName.endsWith(".txt"))
-      .flatMap(f => scala.io.Source.fromFile(f).getLines()).toSeq
-    assert(aLines.length === 2)
-    aLines.foreach { l =>
-      assert(l.contains("\"type\":\"Feature\""))
-      assert(l.contains("\"Point\""))
-      assert(l.contains("\"site\":"))
-    }
   }
 }
