@@ -3,9 +3,13 @@ package graft
 import graft.functions._
 import graft.operators._
 import graft.plans.Exprs
+import java.io.FileNotFoundException
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.util.zip.CRC32
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.util.Using
 
 /** The driver-checked query catalog: one entry per operator from
   * SURVEY.md §2 plus the training-data pipeline operators (dedup,
@@ -341,6 +345,51 @@ object Queries {
        |        ORDER BY t_micro DESC, doc_id) AS rank FROM tot)
        |WHERE rank <= $topK""".stripMargin
   }
+
+  /** q44–q46 scan the committed portal sample (`src/main/resources/portal/`:
+    * survey #4, the Basque TSV and the layer-EOV links backup under the
+    * reference's file names and layout, carrying FIXTURES.md §2/§5/§8's
+    * edge cases), not the `d` corpus. A sample file resolves on the
+    * classpath to one absolute path that the Spark read and the DuckDB
+    * oracle share. Neither engine reads inside a jar (sbt's forked `run`
+    * puts the program on the classpath as one), so a packaged sample is
+    * copied out once per content, to `java.io.tmpdir/graft-portal-<crc>/`.
+    * Without the sample on the classpath (a build of `src/main/scala`
+    * alone) the catalog still loads: those oracles are absent and the
+    * queries throw, naming the missing file.
+    */
+  private def portalSample(file: String): Option[String] =
+    Option(getClass.getResource(s"/portal/$file")).map { u =>
+      if (u.getProtocol == "file") Paths.get(u.toURI).toString
+      else {
+        val bytes = Using.resource(u.openStream())(_.readAllBytes())
+        val crc = new CRC32
+        crc.update(bytes)
+        val out = Paths.get(sys.props("java.io.tmpdir"),
+          f"graft-portal-${crc.getValue}%08x", file)
+        if (!Files.isRegularFile(out)) {
+          Files.createDirectories(out.getParent)
+          val part = Files.createTempFile(out.getParent, "part", "")
+          Files.write(part, bytes)
+          Files.move(part, out, StandardCopyOption.REPLACE_EXISTING,
+            StandardCopyOption.ATOMIC_MOVE)
+        }
+        out.toString
+      }
+    }
+
+  private def portalFile(file: String): String =
+    portalSample(file).getOrElse(throw new FileNotFoundException(
+      s"portal/$file is not on the classpath (src/main/resources/portal/$file)"))
+
+  /** `sql` applied to the sample file's path as a quoted SQL literal. */
+  private def portalOracle(file: String)(sql: String => String): Option[String] =
+    portalSample(file).map(p => sql(s"'${p.replace("'", "''")}'"))
+
+  private val Survey4 = "4Updated_Spatial_Survey_420_8132020_FINAL_toshare.csv"
+  private val BasqueTsv =
+    "eurosea_spatial/Spain/Basque monitoring network for the ecological status assessment.tsv"
+  private val LayerEovs = "layers_layer_eovs.csv"
 
   val all: Seq[Q] = Seq(
 
@@ -1580,34 +1629,40 @@ object Queries {
       "A4 (row-wise struct → JSON document)"),
 
     Q("q44_csv_scan_survey",
-      (s, _) => graft.io.Sources.surveyCsv(s,
-          "/root/reference/data/4Updated_Spatial_Survey_420_8132020_FINAL_toshare.csv")
+      (s, _) => graft.io.Sources.surveyCsv(s, portalFile(Survey4))
         .select(col("prog_name").as("name"), col("resp_email").as("contact_email"),
           col("duration_start_year").as("start_year")),
-      Some("""SELECT prog_name AS name, resp_email AS contact_email,
-             |duration_start_year AS start_year
-             |FROM read_csv('/root/reference/data/4Updated_Spatial_Survey_420_8132020_FINAL_toshare.csv',
-             |  header = true, all_varchar = true, nullstr = ['', 'NA'])""".stripMargin),
-      "S1,S2,C1 (survey CSV scan: 36k physical lines → 371 multiline-quoted records; oracle reads the same file)"),
+      portalOracle(Survey4)(p =>
+        s"""SELECT prog_name AS name, resp_email AS contact_email,
+           |duration_start_year AS start_year
+           |FROM read_csv($p,
+           |  header = true, all_varchar = true, nullstr = ['', 'NA'])""".stripMargin),
+      "S1,S2,C1 (survey CSV scan of the portal sample: multiline-quoted and \"\"-escaped fields, NA and empty as null; oracle reads the same file)"),
 
     Q("q45_tsv_scan",
-      (s, _) => graft.io.Sources.tsv(s,
-          "/root/reference/data/eurosea_spatial/Spain/Basque monitoring network for the ecological status assessment.tsv")
+      (s, _) => graft.io.Sources.tsv(s, portalFile(BasqueTsv))
         .select(col("x").cast("double").as("x"), col("y").cast("double").as("y")),
-      Some("""SELECT CAST(x AS DOUBLE) AS x, CAST(y AS DOUBLE) AS y
-             |FROM read_csv('/root/reference/data/eurosea_spatial/Spain/Basque monitoring network for the ecological status assessment.tsv',
-             |  header = true, delim = '\t', all_varchar = true)""".stripMargin),
-      "S6 (TSV scan; oracle reads the same file)"),
+      // nullstr: Sources.tsv reads NA (and empty) as null before the cast
+      portalOracle(BasqueTsv)(p =>
+        s"""SELECT CAST(x AS DOUBLE) AS x, CAST(y AS DOUBLE) AS y
+           |FROM read_csv($p,
+           |  header = true, delim = '\\t', all_varchar = true, nullstr = ['', 'NA'])""".stripMargin),
+      "S6 (TSV scan of the portal sample, an NA coordinate; oracle reads the same file)"),
 
     Q("q46_csv_scan_links",
-      (s, _) => graft.io.Sources.csv(s, "/root/reference/data/layers_layer_eovs.csv")
+      (s, _) => graft.io.Sources.csv(s, portalFile(LayerEovs))
         .groupBy(col("short_name"))
         .agg(count(lit(1)).as("n_links")),
-      Some("""SELECT short_name, count(*) AS n_links
-             |FROM read_csv('/root/reference/data/layers_layer_eovs.csv',
-             |  header = true, all_varchar = true, nullstr = ['', 'NA'])
-             |GROUP BY short_name""".stripMargin),
-      "S12 (DB-backup CSV scan + link aggregation; oracle reads the same file)"),
+      // explicit dialect: DuckDB's sniffer loses the header on a file
+      // ending in the partial line `207`; null_padding reads that line
+      // as Spark's PERMISSIVE mode does (missing fields null)
+      portalOracle(LayerEovs)(p =>
+        s"""SELECT short_name, count(*) AS n_links
+           |FROM read_csv($p,
+           |  header = true, delim = ',', quote = '"', escape = '"', null_padding = true,
+           |  all_varchar = true, nullstr = ['', 'NA'])
+           |GROUP BY short_name""".stripMargin),
+      "S12 (DB-backup CSV scan of the portal sample, a partial last line + link aggregation; oracle reads the same file)"),
 
     Q("q47_dedup_keep_first",
       (s, d) => Dedup.exactDedup(documents(s, d), "text", "doc_id")
