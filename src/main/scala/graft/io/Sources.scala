@@ -1,11 +1,27 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.charset.StandardCharsets.UTF_8
+
+import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.fs.Path
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.{HadoopFileLinesReader, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
 
 /** File sources with the reference's exact read semantics (SURVEY §2.1).
   * All are `spark.read` scans — distributed, filter/projection pushdown
-  * applies — with options matching R's `read.csv`/`read_tsv` behavior.
+  * applies — with options matching R's `read.csv`/`read_tsv` behavior:
+  *
+  *  - [[surveyCsv]]: the survey exports (S1/S2), multiline quoted;
+  *  - [[siteCsvs]]: the per-network site CSVs (S5), every file in one
+  *    plan, each with its own header;
+  *  - [[tsv]]: the Basque stations (S6);
+  *  - [[csv]]: the DB backups (S12).
   */
 object Sources {
 
@@ -23,16 +39,70 @@ object Sources {
       .csv(path)
       .transform(blankToNull)
 
-  /** Per-network site CSV (S5, notebooks/index.Rmd:433): permissive mode
-    * (Movebank.csv has ragged rows — R's read.csv fills short rows).
+  /** The site CSVs as [[siteCsvs]] reads them: `columns` holds each
+    * path's column names; `rows` holds one row per data line of every
+    * file, as `path` (as given) and `fields` (the line's values, one per
+    * column of its file). A file's rows keep the file's order.
     */
-  def siteCsv(spark: SparkSession, path: String): DataFrame =
-    spark.read
-      .option("header", "true")
-      .option("mode", "PERMISSIVE")
-      .option("nullValue", "NA")
-      .csv(path)
-      .transform(blankToNull)
+  final case class SiteCsvs(columns: Map[String, Seq[String]], rows: DataFrame)
+
+  private val siteOptions = Map("header" -> "true", "mode" -> "PERMISSIVE", "nullValue" -> "NA")
+
+  /** The per-network site CSVs (S5, notebooks/index.Rmd:433), every file
+    * in one plan and one job. Each file reads exactly as its own
+    * `spark.read.options(header, PERMISSIVE, nullValue NA).csv(path)`
+    * would, blank→null included: its own header, under Spark's rule (a
+    * blank or `NA` name becomes `_c<i>`, a duplicated one gets its index
+    * appended, and names that still collide fail the read); ragged rows
+    * padded with nulls or truncated (Movebank.csv has ragged rows — R's
+    * read.csv fills short rows).
+    *
+    * Spark takes a multi-file CSV read's schema from the first file
+    * only, so the header is read per file on the driver, the way Spark's
+    * schema inference reads it (its line reader, blank lines skipped,
+    * its parser settings and header rule). The files are then scanned
+    * once per distinct header, with that header as the schema, and the
+    * scans are unioned: Spark still drops each file's header line and
+    * parses every data line itself. A file without a header line has
+    * no columns and no rows, and is not scanned. No path, no read.
+    */
+  def siteCsvs(spark: SparkSession, paths: Seq[String]): SiteCsvs = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val options = new CSVOptions(siteOptions, true, spark.conf.get("spark.sql.session.timeZone"))
+    val caseSensitive = spark.conf.get("spark.sql.caseSensitive").toBoolean
+    // (path, the scan's `_metadata.file_path` for it, its column names)
+    val files = paths.distinct.map { p =>
+      val path = new Path(p)
+      val fs = path.getFileSystem(conf)
+      val file = SparkPath.fromPath(fs.makeQualified(path))
+      val lines = new HadoopFileLinesReader(
+        PartitionedFile(InternalRow.empty, file, 0, fs.getFileStatus(path).getLen), None, conf)
+      val header = try CSVUtils.filterCommentAndEmpty(
+          lines.map(t => new String(t.getBytes, 0, t.getLength, UTF_8)), options).nextOption()
+        finally lines.close()
+      val columns = header.map(h => CSVUtils.makeSafeHeader(
+        new CsvParser(options.asParserSettings).parseLine(h), caseSensitive, options).toSeq)
+      // `_metadata.file_path` as Spark derives it from the scanned file
+      (p, new Path(file.toPath.toString).toUri.toString, columns.getOrElse(Nil))
+    }
+    val scans = files.filter(_._3.nonEmpty).groupBy(_._3).toSeq.map { case (columns, group) =>
+      val positional = columns.indices.map(i => s"_c$i")
+      spark.read.schema(StructType(columns.map(StructField(_, StringType))))
+        .options(siteOptions)
+        .csv(group.map(_._1): _*)
+        // `*` and `toDF` go by position: no header name needs quoting
+        .select(col("*"), col("_metadata.file_path"))
+        .toDF(positional :+ "_file": _*)
+        .select(
+          coalesce(element_at(typedLit(group.map(f => f._2 -> f._1).toMap), col("_file")),
+            raise_error(concat(lit("site CSV read an unrequested file "), col("_file")))).as("path"),
+          array(positional.map(c => blankToNull(col(c))): _*).as("fields"))
+    }
+    val none = StructType(Seq(StructField("path", StringType), StructField("fields", ArrayType(StringType))))
+    SiteCsvs(files.map(f => f._1 -> f._3).toMap,
+      scans.reduceOption(_ union _)
+        .getOrElse(spark.createDataFrame(java.util.Collections.emptyList[Row](), none)))
+  }
 
   /** TSV (S6, notebooks/index.Rmd:531). */
   def tsv(spark: SparkSession, path: String): DataFrame =
@@ -52,8 +122,7 @@ object Sources {
     * Backtick-quoted so dotted headers ("Site.Name") resolve literally.
     */
   private def blankToNull(df: DataFrame): DataFrame =
-    df.select(df.columns.map { c =>
-      val q = col(s"`$c`")
-      when(q === "", lit(null)).otherwise(q).as(c)
-    }: _*)
+    df.select(df.columns.toSeq.map(c => blankToNull(col(s"`$c`")).as(c)): _*)
+
+  private def blankToNull(c: Column): Column = when(c === "", lit(null)).otherwise(c)
 }

@@ -22,18 +22,18 @@ object LoadPortalMain {
     Fixtures.writeEovs(spark, s"$outDir/output")
     val userCount = Fixtures.writeUsers(job.users, s"$outDir/output")
 
-    val dupCount = job.duplicates.count()
-    val missingCount = spatial.missingIdentifiers.length
-
     // reports (the reference prints these as notebook tables)
     job.duplicates.coalesce(1).write.mode("overwrite")
       .option("header", "true").csv(s"$outDir/reports/duplicates")
     spatial.missingSpatial.coalesce(1).write.mode("overwrite")
       .option("header", "true").csv(s"$outDir/reports/missing_spatial")
 
-    println(s"[e1] initial=${job.initial.count()} eurosea=${job.eurosea.count()} " +
-      s"combined=${combined.count()} users=$userCount duplicates=$dupCount " +
-      s"missing_spatial=$missingCount out=$outDir")
+    // the frames are held on the driver (LoadPortal): collecting one
+    // reads that copy and runs no Spark job, where count() would
+    println(s"[e1] initial=${job.initial.collect().length} eurosea=${job.eurosea.collect().length} " +
+      s"combined=${combined.collect().length} users=$userCount " +
+      s"duplicates=${job.duplicates.collect().length} " +
+      s"missing_spatial=${spatial.missingIdentifiers.length} out=$outDir")
     spark.stop()
   }
 }

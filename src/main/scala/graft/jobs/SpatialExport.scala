@@ -2,7 +2,7 @@ package graft.jobs
 
 import graft.functions.GeoFunctions
 import graft.io.{Shapefile, ShapefileWriter, Sources, Xlsx}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** E1 stage 4 — the reference's spatial-export section
@@ -111,33 +111,47 @@ object SpatialExport {
     val nameIdents: Map[String, Seq[String]] =
       rows.groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
 
-    // ---- 2. site CSVs (index.Rmd:423-463) — distributed read + filter.
-    // The reference flags has_shapefile BEFORE any file I/O
-    // (index.Rmd:427); this data snapshot prunes two of the twenty CSVs
-    // (IMOS, SCAR), so a missing input skips the write but keeps the
-    // registration — reproducing the reference's flag state exactly.
-    val csvIdentifiers = siteCsvs.flatMap { sc =>
+    // ---- 2. site CSVs (index.Rmd:423-463) — every input file in one
+    // read ([[Sources.siteCsvs]]; none when no file is needed), filtered
+    // and turned into points in the same plan, collected once. The
+    // reference flags has_shapefile BEFORE any file I/O (index.Rmd:427);
+    // this data snapshot prunes two of the twenty CSVs (IMOS, SCAR), so a
+    // missing input skips the read but keeps the registration and writes
+    // the empty collection: every registered identifier still has its
+    // per-dataset output file.
+    val sites = siteCsvs.map { sc =>
       val idents = nameIdents.getOrElse(sc.name, Seq.empty)
-      val toWrite = idents.filterNot(geojsonWritten.contains)
-      val inputExists = new java.io.File(s"$dataDir/largeCSVsites_final/${sc.file}").exists()
-      if (toWrite.nonEmpty && inputExists) {
-        val df = Sources.siteCsv(spark, s"$dataDir/largeCSVsites_final/${sc.file}")
-        // the reference filters the literal `Latitude` column (F2)
-        val latName = if (df.columns.contains("Latitude")) "Latitude" else sc.latCol
-        val rows = df
-          .filter(col(s"`$latName`").cast("double") <= 90)
-          .withColumn("_wkt", GeoFunctions.wktPoint(
-            col(s"`${sc.lonCol}`").cast("double"), col(s"`${sc.latCol}`").cast("double")))
-          .collect()
-        val feats = rows.map(r => (r.getAs[String]("_wkt"),
-          r.schema.fieldNames.filterNot(_ == "_wkt").toSeq
-            .map(f => f -> Option(r.getAs[Any](f)).map(_.toString).orNull)))
-        toWrite.foreach(writeFeatures(outDir, _, feats.toSeq))
-      } else if (toWrite.nonEmpty) {
-        // pruned input: emit the empty collection so every registered
-        // identifier still has its per-dataset output file
-        toWrite.foreach(writeFeatures(outDir, _, Seq.empty))
-      }
+      (sc, idents, idents.filterNot(geojsonWritten.contains), s"$dataDir/largeCSVsites_final/${sc.file}")
+    }
+    val toRead = sites.collect { case (sc, _, toWrite, path)
+      if toWrite.nonEmpty && new java.io.File(path).exists() => (sc, path) }
+    val read = Sources.siteCsvs(spark, toRead.map(_._2))
+    // each file's value of the column `name` picks from its columns,
+    // matched case-insensitively, as a column reference resolves
+    def field(name: (SiteCsv, Seq[String]) => String): Column = {
+      val at = toRead.map { case (sc, path) =>
+        val columns = read.columns(path)
+        val n = name(sc, columns)
+        columns.indices.filter(i => columns(i).equalsIgnoreCase(n)) match {
+          case Seq(i) => path -> (i + 1)
+          case found => throw new IllegalArgumentException(
+            s"$path: ${found.size} columns named $n in ${columns.mkString(", ")}")
+        }
+      }.toMap
+      element_at(col("fields"), element_at(typedLit(at), col("path")))
+    }
+    // the reference filters the literal `Latitude` column (F2)
+    val f2 = field((sc, columns) => if (columns.contains("Latitude")) "Latitude" else sc.latCol)
+    val siteFeats = read.rows
+      .filter(f2.cast("double") <= 90)
+      .select(col("path"), col("fields"), GeoFunctions.wktPoint(
+        field((sc, _) => sc.lonCol).cast("double"), field((sc, _) => sc.latCol).cast("double")).as("_wkt"))
+      .collect()
+      .groupBy(_.getString(0))
+      .map { case (path, fileRows) => path -> fileRows.toSeq.map(r =>
+        (r.getString(2), read.columns(path).zip(r.getSeq[String](1)))) }
+    val csvIdentifiers = sites.flatMap { case (_, idents, toWrite, path) =>
+      toWrite.foreach(writeFeatures(outDir, _, siteFeats.getOrElse(path, Seq.empty)))
       idents
     }
 

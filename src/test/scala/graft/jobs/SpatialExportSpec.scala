@@ -3,7 +3,8 @@ package graft.jobs
 import java.nio.file.{Files, Paths}
 
 import graft.SparkSpec
-import graft.io.Shapefile
+import graft.functions.GeoFunctions
+import graft.io.{Shapefile, ShapefileWriter}
 import org.apache.spark.sql.functions._
 
 /** E1 stage 4 (spatial export): file-level assertions against the
@@ -151,6 +152,66 @@ class SpatialExportSpec extends SparkSpec {
     assert(r.missingSpatial.collect().map(row => (row.getString(0), row.getString(1), row.getString(2))).toSeq
       === missing)
     assert(r.missingIdentifiers === missing.map(_._2))
+  }
+
+  test("hostile site CSVs: step 2 writes what per-file reads, the F2 filter and the WKT points wrote") {
+    import spark.implicits._
+    val dataDir = Files.createTempDirectory("graft_site_data")
+    Files.createDirectories(dataDir.resolve("largeCSVsites_final"))
+    val inputs = Seq(
+      // ragged rows, CRLF
+      ("Movebank", "movebank",
+        "event_id,Latitude,Longitude,attr\r\n1,10.5,20.5,a\r\n2,11.5\r\n3,12.5,22.5,c,x,y\r\n4,95,1,d\r\n"),
+      // registered on MID_*, filtered on the literal Latitude (F2)
+      ("Australian continuous plankton recorder survey (AusCPR)", "auscpr",
+        "TRIP_CODE,MID_LATITUDE,MID_LONGITUDE,Latitude,Longitude\nt1,10,20,95,1\nt2,abc,21,45,2\nt3,91,22,NA,3\n"),
+      // no literal Latitude: the registered column resolves case-insensitively
+      ("Reef Life Survey", "reef_life_survey",
+        "Site,latitude,LONGITUDE,Site,NA\na,1,2,b,c\nd,91,3,e,f\ng,-5,,h,\n"),
+      // header only
+      ("eOceans", "eoceans", "Network Name,Latitude,Longitude\n"),
+      // junk and > 90 latitudes, quoting, NA and blank values
+      ("Global ARMS Program", "global_arms_program",
+        "Network Name,Latitude,Longitude,Note\n\"a, b\",91,1,x\nc,junk,2,\"\"\ne, 45 ,3,NA\nf,1e1,4,\ng,90.0,,h\n"))
+    val registered = SpatialExport.siteCsvs.map(sc => sc.name -> sc).toMap
+    inputs.foreach { case (name, _, body) =>
+      Files.write(dataDir.resolve(s"largeCSVsites_final/${registered(name).file}"), body.getBytes("UTF-8"))
+    }
+    val combined = inputs.map { case (name, id, _) => (name, id, null: String, s"u_$id") }
+      .toDF("name", "identifier", "geometry_geojson", "url")
+    val out = Files.createTempDirectory("graft_site_out").toString
+    SpatialExport.run(spark, combined, dataDir.toString, out)
+
+    // the oracle: one spark.read per file, filtered and written as before
+    val expected = Files.createTempDirectory("graft_site_expected").toString
+    inputs.foreach { case (name, id, _) =>
+      val sc = registered(name)
+      val raw = spark.read.option("header", "true").option("mode", "PERMISSIVE")
+        .option("nullValue", "NA").csv(s"$dataDir/largeCSVsites_final/${sc.file}")
+      val df = raw.select(raw.columns.map(c => when(col(s"`$c`") === "", lit(null))
+        .otherwise(col(s"`$c`")).as(c)): _*)
+      val latName = if (df.columns.contains("Latitude")) "Latitude" else sc.latCol
+      val feats = df.filter(col(s"`$latName`").cast("double") <= 90)
+        .withColumn("_wkt", GeoFunctions.wktPoint(
+          col(s"`${sc.lonCol}`").cast("double"), col(s"`${sc.latCol}`").cast("double")))
+        .collect().toSeq
+        .map(r => (r.getAs[String]("_wkt"), r.schema.fieldNames.filterNot(_ == "_wkt").toSeq
+          .map(f => f -> Option(r.getAs[Any](f)).map(_.toString).orNull)))
+      val fields = feats.flatMap(_._2.map(_._1)).distinct
+      ShapefileWriter.write(s"$expected/$id", id, fields,
+        feats.map { case (w, props) => val m = props.toMap; (w, fields.map(f => m.get(f).orNull)) })
+    }
+    inputs.foreach { case (_, id, _) =>
+      SpatialExportSpec.bundle(id).foreach { f =>
+        assert(Files.readAllBytes(Paths.get(out, id, f)).sameElements(Files.readAllBytes(Paths.get(expected, id, f))),
+          s"$id/$f differs from the per-file read")
+      }
+    }
+    // the filter kept something and dropped something
+    def features(id: String) = Shapefile.read(Paths.get(out, id, s"$id.shp").toString)._2
+    assert(features("auscpr").length === 1)
+    assert(features("movebank").length === 3)
+    assert(features("eoceans").isEmpty)
   }
 }
 

@@ -64,6 +64,7 @@ for name, sql in sorted(oracle.items()):
     files = glob.glob(f"{spark_dir}/*.parquet")
     if not files:
         fails.append((name, "no spark output"))
+        print(f"FAIL {name}  no spark output")
         results[name] = {"status": "FAIL", "msg": "no spark output"}
         continue
     try:
@@ -72,9 +73,10 @@ for name, sql in sorted(oracle.items()):
         sdf = con.execute(f"SELECT * FROM '{spark_dir}/*.parquet'").fetchdf()
         odf = con.execute(sql).fetchdf()
     except Exception as e:
+        sec = round(time.monotonic() - t0, 2)
         fails.append((name, f"err {e}"))
-        results[name] = {"status": "FAIL", "msg": f"err {e}",
-                         "sec": round(time.monotonic() - t0, 2)}
+        print(f"FAIL {name}  [{sec}s]  err {e}")
+        results[name] = {"status": "FAIL", "msg": f"err {e}", "sec": sec}
         continue
     # portability lint: the driver's hasher canonicalizes DuckDB HUGEINT
     # (int128) differently from Spark's int64, so an oracle must never
