@@ -267,98 +267,6 @@ object OracleSql {
     residueSharded(chain, outCte = "gtr", finalSql = sb.toString)
   }
 
-  /** [[gdTrainerSql]] factored for PER-ITERATION scale verification
-    * (the q178 30×/100× gate, where the full 6-iteration WITH-chain
-    * replay costs tens of DuckDB-minutes): the expensive term-stream
-    * derivation materializes ONCE (`prefix` — CREATE TABLE statements
-    * for `gtr`/`gcnt`/`gn` over a `documents` view), then `step`
-    * replays ONE weight update from an injected `gwin(b, w)` table and
-    * `score` replays the final 6-dp scores from the final weights —
-    * both sharded by `doc_id % {NSHARDS}` (placeholders the checker
-    * fills) so the per-doc ordered-list state stays bounded; returns
-    * (prefix creates, sharded step partial, weight update, sharded
-    * score).
-    * Each iteration check is independent given the engine's exported
-    * per-iteration weights, so iteration t's full 1024-weight vector
-    * is hash-compared inductively: w₀ = 0 by construction, and every
-    * wₜ → wₜ₊₁ transition is re-derived by an independent engine.
-    * Arithmetic is character-identical to [[gdTrainerSql]]'s.
-    */
-  def gdTrainerStepSql(m: Int, lr: Double): (Seq[String], String, String, String) = {
-    val prefix = Seq(
-      s"""CREATE TABLE gtr AS WITH ldocs AS (
-         |  SELECT doc_id,
-         |    CAST(CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END AS DOUBLE) AS y,
-         |    text
-         |  FROM documents
-         |), gtoks AS (
-         |  SELECT doc_id, y, list_filter(string_split_regex(lower(${caseFold("text")}), '\\s+'),
-         |    t -> t <> '') AS tk
-         |  FROM ldocs
-         |), gterms AS (
-         |  SELECT doc_id, y, tk || [tk[i] || ' ' || tk[i+1] FOR i IN range(1, len(tk))] AS ts
-         |  FROM gtoks
-         |), gtr0 AS (
-         |  SELECT doc_id, y, generate_subscripts(ts, 1) AS ord, unnest(ts) AS t FROM gterms
-         |), gh1 AS (
-         |  SELECT doc_id, y, ord, ${poly31("t")} AS pt FROM gtr0
-         |)
-         |SELECT doc_id, y, ord, CAST(${mix64("pt")} % $m AS INT) AS bu FROM gh1""".stripMargin,
-      s"""CREATE TABLE gcnt AS
-         |SELECT doc_id, max(y) AS y, CAST(count(*) AS DOUBLE) AS cnt
-         |FROM gtr GROUP BY doc_id""".stripMargin,
-      s"""CREATE TABLE gn AS SELECT CAST(count(*) AS DOUBLE) AS n FROM gcnt""".stripMargin)
-    // the per-doc z (ordered-list fold over 53M+ rows at 100×) is the
-    // memory hot spot — DuckDB's in-aggregate ORDER BY cannot spill.
-    // The gradient sum is an EXACT integer, so it decomposes over any
-    // doc partition: the checker runs `stepPartial` once per
-    // {SHARD}-of-{NSHARDS} doc slice (bounded list state), accumulates
-    // the per-bucket BIGINT partials in a `ggacc` table, and `update`
-    // folds the exact total into the next weight vector — bit-identical
-    // to the unsharded sum by integer associativity.
-    val stepPartial =
-      s"""WITH gz AS (
-         |  SELECT g.doc_id, c.y, c.cnt,
-         |    (${foldSum("list(w.w ORDER BY g.ord)")} / c.cnt) AS z
-         |  FROM gtr g JOIN gwin w ON w.b = g.bu
-         |  JOIN gcnt c ON c.doc_id = g.doc_id
-         |  WHERE g.doc_id % {NSHARDS} = {SHARD}
-         |  GROUP BY g.doc_id, c.y, c.cnt
-         |)
-         |SELECT b, sum(CAST(CASE WHEN gv >= 0
-         |    THEN floor(abs(gv) * 1000000000.0 + 0.5)
-         |    ELSE -floor(abs(gv) * 1000000000.0 + 0.5) END AS BIGINT)) AS gs
-         |FROM (SELECT g.bu AS b,
-         |        ((((0.5 + 0.5 * (z.z / (1.0 + abs(z.z)))) - z.y) * 0.5
-         |          / ((1.0 + abs(z.z)) * (1.0 + abs(z.z)))) / z.cnt) AS gv
-         |      FROM gtr g JOIN gz z ON z.doc_id = g.doc_id)
-         |GROUP BY b""".stripMargin
-    val update =
-      s"""SELECT w.b, round(w.w - $lr * (CAST(coalesce(g.gs, 0) AS DOUBLE)
-         |  / 1000000000.0) / (SELECT n FROM gn), 6) AS w
-         |FROM gwin w LEFT JOIN (
-         |  SELECT b, CAST(sum(gs) AS BIGINT) AS gs FROM ggacc GROUP BY b) g
-         |ON g.b = w.b ORDER BY w.b""".stripMargin
-    val score =
-      s"""WITH gzf AS (
-         |  SELECT g.doc_id, (${foldSum("list(w.w ORDER BY g.ord)")} / c.cnt) AS z
-         |  FROM gtr g JOIN gwin w ON w.b = g.bu
-         |  JOIN gcnt c ON c.doc_id = g.doc_id
-         |  WHERE g.doc_id % {NSHARDS} = {SHARD}
-         |  GROUP BY g.doc_id, c.cnt
-         |), ldocs AS (
-         |  SELECT doc_id,
-         |    CAST(CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END AS DOUBLE) AS y
-         |  FROM documents
-         |  WHERE doc_id % {NSHARDS} = {SHARD}
-         |)
-         |SELECT d.doc_id, d.y,
-         |  round(CASE WHEN z.z IS NULL THEN 0.5
-         |        ELSE 0.5 + 0.5 * (z.z / (1.0 + abs(z.z))) END, 6) AS score
-         |FROM ldocs d LEFT JOIN gzf z ON z.doc_id = d.doc_id""".stripMargin
-    (prefix, stepPartial, update, score)
-  }
-
   /** The full [[graft.operators.KMeans]] Lloyd's loop as DuckDB CTEs —
     * expects a prior CTE `base(vec_id, embedding FLOAT[])`; emits
     * `vnn` (double-normalized vectors) through `a$iters`, the final

@@ -1931,8 +1931,8 @@ object Queries {
         // on the dedicated case twin (`tools/unicode_corpus.py
         // <src> <dst> case`) this oracle replays GREEN where the other
         // text oracles would diverge — which is why İ / word-final Σ
-        // stay excluded from the corpus-wide planting (ScaleGen /
-        // unicode_corpus default mode) and the boundary is pinned here
+        // stay excluded from the corpus-wide planting (unicode_corpus
+        // default mode) and the boundary is pinned here
         // per-query instead. FunctionsSpec pins the Spark side of the
         // same tokens.
         val toks = documents(s, d).select(

@@ -16,10 +16,6 @@ object StringFunctions {
     * notebooks/index.Rmd:64). */
   def naIfBlank(c: Column): Column = when(trim(c) === "", lit(null)).otherwise(c)
 
-  /** Any non-null → true (reference `ifelse(is.na(.), FALSE, TRUE)`,
-    * notebooks/index.Rmd:99). */
-  def flagNotNull(c: Column): Column = c.isNotNull
-
   /** Non-null and equal to `marker` → true else false (reference
     * `ifelse(!is.na(.) & . == "x", TRUE, FALSE)`, notebooks/index.Rmd:171). */
   def flagEquals(c: Column, marker: String): Column =
@@ -57,8 +53,4 @@ object StringFunctions {
   def sqlLiteral(c: Column): Column =
     when(c.isNull, lit("null"))
       .otherwise(concat(lit("'"), regexp_replace(c, "'", "''"), lit("'")))
-
-  /** null-skipping " - "-joined concat (reference
-    * `concat(organization, name, sep = " - ")`, notebooks/index.Rmd:330). */
-  def concatWsSkipNull(sep: String, cols: Column*): Column = concat_ws(sep, cols: _*)
 }

@@ -99,13 +99,6 @@ object TextFunctions {
     "de" -> Seq("der", "ein", "sch", "ich", "nde", "die", "und", "cht"),
     "fr" -> Seq("les", "ent", "que", "des", "ion", "eur", "ait", "ous"))
 
-  /** Character trigrams of the lowercased, whitespace-squashed text. */
-  def charTrigrams(text: Column): Column = {
-    val s = regexp_replace(lower(trim(text)), graft.plans.Kernels.WsRun, " ")
-    transform(sequence(lit(1), greatest(length(s) - 2, lit(1))),
-      i => s.substr(i, lit(3)))
-  }
-
   /** Language-ID by trigram-profile hit rate; returns the best-scoring
     * language code or "und" when nothing matches. Single-pass kernel
     * (32 substring probes + argmax per row); ties resolve to the

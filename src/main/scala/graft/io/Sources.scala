@@ -8,7 +8,7 @@ import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.csv.CSVOptions
-import org.apache.spark.sql.execution.datasources.{HadoopFileLinesReader, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.{CodecStreams, HadoopFileLinesReader, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
@@ -31,13 +31,8 @@ object Sources {
     * semantics: both the empty string and the literal "NA" read as null.
     */
   def surveyCsv(spark: SparkSession, path: String): DataFrame =
-    spark.read
-      .option("header", "true")
-      .option("multiLine", "true")
-      .option("escape", "\"")
-      .option("nullValue", "NA")
-      .csv(path)
-      .transform(blankToNull)
+    readWithHeader(spark, path,
+      Map("header" -> "true", "multiLine" -> "true", "escape" -> "\"", "nullValue" -> "NA"))
 
   /** The site CSVs as [[siteCsvs]] reads them: `columns` holds each
     * path's column names; `rows` holds one row per data line of every
@@ -67,25 +62,8 @@ object Sources {
     * no columns and no rows, and is not scanned. No path, no read.
     */
   def siteCsvs(spark: SparkSession, paths: Seq[String]): SiteCsvs = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val options = new CSVOptions(siteOptions, true, spark.conf.get("spark.sql.session.timeZone"))
-    val caseSensitive = spark.conf.get("spark.sql.caseSensitive").toBoolean
-    // (path, the scan's `_metadata.file_path` for it, its column names)
-    val files = paths.distinct.map { p =>
-      val path = new Path(p)
-      val fs = path.getFileSystem(conf)
-      val file = SparkPath.fromPath(fs.makeQualified(path))
-      val lines = new HadoopFileLinesReader(
-        PartitionedFile(InternalRow.empty, file, 0, fs.getFileStatus(path).getLen), None, conf)
-      val header = try CSVUtils.filterCommentAndEmpty(
-          lines.map(t => new String(t.getBytes, 0, t.getLength, UTF_8)), options).nextOption()
-        finally lines.close()
-      val columns = header.map(h => CSVUtils.makeSafeHeader(
-        new CsvParser(options.asParserSettings).parseLine(h), caseSensitive, options).toSeq)
-      // `_metadata.file_path` as Spark derives it from the scanned file
-      (p, new Path(file.toPath.toString).toUri.toString, columns.getOrElse(Nil))
-    }
-    val scans = files.filter(_._3.nonEmpty).groupBy(_._3).toSeq.map { case (columns, group) =>
+    val files = paths.distinct.map(p => p -> header(spark, p, siteOptions))
+    val scans = files.filter(_._2.columns.nonEmpty).groupBy(_._2.columns).toSeq.map { case (columns, group) =>
       val positional = columns.indices.map(i => s"_c$i")
       spark.read.schema(StructType(columns.map(StructField(_, StringType))))
         .options(siteOptions)
@@ -94,28 +72,70 @@ object Sources {
         .select(col("*"), col("_metadata.file_path"))
         .toDF(positional :+ "_file": _*)
         .select(
-          coalesce(element_at(typedLit(group.map(f => f._2 -> f._1).toMap), col("_file")),
+          coalesce(element_at(typedLit(group.map(f => f._2.filePath -> f._1).toMap), col("_file")),
             raise_error(concat(lit("site CSV read an unrequested file "), col("_file")))).as("path"),
           array(positional.map(c => blankToNull(col(c))): _*).as("fields"))
     }
     val none = StructType(Seq(StructField("path", StringType), StructField("fields", ArrayType(StringType))))
-    SiteCsvs(files.map(f => f._1 -> f._3).toMap,
+    SiteCsvs(files.map(f => f._1 -> f._2.columns).toMap,
       scans.reduceOption(_ union _)
         .getOrElse(spark.createDataFrame(java.util.Collections.emptyList[Row](), none)))
   }
 
   /** TSV (S6, notebooks/index.Rmd:531). */
   def tsv(spark: SparkSession, path: String): DataFrame =
-    spark.read
-      .option("header", "true")
-      .option("sep", "\t")
-      .option("nullValue", "NA")
-      .csv(path)
-      .transform(blankToNull)
+    readWithHeader(spark, path, Map("header" -> "true", "sep" -> "\t", "nullValue" -> "NA"))
 
   /** Plain CSV for DB backups (S12, data/layers_layer_eovs.csv). */
   def csv(spark: SparkSession, path: String): DataFrame =
     spark.read.option("header", "true").option("nullValue", "NA").csv(path)
+
+  /** `spark.read.options(options).csv(path)` with blank→null, given
+    * the all-string schema Spark would infer for the file ([[header]]),
+    * so building the frame runs no Spark job.
+    */
+  private def readWithHeader(spark: SparkSession, path: String, options: Map[String, String]): DataFrame =
+    spark.read.schema(StructType(header(spark, path, options).columns.map(StructField(_, StringType))))
+      .options(options)
+      .csv(path)
+      .transform(blankToNull)
+
+  /** A file's column names, and its path as `_metadata.file_path` spells it. */
+  private final case class Header(filePath: String, columns: Seq[String])
+
+  /** One file's header as `spark.read.options(options).csv(path)` infers
+    * it, read on the driver the way Spark's schema inference reads it.
+    * Under `multiLine` that is the first record of the file's token
+    * stream, so a quoted name may span lines; otherwise it is the first
+    * line that is neither blank nor a comment (Spark's line reader),
+    * parsed on its own. Either way Spark's header rule then applies: a
+    * blank or `NA` name becomes `_c<i>`, a duplicated one gets its index
+    * appended. No header record, no columns.
+    */
+  private def header(spark: SparkSession, path: String, options: Map[String, String]): Header = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val csvOptions = new CSVOptions(options, true, spark.conf.get("spark.sql.session.timeZone"))
+    val hadoopPath = new Path(path)
+    val fs = hadoopPath.getFileSystem(conf)
+    val file = SparkPath.fromPath(fs.makeQualified(hadoopPath))
+    val parser = new CsvParser(csvOptions.asParserSettings)
+    val first =
+      if (csvOptions.multiLine) {
+        // Spark's `UnivocityParser.tokenizeStream` over the file, first record
+        parser.beginParsing(CodecStreams.createInputStream(conf, file.toPath), csvOptions.charset)
+        try Option(parser.parseNext()) finally parser.stopParsing()
+      } else {
+        val lines = new HadoopFileLinesReader(
+          PartitionedFile(InternalRow.empty, file, 0, fs.getFileStatus(hadoopPath).getLen), None, conf)
+        try CSVUtils.filterCommentAndEmpty(
+            lines.map(t => new String(t.getBytes, 0, t.getLength, UTF_8)), csvOptions)
+          .nextOption().flatMap(line => Option(parser.parseLine(line)))
+        finally lines.close()
+      }
+    val caseSensitive = spark.conf.get("spark.sql.caseSensitive").toBoolean
+    Header(new Path(file.toPath.toString).toUri.toString,
+      first.map(CSVUtils.makeSafeHeader(_, caseSensitive, csvOptions).toSeq).getOrElse(Nil))
+  }
 
   /** R `type.convert` treats "" as NA in every column; Spark leaves
     * quoted empty strings as "". Normalize once at the source.

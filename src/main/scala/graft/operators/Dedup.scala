@@ -554,9 +554,8 @@ object Dedup {
               "enumerate anyway.")
         // a cap past Int.MaxValue-2 cannot be bound-checked by a driver
         // collect (limit is Int-sized): the old clamp would try to
-        // fetch ~2^31 rows before discovering the set is over-cap (the
-        // same latent truncation/OOM pattern the r15 advisor flagged in
-        // contaminationStream) — route it straight to the exact
+        // fetch ~2^31 rows before discovering the set is over-cap (a
+        // latent truncation/OOM) — route it straight to the exact
         // shuffled gate instead, which never collects the key set
         val eligible =
           if (maxBroadcastShingles <= Int.MaxValue - 2L)

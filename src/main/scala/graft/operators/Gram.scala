@@ -85,33 +85,4 @@ object Gram {
         StructField("j", LongType, nullable = false),
         StructField("cov", DoubleType, nullable = false))))
   }
-
-  /** Leading eigenvector of the covariance matrix by deterministic
-    * power iteration on the driver-side dim×dim matrix (model-scale) —
-    * the top principal direction for quick corpus-drift checks. Start
-    * vector = e₀; sign fixed so the largest-|component| is positive.
-    */
-  def topPrincipalDirection(df: DataFrame, vecCol: String, dim: Int,
-                            iters: Int = 50): Array[Double] = {
-    val cov = Array.ofDim[Double](dim, dim)
-    covarianceMatrix(df, vecCol, dim).collect().foreach { r =>
-      val (i, j, c) = (r.getLong(0).toInt, r.getLong(1).toInt, r.getDouble(2))
-      cov(i)(j) = c; cov(j)(i) = c
-    }
-    var v = Array.tabulate(dim)(i => if (i == 0) 1.0 else 0.0)
-    var it = 0
-    while (it < iters) {
-      val nv = Array.tabulate(dim)(i => {
-        var s = 0.0
-        var j = 0
-        while (j < dim) { s += cov(i)(j) * v(j); j += 1 }
-        s
-      })
-      val nrm = math.sqrt(nv.map(x => x * x).sum)
-      v = if (nrm == 0.0) nv else nv.map(_ / nrm)
-      it += 1
-    }
-    val maxIdx = v.indices.maxBy(i => math.abs(v(i)))
-    if (v(maxIdx) < 0) v.map(-_) else v
-  }
 }

@@ -105,36 +105,6 @@ object Multimodal {
     }(Encoders.product[ImageMeta]).toDF()
   }
 
-  /** Resize: deterministic nearest-neighbor downsample of the fake
-    * payload to (newW × newH) — new binary out, same container format.
-    */
-  def resizeImages(df: DataFrame, idCol: String, binCol: String,
-                   newW: Int, newH: Int): DataFrame = {
-    val ds = df.select(col(idCol).cast("long").as("id"), col(binCol).as("content"))
-      .as(Encoders.tuple(Encoders.scalaLong, Encoders.BINARY))
-    ds.mapPartitions { it =>
-      it.map { case (id, bytes) =>
-        val b = java.nio.ByteBuffer.wrap(bytes)
-        require(b.getInt() == ImageMagic)
-        val w = b.getInt(); val h = b.getInt()
-        val out = java.nio.ByteBuffer.allocate(12 + newW * newH)
-        out.putInt(ImageMagic).putInt(newW).putInt(newH)
-        var y = 0
-        while (y < newH) {
-          var x = 0
-          while (x < newW) {
-            val sx = x * w / newW; val sy = y * h / newH
-            out.put(bytes(12 + sy * w + sx))
-            x += 1
-          }
-          y += 1
-        }
-        (id, out.array())
-      }
-    }(Encoders.tuple(Encoders.scalaLong, Encoders.BINARY))
-      .toDF("id", "content")
-  }
-
   case class Frame(id: Long, frame_idx: Int, frame: Array[Byte])
 
   /** Frame sampling: every `everyN`-th frame of a video binary becomes

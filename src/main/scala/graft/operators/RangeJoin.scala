@@ -78,26 +78,4 @@ object RangeJoin {
 
     bucketed.unionByName(viaBroadcast)
   }
-
-  /** [[bucketedRangeJoin]] with the bucket width derived from the data:
-    * the median interval span (one cheap `approx_percentile` pass over
-    * the interval side). Median-width buckets balance the two failure
-    * modes a fixed width risks — too narrow (explode factor = span/width
-    * rows per interval) and too wide (every candidate pair co-bucketed,
-    * filter does all the work). Degenerate all-zero-span inputs fall
-    * back to `minWidth`.
-    */
-  def bucketedRangeJoinAuto(points: DataFrame, intervals: DataFrame,
-                            keys: Seq[String], pointCol: String,
-                            startCol: String, endCol: String,
-                            minWidth: Double = 1e-9,
-                            maxBucketsPerInterval: Int = 4096): DataFrame = {
-    val w = intervals
-      .select(percentile_approx((col(endCol) - col(startCol)).cast("double"),
-        lit(0.5), lit(1000)).as("w"))
-      .head().getDouble(0)
-    bucketedRangeJoin(points, intervals, keys, pointCol, startCol, endCol,
-      bucketWidth = math.max(w, minWidth),
-      maxBucketsPerInterval = maxBucketsPerInterval)
-  }
 }

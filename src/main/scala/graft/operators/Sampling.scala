@@ -151,45 +151,6 @@ object Sampling {
         col("split"), col("weight"))
   }
 
-  /** Weighted corpus mix: unions a deterministic `fraction`-sample of
-    * each source (aligned by name, missing columns null). The standard
-    * "mix N datasets at given rates" step of a training-data pipeline;
-    * each source keeps its own stable key so re-mixing with a new
-    * source leaves previous selections unchanged.
-    */
-  def weightedMix(sources: Seq[(DataFrame, Column, Double)]): DataFrame = {
-    require(sources.nonEmpty)
-    sources.map { case (df, key, f) => hashSample(df, key, f) }
-      .reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
-  }
-
-  /** Temperature-smoothed mixture allocation: apportion an integer
-    * document `budget` across the values of `sourceCol` with weights
-    * `w_s ∝ n_s^0.5` — the standard "upsample the tail, downsample the
-    * head" data-mixing step (α-temperature sampling with α = 1/2) used
-    * to pick per-source quotas before building a training mix.
-    *
-    * Output: one row per source — `(source, n_docs, weight_ppm,
-    * alloc)` with `sum(alloc) = budget` exactly.
-    *
-    * Determinism contract (cross-engine oracle parity): `sqrt` is
-    * correctly rounded by IEEE-754 in every engine, and its result is
-    * immediately graded to integer micro-units (`round(sqrt(n)·1e6)`),
-    * so all downstream arithmetic — the weight normalization, the
-    * floor quotas `budget·s div total`, and the largest-remainder
-    * (Hamilton) distribution of the leftover — is exact integer math
-    * with ties broken on the source key. No order-unspecified FP sum
-    * anywhere.
-    *
-    * Scale shape: ONE distributed aggregation (groupBy(source).count —
-    * map-side partial combine, shuffle of |sources| rows); the
-    * apportionment itself runs on the driver over the source domain,
-    * which is key-space-bounded (a corpus has thousands of sources,
-    * not billions) and capped by `maxSources` — the same bounded-
-    * domain driver-fold contract as the KS bin offsets. Long-overflow
-    * guard: `budget · s_max` must fit in a long, i.e.
-    * budget · sqrt(n_max) < 9.2e12 — checked at runtime.
-    */
   /** UniMax epoch-capped uniform allocation (Chung et al., "UniMax:
     * Fairer and More Effective Language Sampling", ICLR 2023):
     * apportion an integer `budget` across the values of `sourceCol` as
@@ -279,6 +240,33 @@ object Sampling {
       spark.sparkContext.parallelize(rows.toIndexedSeq, 1), schema)
   }
 
+  /** Temperature-smoothed mixture allocation: apportion an integer
+    * document `budget` across the values of `sourceCol` with weights
+    * `w_s ∝ n_s^0.5` — the standard "upsample the tail, downsample the
+    * head" data-mixing step (α-temperature sampling with α = 1/2) used
+    * to pick per-source quotas before building a training mix.
+    *
+    * Output: one row per source — `(source, n_docs, weight_ppm,
+    * alloc)` with `sum(alloc) = budget` exactly.
+    *
+    * Determinism contract (cross-engine oracle parity): `sqrt` is
+    * correctly rounded by IEEE-754 in every engine, and its result is
+    * immediately graded to integer micro-units (`round(sqrt(n)·1e6)`),
+    * so all downstream arithmetic — the weight normalization, the
+    * floor quotas `budget·s div total`, and the largest-remainder
+    * (Hamilton) distribution of the leftover — is exact integer math
+    * with ties broken on the source key. No order-unspecified FP sum
+    * anywhere.
+    *
+    * Scale shape: ONE distributed aggregation (groupBy(source).count —
+    * map-side partial combine, shuffle of |sources| rows); the
+    * apportionment itself runs on the driver over the source domain,
+    * which is key-space-bounded (a corpus has thousands of sources,
+    * not billions) and capped by `maxSources` — the same bounded-
+    * domain driver-fold contract as the KS bin offsets. Long-overflow
+    * guard: `budget · s_max` must fit in a long, i.e.
+    * budget · sqrt(n_max) < 9.2e12 — checked at runtime.
+    */
   def temperatureAllocate(df: DataFrame, sourceCol: Column, budget: Long,
                           maxSources: Int = 100000): DataFrame = {
     require(budget > 0, s"budget must be positive, got $budget")

@@ -44,21 +44,7 @@ object Trainer {
     */
   def trainHashedLinear(df: DataFrame, textCol: String, labelCol: String,
                         m: Int = 256, iters: Int = 3,
-                        lr: Double = 4.0): Array[Double] =
-    trainHashedLinearHistory(df, textCol, labelCol, m, iters, lr).last
-
-  /** [[trainHashedLinear]] keeping EVERY iteration's weight vector
-    * (`iters + 1` entries, w₀ = zeros first) — the artifact the scale
-    * verification harness (`graft.TrainerDump` +
-    * `tools/q178_scale_check.py`) hash-compares per iteration: with
-    * the engine's wₜ injected, an independent replay of one update
-    * must reproduce wₜ₊₁ digit-for-digit, turning the unaffordable
-    * full-loop oracle at 30×/100× into `iters` independent one-pass
-    * checks over a once-materialized term stream.
-    */
-  def trainHashedLinearHistory(df: DataFrame, textCol: String, labelCol: String,
-                               m: Int = 256, iters: Int = 3,
-                               lr: Double = 4.0): Seq[Array[Double]] = {
+                        lr: Double = 4.0): Array[Double] = {
     require(m >= 2 && m <= 4096,
       s"bucket count m must be in [2, 4096] (in-plan literal bound), got $m")
     require(iters >= 1 && iters <= 64, s"iters must be in [1, 64], got $iters")
@@ -70,8 +56,6 @@ object Trainer {
     try {
     val n = feat.count().toDouble   // also materializes the cache
     var w = new Array[Double](m)
-    val hist = Seq.newBuilder[Array[Double]]
-    hist += w.clone()
     var t = 0
     while (t < iters && n > 0) {
       val wlit = typedLit(w.toSeq)
@@ -113,11 +97,9 @@ object Trainer {
       val next = w.clone()
       upd.foreach(r => next(r.getInt(0)) = r.getDouble(1))
       w = next
-      hist += w.clone()
       t += 1
     }
-    while (t < iters) { hist += w.clone(); t += 1 } // n == 0 degenerate
-    hist.result()
+    w
     // finally (not tail): a failed iteration must not strand the
     // corpus-scale feature cache for the life of the session
     } finally feat.unpersist(blocking = false)

@@ -2,30 +2,37 @@ package graft.io
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path}
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
-import org.apache.spark.sql.AnalysisException
+import graft.jobs.LoadPortal
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** [[Sources.siteCsvs]] against its oracle: each file read on its own by
-  * `spark.read` with the site-CSV options, blank → null. Every hostile
-  * file must come back with the same column names, and the same values
-  * in the same row order.
+/** [[Sources]]' header-driven reads against their oracle: each file read
+  * on its own by `spark.read` with the reader's options (schema
+  * inferred), blank → null. Every hostile file must come back with the
+  * same column names, and the same values in the same row order.
   */
 class SiteCsvSpec extends SparkSpec {
 
-  /** The per-file read the multi-file reader replaces. */
-  private def oracle(path: String): (Seq[String], Seq[Seq[String]]) = {
-    val df = spark.read
-      .option("header", "true")
-      .option("mode", "PERMISSIVE")
-      .option("nullValue", "NA")
-      .csv(path)
+  private val siteOptions = Map("header" -> "true", "mode" -> "PERMISSIVE", "nullValue" -> "NA")
+  private val surveyOptions =
+    Map("header" -> "true", "multiLine" -> "true", "escape" -> "\"", "nullValue" -> "NA")
+  private val tsvOptions = Map("header" -> "true", "sep" -> "\t", "nullValue" -> "NA")
+
+  /** The per-file read each reader must equal. */
+  private def oracle(path: String, options: Map[String, String] = siteOptions): (Seq[String], Seq[Seq[String]]) =
+    rowsOf(spark.read.options(options).csv(path))
+
+  private def rowsOf(df: DataFrame): (Seq[String], Seq[Seq[String]]) =
     (df.columns.toSeq, df.collect().toSeq.map(_.toSeq.map {
       case "" => null
       case v => v.asInstanceOf[String]
     }))
-  }
 
   private def write(dir: Path, name: String, body: String): String = {
     val p = dir.resolve(name)
@@ -106,5 +113,120 @@ class SiteCsvSpec extends SparkSpec {
     val read = Sources.siteCsvs(spark, Seq(blank))
     assert(read.columns === Map(blank -> Nil))
     assert(read.rows.filter(col("path") === blank).collect().isEmpty)
+  }
+
+  /** `read` against the per-file oracle under `options`, file by file. */
+  private def checkEach(paths: Seq[String], options: Map[String, String])(read: String => DataFrame): Unit =
+    paths.foreach { p =>
+      val (columns, expected) = oracle(p, options)
+      val (gotColumns, got) = rowsOf(read(p))
+      assert(gotColumns === columns, s"columns of $p")
+      assert(got === expected, s"rows of $p")
+    }
+
+  /** Survey exports: quoted multi-line records, a quoted multi-line
+    * header name, and FIXTURES §2's null cases (`""`/`NA` years, all-null
+    * EOV marks).
+    */
+  private def hostileSurveys(dir: Path): Seq[String] = Seq(
+    // BOM; a header name with a line break, NA, blank and duplicated names
+    write(dir, "Survey.csv",
+      "\uFEFFprog_name,\"Program\nname\",NA,,duration_start_year,prog_name,Birds,Fish\n" +
+        "\"Reef\nsurvey, \"\"north\"\"\",x,a,b,\"\",r2,,\n" +
+        "NA,y,,c,2020,r3,X,\n" +
+        ",\"\",NA,d,junk,,,X\n" +
+        "\"last\",z,e,f,NA,NA,,\n"),
+    // CRLF records, a quoted CRLF inside a field, blank lines before the header
+    write(dir, "Crlf.csv", "\r\n\r\nprog_name,freq_interval\r\n\"a\r\nb\",Monthly\r\nc,\r\n"),
+    // quoted header names, one of them blank, and a short row
+    write(dir, "Quoted header.csv", "\"prog name\",\"\",\"x,y\"\n1,2,3\n4\n"),
+    write(dir, "Header only.csv", "prog_name,Birds\n"),
+    write(dir, "Empty.csv", ""))
+
+  /** Basque-style TSVs. */
+  private def hostileTsvs(dir: Path): Seq[String] = Seq(
+    // BOM; NA, blank and duplicated (also case-insensitively) names
+    write(dir, "Stations.tsv", "\uFEFFx\tNA\t\ty\tX\tx\n1\t2\t3\t4\t5\t6\nNA\t\t\"\"\t7\n"),
+    // CRLF, blank lines before and among the rows, quoted tab
+    write(dir, "Crlf.tsv", "\r\n  \r\nx\ty\r\n597007\t4805570\r\n\r\n\"a\tb\"\tNA\r\n"),
+    write(dir, "Header only.tsv", "x\ty\n"),
+    write(dir, "Empty.tsv", ""))
+
+  test("surveyCsv reads each hostile survey as its own inferred-schema read would") {
+    checkEach(hostileSurveys(Files.createTempDirectory("graft_survey_csv")), surveyOptions)(
+      Sources.surveyCsv(spark, _))
+  }
+
+  test("tsv reads each hostile TSV as its own inferred-schema read would") {
+    checkEach(hostileTsvs(Files.createTempDirectory("graft_tsv")), tsvOptions)(Sources.tsv(spark, _))
+  }
+
+  test("a survey header whose safe names collide fails as the inferred-schema read fails") {
+    // `a,a,a1` and its multi-line twin: the duplicated name becomes
+    // `<name>0`, `<name>1`, and `<name>1` repeats
+    val dir = Files.createTempDirectory("graft_survey_clash")
+    Seq(write(dir, "Clash.csv", "a,a,a1\n1,2,3\n"),
+        write(dir, "Multi-line clash.csv", "\"x\ny\",\"x\ny\",\"x\ny1\"\n1,2,3\n")).foreach { p =>
+      val expected = intercept[AnalysisException](oracle(p, surveyOptions))
+      val got = intercept[AnalysisException](Sources.surveyCsv(spark, p).collect())
+      assert(got.getCondition === expected.getCondition)
+    }
+  }
+
+  test("building LoadPortal's lazy frames and the Basque TSV read fires no Spark job") {
+    val dir = Files.createTempDirectory("graft_portal_frames")
+    write(dir, "2InfoDataProviderswoSpatialInfo_Final_420_7302020_FINAL_toshare.csv",
+      "prog_name,ErinSpatialGeoJSON,resp_firstname,resp_lastname,resp_email\nReef,NA,Ana,Lee,a@x.org\n")
+    Seq("4Updated_Spatial_Survey_420_8132020_FINAL_toshare.csv",
+        "eurosea_spatial/Spain/Basque monitoring network for the ecological status assessment.tsv")
+      .foreach { name =>
+        val in = getClass.getResourceAsStream(s"/portal/$name")
+        try {
+          Files.createDirectories(dir.resolve(name).getParent)
+          Files.copy(in, dir.resolve(name))
+        } finally in.close()
+      }
+    val header = Seq("Country", "Organisation", "Program name", "Programs Location", "Time period",
+      "Frequency", "Birds", "Hard coral", "Fish", "Macroalgae", "Mangrove", "Microbes", "Phytoplankton",
+      "Seagrass", "Turtles", "Zooplankton", "Benthic invertebrates", "Mammals", "Website", "Lat", "Lon")
+    val zip = new java.util.zip.ZipOutputStream(Files.newOutputStream(dir.resolve("EuroSea.xlsx")))
+    try {
+      zip.putNextEntry(new java.util.zip.ZipEntry("xl/worksheets/sheet1.xml"))
+      zip.write(("""<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">""" +
+        "<sheetData><row>" + header.map(h =>
+        s"""<c t="inlineStr"><is><t>$h</t></is></c>""").mkString + "</row></sheetData></worksheet>")
+        .getBytes(UTF_8))
+      zip.closeEntry()
+    } finally zip.close()
+
+    val group = "graft-portal-frames"
+    val sentinel = "sentinel"
+    val started = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).filter(_.getProperty("spark.jobGroup.id") == group)
+          .foreach(p => started.add(String.valueOf(p.getProperty("spark.job.description"))))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "build")
+      val job = new LoadPortal(spark, dir.toString)
+      Seq(job.source2, job.source4, job.euroseaRaw,
+        Sources.tsv(spark, dir.resolve(
+          "eurosea_spatial/Spain/Basque monitoring network for the ecological status assessment.tsv").toString))
+        .foreach(_.schema)
+      // listener events arrive in order: once the sentinel job is seen,
+      // every job the frames started has been seen before it
+      sc.setJobDescription(sentinel)
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!started.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(started.asScala.toSeq === Seq(sentinel))
+    } finally {
+      sc.clearJobGroup()
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
   }
 }

@@ -31,17 +31,6 @@ class MultimodalSpec extends SparkSpec {
     }
   }
 
-  test("resizeImages produces the requested dimensions, decodable again") {
-    val resized = Multimodal.resizeImages(imgs(10), "doc_id", "content", 8, 8)
-    val meta = Multimodal.decodeImages(resized, "id", "content").collect()
-    assert(meta.length === 10)
-    meta.foreach { r =>
-      assert(r.getAs[Int]("width") === 8)
-      assert(r.getAs[Int]("height") === 8)
-      assert(r.getAs[Long]("n_bytes") === 64L)
-    }
-  }
-
   test("sampleFrames explodes every Nth frame with correct byte slices") {
     import spark.implicits._
     val vids = (0 until 30).map(_.toLong).toDF("doc_id")

@@ -54,31 +54,6 @@ class RangeJoinSpec extends SparkSpec {
     assert(naive.count(_._2 == 999L) === points.filter(col("k") === 0L).count())
   }
 
-  test("auto bucket width (median span) produces the same matches as any explicit width") {
-    import spark.implicits._
-    val rng = new scala.util.Random(13)
-    val points = (0 until 400).map(i =>
-      (i.toLong, (i % 2).toLong, rng.nextDouble() * 100)).toDF("pid", "k", "v")
-    val intervals = (0 until 60).map { i =>
-      val lo = rng.nextDouble() * 95
-      (i.toLong, (i % 2).toLong, lo, lo + rng.nextDouble() * 8)
-    }.toDF("iid", "k", "lo", "hi")
-    val explicit = RangeJoin.bucketedRangeJoin(points, intervals, Seq("k"), "v",
-        "lo", "hi", 4.0)
-      .select(col("pid"), col("iid")).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val auto = RangeJoin.bucketedRangeJoinAuto(points, intervals, Seq("k"), "v", "lo", "hi")
-      .select(col("pid"), col("iid")).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(auto === explicit)
-    assert(auto.nonEmpty)
-    // zero-span degenerate input falls back to minWidth instead of dividing by 0
-    val degenerate = Seq((1L, 0L, 5.0, 5.0)).toDF("iid", "k", "lo", "hi")
-    val got = RangeJoin.bucketedRangeJoinAuto(
-        Seq((1L, 0L, 5.0)).toDF("pid", "k", "v"), degenerate,
-        Seq("k"), "v", "lo", "hi")
-      .select(col("pid"), col("iid")).collect()
-    assert(got.length === 1)
-  }
-
   test("boundaries are inclusive on both ends and each match appears once") {
     import spark.implicits._
     val points = Seq((1L, 0L, 10.0), (2L, 0L, 20.0)).toDF("pid", "k", "v")

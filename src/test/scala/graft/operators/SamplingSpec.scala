@@ -97,18 +97,6 @@ class SamplingSpec extends SparkSpec {
       cluster.foreach(id => assert(out(id)._3 === plain(cluster.min)))
   }
 
-  test("weightedMix unions per-source samples by name, filling missing columns") {
-    import spark.implicits._
-    val webDocs = (0L until 1000L).map(i => (i, s"w$i", "en")).toDF("id", "text", "lang")
-    val codeDocs = (0L until 1000L).map(i => (i + 10000L, s"c$i")).toDF("id", "text")
-    val mixed = Sampling.weightedMix(Seq(
-      (webDocs, col("id"), 0.5), (codeDocs, col("id"), 0.2)))
-    assert(mixed.columns.toSeq === Seq("id", "text", "lang"))
-    val n = mixed.count()
-    assert(math.abs(n - (500 + 200)) < 80, s"mixed $n")
-    assert(mixed.filter(col("id") >= 10000L && col("lang").isNotNull).count() === 0)
-  }
-
   test("hashSample plan is a pushdown-compatible narrow filter (no shuffle)") {
     val plan = Sampling.hashSample(ids, col("id"), 0.3)
       .queryExecution.executedPlan.toString
