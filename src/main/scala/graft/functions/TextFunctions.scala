@@ -116,7 +116,9 @@ object TextFunctions {
   // regexp built-ins (no UDFs, no kernels needed — regex evaluation is
   // already native).
 
-  private val UrlPattern = "https?://\\S+"
+  // RE2's `https?://\S+`, as q76's DuckDB oracle matches it: runs through
+  // U+000B, where a Java `\S` would stop
+  private val UrlPattern = graft.plans.Kernels.UrlRun
 
   /** Collapse whitespace runs to single spaces and trim. */
   def normalizeWhitespace(text: Column): Column =

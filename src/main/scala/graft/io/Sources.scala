@@ -3,6 +3,7 @@ package graft.io
 import java.nio.charset.StandardCharsets.UTF_8
 
 import com.univocity.parsers.csv.CsvParser
+import graft.TaskPool
 import org.apache.hadoop.fs.Path
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
@@ -53,16 +54,19 @@ object Sources {
     * read.csv fills short rows).
     *
     * Spark takes a multi-file CSV read's schema from the first file
-    * only, so the header is read per file on the driver, the way Spark's
-    * schema inference reads it (its line reader, blank lines skipped,
-    * its parser settings and header rule). The files are then scanned
+    * only, so the header is read per file on the driver (the files at
+    * once, [[TaskPool]]), the way Spark's schema inference reads
+    * it (its line reader, blank lines skipped, its parser settings and
+    * header rule). The files are then scanned
     * once per distinct header, with that header as the schema, and the
     * scans are unioned: Spark still drops each file's header line and
     * parses every data line itself. A file without a header line has
     * no columns and no rows, and is not scanned. No path, no read.
     */
   def siteCsvs(spark: SparkSession, paths: Seq[String]): SiteCsvs = {
-    val files = paths.distinct.map(p => p -> header(spark, p, siteOptions))
+    val files = TaskPool(spark) { pool =>
+      paths.distinct.map(p => pool.fork(p -> header(spark, p, siteOptions))).map(_.get)
+    }
     val scans = files.filter(_._2.columns.nonEmpty).groupBy(_._2.columns).toSeq.map { case (columns, group) =>
       val positional = columns.indices.map(i => s"_c$i")
       spark.read.schema(StructType(columns.map(StructField(_, StringType))))

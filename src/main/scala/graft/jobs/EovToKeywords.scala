@@ -17,10 +17,14 @@ import org.apache.spark.sql.functions._
 object EovToKeywords {
 
   /** S11 pushdown query (eov_to_keywords.Rmd:44): the left join runs in
-    * Postgres; Spark sees (layer_id, eov_id, short_name).
+    * Postgres; Spark sees (layer_id, eov_id, short_name), ordered by
+    * (layer_id, eov_id) so the K4 backup lists the links in the same
+    * order on every run, whatever the table's heap order (the database
+    * sorts; no Spark job is added).
     */
   val linksQuery: String =
-    "select l.layer_id, e.id as eov_id, e.short_name from layers_layer_eovs l left join goos_eov e on l.eov_id = e.id"
+    "select l.layer_id, e.id as eov_id, e.short_name from layers_layer_eovs l " +
+      "left join goos_eov e on l.eov_id = e.id order by l.layer_id, e.id"
 
   /** K4 — CSV backup of the links (eov_to_keywords.Rmd:47). */
   def backupLinks(links: DataFrame, path: String): Unit =

@@ -1,5 +1,6 @@
 package graft.jobs
 
+import graft.TaskPool
 import graft.functions.{DateFunctions, GeoFunctions, Identifier, StringFunctions}
 import graft.io.{Sources, Xlsx}
 import graft.operators.{Aggregators, Ckpt, Relational}
@@ -30,13 +31,27 @@ import org.apache.spark.sql.functions._
   * surveys and the XLSX and re-ran the whole plan, and at this size the
   * cost of a Spark action is its planning, code generation and
   * broadcasts, not its rows.
+  *
+  * `initial` and `eurosea` are independent, so they are computed at
+  * once ([[graft.TaskPool]]), the first time either is asked for; never
+  * at construction, so building the frames still fires no Spark job.
+  * Every `lazy val` of one instance initializes under the instance's one
+  * monitor, and the thread that asks holds it while the two run. So the
+  * two pool tasks read no lazy val: the inputs they build on, `source2`,
+  * `source4` and `euroseaRaw`, are plans that run no job, built afresh by
+  * each caller (`def`s), and each task builds its own and collects the
+  * plan on top. A task that forced an uninitialized lazy val would wait
+  * for that monitor while its owner waits for the task. `LoadPortalMain` then runs the spatial export, the fixtures and
+  * the duplicates report at once: it holds no monitor while it waits for
+  * them, and of their tasks only the duplicates report initializes a
+  * lazy val (`duplicates`).
   */
 class LoadPortal(spark: SparkSession, dataDir: String) {
 
   import LoadPortal._
 
   /** S1 + P1 + C1 (index.Rmd:56-65): survey 2, five columns, ""→null. */
-  lazy val source2: DataFrame =
+  def source2: DataFrame =
     Sources.surveyCsv(spark, s"$dataDir/2InfoDataProviderswoSpatialInfo_Final_420_7302020_FINAL_toshare.csv")
       .select(
         col("ErinSpatialGeoJSON").as("geometry_geojson"),
@@ -49,12 +64,30 @@ class LoadPortal(spark: SparkSession, dataDir: String) {
     * (quoted multiline fields). `_row` pins the file order the reference
     * implicitly relies on for `id = row_number()`.
     */
-  lazy val source4: DataFrame =
+  def source4: DataFrame =
     Sources.surveyCsv(spark, s"$dataDir/4Updated_Spatial_Survey_420_8132020_FINAL_toshare.csv")
       .withColumn("_row", monotonically_increasing_id())
 
   /** P2 + J1 + C2/C4/C5/C8/C9 + F5 (index.Rmd:73-128): df_initial. */
-  lazy val initial: DataFrame = Ckpt.toLocal {
+  lazy val initial: DataFrame = sources._1
+
+  /** C3 + C10/C11/C8/C9 + C6 + C12/C13 + A1 suite (index.Rmd:169-341):
+    * normalize EuroSea and merge by (organization, name), 367 → 256.
+    */
+  lazy val eurosea: DataFrame = sources._2
+
+  /** `initial` and `eurosea`, both at once (the monitor rule in the
+    * class comment).
+    */
+  private lazy val sources: (DataFrame, DataFrame) =
+    TaskPool(spark) { pool =>
+      val i = pool.fork(Ckpt.toLocal(initialFrame))
+      val e = pool.fork(Ckpt.toLocal(euroseaFrame))
+      (i.get, e.get)
+    }
+
+  /** The plan of [[initial]]. */
+  private def initialFrame: DataFrame = {
     val eovCols = Seq(
       "eov_birds" -> "Birds", "eov_hardcoral" -> "Hard_Coral",
       "eov_fish" -> "Fish", "eov_macroalgae" -> "Macroalgae",
@@ -95,7 +128,7 @@ class LoadPortal(spark: SparkSession, dataDir: String) {
   /** S3 + P3 + F1 (index.Rmd:135-162): EuroSea sheet 1, 21 columns,
     * rows without a program name dropped (370 → 367).
     */
-  lazy val euroseaRaw: DataFrame = {
+  def euroseaRaw: DataFrame = {
     val eovCols = Seq(
       "eov_birds" -> "Birds", "eov_hardcoral" -> "`Hard.coral`",
       "eov_fish" -> "Fish", "eov_macroalgae" -> "Macroalgae",
@@ -120,13 +153,12 @@ class LoadPortal(spark: SparkSession, dataDir: String) {
       .filter(col("name").isNotNull)
   }
 
-  /** C3 + C10/C11/C8/C9 + C6 + C12/C13 + A1 suite (index.Rmd:169-341):
-    * normalize EuroSea and merge by (organization, name), 367 → 256.
-    */
-  lazy val eurosea: DataFrame = Ckpt.toLocal {
-    val eovFlags = euroseaRaw.columns.filter(_.startsWith("eov_"))
+  /** The plan of [[eurosea]]. */
+  private def euroseaFrame: DataFrame = {
+    val raw = euroseaRaw
+    val eovFlags = raw.columns.filter(_.startsWith("eov_"))
     // "x" marks → booleans (C3, index.Rmd:171)
-    val flagged = eovFlags.foldLeft(euroseaRaw)((df, c) =>
+    val flagged = eovFlags.foldLeft(raw)((df, c) =>
       df.withColumn(c, StringFunctions.flagEquals(col(c), "x")))
     // time → (start, end) year strings via numeric round-trip
     // (C10/C11, index.Rmd:177-184)

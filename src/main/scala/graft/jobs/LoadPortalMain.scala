@@ -1,9 +1,16 @@
 package graft.jobs
 
+import graft.TaskPool
+import org.apache.spark.sql.DataFrame
+
 /** E1 entry point: runs the whole LoadPortal pipeline against a data
   * directory and writes every artifact the reference produces —
   * per-identifier geometry files, the Django fixtures, and the
   * duplicate/missing reports (as CSV).
+  *
+  * Once the identifiers are assigned, the spatial export, the fixtures
+  * and the duplicates report run at once on the session ([[TaskPool]]);
+  * the missing-spatial report waits for the export only.
   *
   * Usage: `runMain graft.jobs.LoadPortalMain <dataDir> <outDir>`
   * (defaults: /root/reference/data → /tmp/graft_e1).
@@ -16,17 +23,24 @@ object LoadPortalMain {
 
     val job = new LoadPortal(spark, dataDir)
     val combined = job.withIdentifiers
-    val spatial = SpatialExport.run(spark, combined, dataDir, s"$outDir/output")
-
-    // K2/K3 Django fixtures (index.Rmd:648-656, 680-688)
-    Fixtures.writeEovs(spark, s"$outDir/output")
-    val userCount = Fixtures.writeUsers(job.users, s"$outDir/output")
-
-    // reports (the reference prints these as notebook tables)
-    job.duplicates.coalesce(1).write.mode("overwrite")
-      .option("header", "true").csv(s"$outDir/reports/duplicates")
-    spatial.missingSpatial.coalesce(1).write.mode("overwrite")
-      .option("header", "true").csv(s"$outDir/reports/missing_spatial")
+    // plan only; forced here so that no task below waits on the lock
+    // LoadPortal's lazy vals share (the duplicates task forces only
+    // `duplicates`, which nothing else below reads)
+    val users = job.users
+    val (spatial, userCount) = TaskPool(spark) { pool =>
+      val exported = pool.fork(SpatialExport.run(spark, combined, dataDir, s"$outDir/output"))
+      // K2/K3 Django fixtures (index.Rmd:648-656, 680-688)
+      val fixtures = pool.fork {
+        Fixtures.writeEovs(spark, s"$outDir/output")
+        Fixtures.writeUsers(users, s"$outDir/output")
+      }
+      // reports (the reference prints these as notebook tables)
+      val duplicates = pool.fork(writeReport(job.duplicates, s"$outDir/reports/duplicates"))
+      val missing = pool.fork(writeReport(exported.get.missingSpatial, s"$outDir/reports/missing_spatial"))
+      duplicates.get
+      missing.get
+      (exported.get, fixtures.get)
+    }
 
     // the frames are held on the driver (LoadPortal): collecting one
     // reads that copy and runs no Spark job, where count() would
@@ -36,4 +50,7 @@ object LoadPortalMain {
       s"missing_spatial=${spatial.missingIdentifiers.length} out=$outDir")
     spark.stop()
   }
+
+  private def writeReport(report: DataFrame, path: String): Unit =
+    report.coalesce(1).write.mode("overwrite").option("header", "true").csv(path)
 }

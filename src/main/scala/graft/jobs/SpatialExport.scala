@@ -1,5 +1,6 @@
 package graft.jobs
 
+import graft.TaskPool
 import graft.functions.GeoFunctions
 import graft.io.{Shapefile, ShapefileWriter, Sources, Xlsx}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -27,6 +28,9 @@ import org.apache.spark.sql.functions._
 object SpatialExport {
 
   case class SiteCsv(name: String, file: String, lonCol: String, latCol: String)
+
+  /** Features of one output bundle: (WKT, attribute name → value). */
+  private type Feats = Seq[(String, Seq[(String, String)])]
 
   /** The 20 per-network CSV registrations (index.Rmd:443-462). */
   val siteCsvs: Seq[SiteCsv] = Seq(
@@ -87,9 +91,17 @@ object SpatialExport {
 
   /** Runs the whole export. `combined` is [[LoadPortal.withIdentifiers]];
     * it is read once, and every step below works from that one
-    * driver-side copy of (name, identifier, geometry_geojson). File
-    * writes are per-identifier bundles, driver-side: the layers are
-    * config-scale.
+    * driver-side copy of (name, identifier, geometry_geojson).
+    *
+    * The steps run at once on a [[TaskPool]]. The GeoJSON column
+    * is parsed first, on the calling thread: it decides which site CSVs
+    * step 2 needs. Then the two Spark jobs start (the site CSVs, the
+    * Spain TSV), then the driver-side reads (windfarm, shapefile copies,
+    * WESPAS), and then one task per output bundle, those whose data is
+    * ready first. A bundle written by more than one step is written by
+    * one task in the serial order, steps 1 → 6 and then 7, so its last
+    * writer is the serial order's last writer; no two tasks write the
+    * same bundle.
     */
   def run(spark: SparkSession, combined: DataFrame, dataDir: String,
           outDir: String): Result = {
@@ -98,26 +110,24 @@ object SpatialExport {
 
     // ---- 1. geometry_geojson column (index.Rmd:400-416); null, blank
     // and "null" documents parse to no features
-    val geojsonWritten = rows.flatMap { case (_, identifier, geojson) =>
-      val feats = geojsonFeatures(geojson)
+    val geojson: Seq[(String, Feats)] = rows.toSeq.flatMap { case (_, identifier, document) =>
+      val feats = geojsonFeatures(document)
       val types = feats.map(_._2).distinct
-      if (feats.nonEmpty && types.length == 1) {
-        writeFeatures(outDir, identifier, feats.map(_._1).map(w => (w, Seq.empty[(String, String)])))
-        Some(identifier)
-      } else None
-    }.toSet
+      if (feats.nonEmpty && types.length == 1)
+        Some(identifier -> feats.map { case (w, _) => (w, Seq.empty[(String, String)]) })
+      else None
+    }
+    val geojsonWritten = geojson.map(_._1).toSet
 
     // name → identifiers mapping (duplicate names → multiple outputs, J6)
     val nameIdents: Map[String, Seq[String]] =
       rows.groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
 
-    // ---- 2. site CSVs (index.Rmd:423-463) — every input file in one
-    // read ([[Sources.siteCsvs]]; none when no file is needed), filtered
-    // and turned into points in the same plan, collected once. The
-    // reference flags has_shapefile BEFORE any file I/O (index.Rmd:427);
-    // this data snapshot prunes two of the twenty CSVs (IMOS, SCAR), so a
-    // missing input skips the read but keeps the registration and writes
-    // the empty collection: every registered identifier still has its
+    // ---- 2. site CSVs (index.Rmd:423-463). The reference flags
+    // has_shapefile BEFORE any file I/O (index.Rmd:427); this data
+    // snapshot prunes two of the twenty CSVs (IMOS, SCAR), so a missing
+    // input skips the read but keeps the registration and writes the
+    // empty collection: every registered identifier still has its
     // per-dataset output file.
     val sites = siteCsvs.map { sc =>
       val idents = nameIdents.getOrElse(sc.name, Seq.empty)
@@ -125,6 +135,69 @@ object SpatialExport {
     }
     val toRead = sites.collect { case (sc, _, toWrite, path)
       if toWrite.nonEmpty && new java.io.File(path).exists() => (sc, path) }
+    val csvIdentifiers = sites.flatMap(_._2)
+    // ---- 3. windfarm gather (index.Rmd:470-487)
+    val windfarmIdents = nameIdents.getOrElse(windfarmName, Seq.empty)
+    // ---- 4. shapefile copies (index.Rmd:493-521)
+    val copies = shapefileCopies.map { case (name, rel) => (rel, nameIdents.getOrElse(name, Seq.empty)) }
+    val copyIdents = copies.flatMap(_._2)
+    // ---- 5. Spain TSV, EPSG:32630 → 4326 (index.Rmd:525-537, G7)
+    val spainIdents = nameIdents.getOrElse(spainName, Seq.empty)
+    // ---- 6. WESPAS track (index.Rmd:541-556, G8)
+    val wespasIdents = nameIdents.getOrElse(wespasName, Seq.empty)
+
+    // ---- has_shapefile (the reference's mutable flag, set-based)
+    val flagged = geojsonWritten ++ csvIdentifiers ++ windfarmIdents ++
+      copyIdents ++ spainIdents ++ wespasIdents
+    // ---- 7. missing report + empty files (index.Rmd:566-587, F3 + G9):
+    // the rows of `missing` below; `isin` is null on a null identifier,
+    // so such a row is neither flagged nor missing
+    val missingIdentifiers = rows.iterator.map(_._2)
+      .filter(i => i != null && !flagged.contains(i)).toSeq.sorted
+
+    TaskPool(spark) { pool =>
+      val siteFeats = pool.fork(readSites(spark, toRead))
+      val spainFeats = pool.fork(if (spainIdents.isEmpty) Seq.empty else readSpain(spark, s"$dataDir/$spainTsv"))
+      val windfarmFeats = pool.fork(if (windfarmIdents.isEmpty) Seq.empty else readWindfarm(s"$dataDir/$windfarmFolder"))
+      val copyFeats = copies.map { case (rel, idents) =>
+        pool.fork(if (idents.isEmpty) Seq.empty else readShapefile(s"$dataDir/$rel"))
+      }
+      val wespasFeats = pool.fork(if (wespasIdents.isEmpty) Seq.empty else readWespas(s"$dataDir/$wespasXlsx"))
+
+      // every bundle write in the serial order: (identifier, what it
+      // waits for: 0 nothing, 1 a driver read, 2 a Spark job, features)
+      val writes: Seq[(String, Int, () => Feats)] =
+        geojson.map { case (identifier, feats) => (identifier, 0, () => feats) } ++
+          sites.flatMap { case (_, _, toWrite, path) =>
+            toWrite.map(id => (id, 2, () => siteFeats.get.getOrElse(path, Seq.empty))) } ++
+          windfarmIdents.map(id => (id, 1, () => windfarmFeats.get)) ++
+          copies.zip(copyFeats).flatMap { case ((_, idents), feats) => idents.map(id => (id, 1, () => feats.get)) } ++
+          spainIdents.map(id => (id, 2, () => spainFeats.get)) ++
+          wespasIdents.map(id => (id, 1, () => wespasFeats.get)) ++
+          missingIdentifiers.distinct.map(id => (id, 0, () => Seq.empty))
+      // one task per bundle directory (`$outDir/$identifier`, so a null
+      // identifier is the directory "null") writing in the serial order;
+      // the bundles that wait for the least are forked first
+      val bundles = writes.zipWithIndex.groupBy { case ((identifier, _, _), _) => String.valueOf(identifier) }
+        .values.toSeq.sortBy(b => (b.map(_._1._2).max, b.head._2))
+        .map(_.map(_._1))
+      bundles.map(bundle => pool.fork(bundle.foreach { case (identifier, _, feats) =>
+        writeFeatures(outDir, identifier, feats()) })).foreach(_.get)
+    }
+
+    val out = combined.withColumn("has_shapefile",
+      col("identifier").isin(flagged.toSeq: _*))
+    val missing = out.filter(!col("has_shapefile"))
+      .select(col("name"), col("identifier"), col("url"))
+      .orderBy(col("identifier"))
+    Result(out, missing, missingIdentifiers)
+  }
+
+  /** Step 2: every needed site CSV in one read ([[Sources.siteCsvs]]; no
+    * job when no file is needed), filtered and turned into points in the
+    * same plan, collected once; features per path.
+    */
+  private def readSites(spark: SparkSession, toRead: Seq[(SiteCsv, String)]): Map[String, Feats] = {
     val read = Sources.siteCsvs(spark, toRead.map(_._2))
     // each file's value of the column `name` picks from its columns,
     // matched case-insensitively, as a column reference resolves
@@ -142,7 +215,7 @@ object SpatialExport {
     }
     // the reference filters the literal `Latitude` column (F2)
     val f2 = field((sc, columns) => if (columns.contains("Latitude")) "Latitude" else sc.latCol)
-    val siteFeats = read.rows
+    read.rows
       .filter(f2.cast("double") <= 90)
       .select(col("path"), col("fields"), GeoFunctions.wktPoint(
         field((sc, _) => sc.lonCol).cast("double"), field((sc, _) => sc.latCol).cast("double")).as("_wkt"))
@@ -150,77 +223,38 @@ object SpatialExport {
       .groupBy(_.getString(0))
       .map { case (path, fileRows) => path -> fileRows.toSeq.map(r =>
         (r.getString(2), read.columns(path).zip(r.getSeq[String](1)))) }
-    val csvIdentifiers = sites.flatMap { case (_, idents, toWrite, path) =>
-      toWrite.foreach(writeFeatures(outDir, _, siteFeats.getOrElse(path, Seq.empty)))
-      idents
-    }
+  }
 
-    // ---- 3. windfarm gather (index.Rmd:470-487): polygon layers only
-    val windfarmIdents = nameIdents.getOrElse(windfarmName, Seq.empty)
-    if (windfarmIdents.nonEmpty) {
-      val shpFiles = listShapefiles(new java.io.File(s"$dataDir/$windfarmFolder"))
-      val polygonFeats = shpFiles
-        .map(f => Shapefile.read(f.getPath))
-        .filter { case (_, feats) =>
-          feats.headOption.exists(_.geomType == "POLYGON") } // first-feature type gate (index.Rmd:475)
-        .flatMap { case (_, feats) =>
-          feats.map(f => (f.wkt, f.attrs.toSeq)) }
-      windfarmIdents.foreach(writeFeatures(outDir, _, polygonFeats))
-    }
+  /** Step 3: the polygon layers of the windfarm folder's shapefiles. */
+  private def readWindfarm(folder: String): Feats =
+    listShapefiles(new java.io.File(folder))
+      .map(f => Shapefile.read(f.getPath))
+      .filter { case (_, feats) =>
+        feats.headOption.exists(_.geomType == "POLYGON") } // first-feature type gate (index.Rmd:475)
+      .flatMap { case (_, feats) => feats.map(f => (f.wkt, f.attrs.toSeq)) }
 
-    // ---- 4. shapefile copies (index.Rmd:493-521)
-    val copyIdents = shapefileCopies.flatMap { case (name, rel) =>
-      val idents = nameIdents.getOrElse(name, Seq.empty)
-      if (idents.nonEmpty) {
-        val (_, feats) = Shapefile.read(s"$dataDir/$rel")
-        val out = feats.map(f => (f.wkt, f.attrs.toSeq))
-        idents.foreach(writeFeatures(outDir, _, out))
-      }
-      idents
-    }
+  /** Step 4: one shapefile, copied feature for feature. */
+  private def readShapefile(path: String): Feats =
+    Shapefile.read(path)._2.map(f => (f.wkt, f.attrs.toSeq))
 
-    // ---- 5. Spain TSV, EPSG:32630 → 4326 (index.Rmd:525-537, G7)
-    val spainIdents = nameIdents.getOrElse(spainName, Seq.empty)
-    if (spainIdents.nonEmpty) {
-      val rows = Sources.tsv(spark, s"$dataDir/$spainTsv")
-        .select(col("x").cast("double"), col("y").cast("double"))
-        .select(col("x"), col("y"),
-          GeoFunctions.utm30nLon(col("x"), col("y")).as("lon"),
-          GeoFunctions.utm30nLat(col("x"), col("y")).as("lat"))
-        .collect()
-      val feats = rows.map(r => (
+  /** Step 5: the Basque TSV's UTM 30N points in WGS84. */
+  private def readSpain(spark: SparkSession, path: String): Feats =
+    Sources.tsv(spark, path)
+      .select(col("x").cast("double"), col("y").cast("double"))
+      .select(col("x"), col("y"),
+        GeoFunctions.utm30nLon(col("x"), col("y")).as("lon"),
+        GeoFunctions.utm30nLat(col("x"), col("y")).as("lat"))
+      .collect().toSeq
+      .map(r => (
         s"POINT (${r.getAs[Double]("lon")} ${r.getAs[Double]("lat")})",
         Seq("x" -> r.getAs[Double]("x").toString, "y" -> r.getAs[Double]("y").toString)))
-      spainIdents.foreach(writeFeatures(outDir, _, feats.toSeq))
-    }
 
-    // ---- 6. WESPAS track (index.Rmd:541-556, G8): one LINESTRING
-    val wespasIdents = nameIdents.getOrElse(wespasName, Seq.empty)
-    if (wespasIdents.nonEmpty) {
-      val (_, rows) = Xlsx.readSheet(s"$dataDir/$wespasXlsx", 1)
-      val pts = rows.collect { case Seq(lonS, latS, _*) if lonS != null && latS != null =>
-        s"$lonS $latS" }
-      val wkt = s"LINESTRING (${pts.mkString(", ")})"
-      wespasIdents.foreach(writeFeatures(outDir, _, Seq((wkt, Seq.empty))))
-    }
-
-    // ---- has_shapefile (the reference's mutable flag, set-based)
-    val flagged = geojsonWritten ++ csvIdentifiers ++ windfarmIdents ++
-      copyIdents ++ spainIdents ++ wespasIdents
-    val out = combined.withColumn("has_shapefile",
-      col("identifier").isin(flagged.toSeq: _*))
-
-    // ---- 7. missing report + empty files (index.Rmd:566-587, F3 + G9)
-    val missing = out.filter(!col("has_shapefile"))
-      .select(col("name"), col("identifier"), col("url"))
-      .orderBy(col("identifier"))
-    // the rows of `missing`: `isin` is null on a null identifier, so
-    // such a row is neither flagged nor missing
-    val missingIdentifiers = rows.iterator.map(_._2)
-      .filter(i => i != null && !flagged.contains(i)).toSeq.sorted
-    missingIdentifiers.distinct.foreach(writeFeatures(outDir, _, Seq.empty))
-
-    Result(out, missing, missingIdentifiers)
+  /** Step 6: the WESPAS positions as one LINESTRING. */
+  private def readWespas(path: String): Feats = {
+    val (_, rows) = Xlsx.readSheet(path, 1)
+    val pts = rows.collect { case Seq(lonS, latS, _*) if lonS != null && latS != null =>
+      s"$lonS $latS" }
+    Seq((s"LINESTRING (${pts.mkString(", ")})", Seq.empty))
   }
 
   /** GeoJSON document → per-feature (wkt, type); FeatureCollections
@@ -269,8 +303,7 @@ object SpatialExport {
   /** Per-dataset sink: the reference's artifact, the shapefile bundle
     * `{identifier}/{identifier}.shp` (index.Rmd:410-411 etc.).
     */
-  private def writeFeatures(outDir: String, identifier: String,
-                            feats: Seq[(String, Seq[(String, String)])]): Unit = {
+  private def writeFeatures(outDir: String, identifier: String, feats: Feats): Unit = {
     val fields = feats.flatMap(_._2.map(_._1)).distinct
     val rows = feats.map { case (w, props) =>
       val m = props.toMap

@@ -244,6 +244,17 @@ class FunctionsSpec extends SparkSpec {
     assert(r.getString(2).contains("\t"), "tab must survive control stripping")
   }
 
+  test("URL verbs run through U+000B as RE2's \\S does") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val r = Seq("see http://a.b/c\u000Bd end", "http://a.b/c\u000Bhttp://d.e").toDF("t")
+      .select(TextFunctions.stripUrls(col("t")), TextFunctions.urlCount(col("t")))
+      .collect().map(row => (row.getString(0), row.getInt(1))).toSeq
+    // the URL removed from the first text is `http://a.b/c\u000Bd`; the
+    // second text is one URL, not two
+    assert(r === Seq(("see  end", 1), ("", 1)))
+  }
+
   test("text kernels match the original higher-order Column chains") {
     import spark.implicits._
     import org.apache.spark.sql.functions._

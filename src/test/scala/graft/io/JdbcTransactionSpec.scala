@@ -5,6 +5,7 @@ import java.util.Properties
 
 import graft.SparkSpec
 import graft.io.JdbcBoundary.{JdbcExecutor, SqlExecutor, Stmt}
+import graft.jobs.EovToKeywords
 import org.apache.spark.SparkException
 
 /** K5 against a real JDBC target (in-memory Derby): each partition of
@@ -89,6 +90,28 @@ class JdbcTransactionSpec extends SparkSpec {
 
     JdbcBoundary.upsertMetadata(layers, () => new JdbcExecutor(url, props))
     assert(state(url) === expected)
+  }
+
+  test("E2: the K4 backup lists links ordered by (layer_id, eov_id), not in heap order") {
+    val url = "jdbc:derby:memory:e2_backup_order"
+    val c = DriverManager.getConnection(s"$url;create=true;territory=en_US")
+    try {
+      val st = c.createStatement()
+      Seq(
+        "create table goos_eov (id int primary key, short_name varchar(50))",
+        "create table layers_layer_eovs (layer_id int, eov_id int)",
+        "insert into goos_eov values (1, 'birds'), (2, 'fish'), (5, 'seagrass')",
+        "insert into layers_layer_eovs values (9, 2), (7, 5), (8, 1), (7, 1), (9, 1), (8, 5)"
+      ).foreach(st.execute)
+    } finally c.close()
+    val backup = java.nio.file.Files.createTempDirectory("graft_e2_backup").resolve("links").toString
+    EovToKeywords.backupLinks(
+      JdbcBoundary.queryScan(spark, url, EovToKeywords.linksQuery, new Properties()), backup)
+    val part = new java.io.File(backup).listFiles().filter(_.getName.startsWith("part-")).toSeq
+    assert(part.length === 1)
+    assert(java.nio.file.Files.readAllLines(part.head.toPath).toArray.toSeq === Seq(
+      "LAYER_ID,EOV_ID,SHORT_NAME",
+      "7,1,birds", "7,5,seagrass", "8,1,birds", "8,5,seagrass", "9,1,birds", "9,2,fish"))
   }
 }
 
