@@ -1,16 +1,34 @@
 package graft.functions
 
+import java.io.IOException
+import java.util.Locale
+
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.JsonNode
+import graft.Json
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Spatial functions (SURVEY §2.9). Offline constraint: no Sedona jar, so
-  * geometries travel as WKT/GeoJSON `StringType` columns (SURVEY §1) and
-  * these functions implement the minimal conversions the reference
-  * exercises: GeoJSON↔WKT for Point/MultiPoint/LineString/Polygon/
-  * MultiPolygon (+FeatureCollection unwrap), WKT point construction,
-  * geometry-type sniffing, and the UTM zone 30N → WGS84 inverse
-  * transform (reference `st_transform(32630, 4326)`,
-  * notebooks/index.Rmd:533).
+/** Spatial functions (SURVEY §2.9) and the engine's one geometry codec:
+  * the only module that parses GeoJSON or WKT text. Offline constraint:
+  * no Sedona jar, so geometries travel as WKT/GeoJSON `StringType`
+  * columns (SURVEY §1), WKT being the format the pipeline passes them
+  * around in.
+  *
+  *  - GeoJSON is read with Jackson's tree model ([[graft.Json.tree]]),
+  *    and each geometry node becomes WKT in one step: Point, MultiPoint,
+  *    LineString, MultiLineString, Polygon, MultiPolygon, unwrapped from
+  *    Features and FeatureCollections.
+  *  - WKT is read by one tree parser ([[parseWkt]]) whose leaves are the
+  *    coordinate lexemes; GeoJSON output keeps them verbatim and
+  *    [[graft.io.ShapefileWriter]] parses them to doubles.
+  *  - WKT coordinates are printed by one formatter ([[formatCoordinate]]),
+  *    which [[graft.io.Shapefile]] uses too.
+  *
+  * Besides these: WKT point construction, geometry-type sniffing, and
+  * the UTM zone 30N → WGS84 inverse transform (reference
+  * `st_transform(32630, 4326)`, notebooks/index.Rmd:533).
   */
 object GeoFunctions {
 
@@ -31,153 +49,94 @@ object GeoFunctions {
   }
 
   // ------------------------------------------------------------------
-  // GeoJSON → WKT (minimal, reference-exercised geometry types only)
+  // Coordinates
 
-  private def fmt(d: Double): String =
-    if (d == d.floor && !d.isInfinite && math.abs(d) < 1e15) d.toLong.toString
-    else d.toString
+  /** The one coordinate formatter of WKT this engine prints: integral
+    * values below 1e15 without a fraction, all others as
+    * `Double.toString`. */
+  private[graft] def formatCoordinate(d: Double): String =
+    if (d == math.rint(d) && math.abs(d) < 1e15) d.toLong.toString else d.toString
 
-  private def posWkt(coords: Seq[Double]): String = coords.map(fmt).mkString(" ")
+  // ------------------------------------------------------------------
+  // GeoJSON → WKT (reference `geojson_sf`, notebooks/index.Rmd:408)
 
-  private def parseGeom(typ: String, coords: ujsonLite.Value): String = typ match {
-    case "Point" =>
-      s"POINT (${posWkt(coords.asPositions)})"
-    case "MultiPoint" =>
-      s"MULTIPOINT (${coords.asPosList.map(p => s"(${posWkt(p)})").mkString(", ")})"
-    case "LineString" =>
-      s"LINESTRING (${coords.asPosList.map(posWkt).mkString(", ")})"
-    case "Polygon" =>
-      s"POLYGON (${coords.asRings.map(r => s"(${r.map(posWkt).mkString(", ")})").mkString(", ")})"
-    case "MultiPolygon" =>
-      s"MULTIPOLYGON (${coords.asPolys.map(p =>
-        s"(${p.map(r => s"(${r.map(posWkt).mkString(", ")})").mkString(", ")})").mkString(", ")})"
-    case other => s"GEOMETRYCOLLECTION EMPTY"
-  }
-
-  /** Tiny recursive-descent JSON reader for the GeoJSON subset — arrays,
-    * objects, numbers, strings. Zero dependencies by design (offline
-    * build); not a general JSON parser.
-    */
-  private[graft] object ujsonLite {
-    sealed trait Value {
-      def asPositions: Seq[Double] = this match {
-        case Arr(xs) => xs.collect { case Num(d) => d }
-        case _ => Nil
-      }
-      def asPosList: Seq[Seq[Double]] = this match {
-        case Arr(xs) => xs.map(_.asPositions)
-        case _ => Nil
-      }
-      def asRings: Seq[Seq[Seq[Double]]] = this match {
-        case Arr(xs) => xs.map(_.asPosList)
-        case _ => Nil
-      }
-      def asPolys: Seq[Seq[Seq[Seq[Double]]]] = this match {
-        case Arr(xs) => xs.map(_.asRings)
-        case _ => Nil
-      }
-    }
-    case class Num(v: Double) extends Value
-    case class Str(v: String) extends Value
-    case class Arr(v: List[Value]) extends Value
-    case class Obj(v: Map[String, Value]) extends Value
-    case object NullV extends Value
-
-    def parse(s: String): Value = new P(s).value()
-
-    private class P(s: String) {
-      private var i = 0
-      private def ws(): Unit = while (i < s.length && s.charAt(i).isWhitespace) i += 1
-      def value(): Value = {
-        ws()
-        s.charAt(i) match {
-          case '{' => obj()
-          case '[' => arr()
-          case '"' => Str(str())
-          case 't' => i += 4; Num(1)
-          case 'f' => i += 5; Num(0)
-          case 'n' => i += 4; NullV
-          case _ => num()
-        }
-      }
-      private def obj(): Obj = {
-        i += 1; ws()
-        val b = Map.newBuilder[String, Value]
-        if (s.charAt(i) == '}') { i += 1; return Obj(b.result()) }
-        while (true) {
-          ws(); val k = str(); ws(); i += 1 // ':'
-          b += (k -> value()); ws()
-          if (s.charAt(i) == ',') { i += 1 }
-          else { i += 1; return Obj(b.result()) } // '}'
-        }
-        Obj(b.result())
-      }
-      private def arr(): Arr = {
-        i += 1; ws()
-        val b = List.newBuilder[Value]
-        if (s.charAt(i) == ']') { i += 1; return Arr(b.result()) }
-        while (true) {
-          b += value(); ws()
-          if (s.charAt(i) == ',') { i += 1 }
-          else { i += 1; return Arr(b.result()) } // ']'
-        }
-        Arr(b.result())
-      }
-      private def str(): String = {
-        i += 1
-        val sb = new StringBuilder
-        while (s.charAt(i) != '"') {
-          if (s.charAt(i) == '\\') {
-            i += 1
-            s.charAt(i) match {
-              case 'n' => sb.append('\n'); case 't' => sb.append('\t')
-              case 'u' => sb.append(Integer.parseInt(s.substring(i + 1, i + 5), 16).toChar); i += 4
-              case c => sb.append(c)
-            }
-          } else sb.append(s.charAt(i))
-          i += 1
-        }
-        i += 1
-        sb.toString
-      }
-      private def num(): Num = {
-        val start = i
-        while (i < s.length && (s.charAt(i).isDigit || "+-.eE".contains(s.charAt(i)))) i += 1
-        Num(s.substring(start, i).toDouble)
-      }
+  /** The geometry nodes of a GeoJSON document: every feature's
+    * `geometry` of a FeatureCollection (null where a feature has none),
+    * a Feature's `geometry`, or the document itself. */
+  private def geometries(geojson: String): Seq[JsonNode] = {
+    if (geojson == null || geojson.isBlank) return Nil
+    val doc = Json.tree(geojson)
+    typeOf(doc) match {
+      case Some("FeatureCollection") =>
+        Option(doc.get("features")).filter(_.isArray).toSeq
+          .flatMap(_.elements.asScala.map(_.get("geometry")))
+      case Some("Feature") => Seq(doc.get("geometry"))
+      case _ => Seq(doc)
     }
   }
 
-  /** GeoJSON → WKT (reference `geojson_sf`, notebooks/index.Rmd:408).
-    * FeatureCollections take the first feature's geometry (the
-    * reference's single-type gate G6 has already filtered mixed ones).
+  private def typeOf(node: JsonNode): Option[String] =
+    Option(node).flatMap(n => Option(n.get("type"))).filter(_.isTextual).map(_.textValue)
+
+  /** One geometry node → (WKT, GeoJSON type); None when the node is not
+    * a geometry (null, no string `type`, no `coordinates`). Empty
+    * `coordinates` are `<TYPE> EMPTY`; a type outside the six below is
+    * `GEOMETRYCOLLECTION EMPTY`. Coordinates that do not fit the type (a
+    * non-array, an empty nested list, a position of fewer than two
+    * numbers or with a member that is not a number) throw
+    * `IllegalArgumentException`.
     */
-  def geojsonToWktStr(geojson: String): String = {
-    if (geojson == null || geojson.trim.isEmpty || geojson.trim == "null") return null
-    try {
-      val v = ujsonLite.parse(geojson) match {
-        case o @ ujsonLite.Obj(m) if m.get("type").contains(ujsonLite.Str("FeatureCollection")) =>
-          m("features") match {
-            case ujsonLite.Arr(f :: _) => f match {
-              case ujsonLite.Obj(fm) => fm("geometry")
-              case _ => return null
-            }
-            case _ => return null
-          }
-        case o @ ujsonLite.Obj(m) if m.get("type").contains(ujsonLite.Str("Feature")) =>
-          m("geometry")
-        case o => o
+  private def geometryWkt(node: JsonNode): Option[(String, String)] =
+    typeOf(node).filter(_ => node.has("coordinates")).map { typ =>
+      def fail(n: JsonNode, what: String) =
+        throw new IllegalArgumentException(s"GeoJSON $typ: $n is not $what")
+      def list(n: JsonNode): Seq[JsonNode] =
+        if (n.isArray && !n.isEmpty) n.elements.asScala.toSeq else fail(n, "a non-empty array")
+      def position(n: JsonNode): String = {
+        val xs = list(n)
+        if (xs.length < 2 || !xs.forall(_.isNumber)) fail(n, "a position")
+        xs.map(x => formatCoordinate(x.doubleValue)).mkString(" ")
       }
-      v match {
-        case ujsonLite.Obj(m) =>
-          (m.get("type"), m.get("coordinates")) match {
-            case (Some(ujsonLite.Str(t)), Some(c)) => parseGeom(t, c)
-            case _ => null
-          }
-        case _ => null
+      def group(items: Seq[String]) = items.mkString("(", ", ", ")")
+      def line(n: JsonNode) = group(list(n).map(position))
+      def polygon(n: JsonNode) = group(list(n).map(line))
+      val render: Option[JsonNode => String] = typ match {
+        case "Point" => Some(n => s"(${position(n)})")
+        case "MultiPoint" => Some(n => group(list(n).map(p => s"(${position(p)})")))
+        case "LineString" => Some(line)
+        case "MultiLineString" => Some(n => group(list(n).map(line)))
+        case "Polygon" => Some(polygon)
+        case "MultiPolygon" => Some(n => group(list(n).map(polygon)))
+        case _ => None
       }
-    } catch { case _: Exception => null }
-  }
+      val coords = node.get("coordinates")
+      val wktType = typ.toUpperCase(Locale.ROOT)
+      val wkt = render match {
+        case None => "GEOMETRYCOLLECTION EMPTY"
+        case Some(_) if coords.isArray && coords.isEmpty => s"$wktType EMPTY"
+        case Some(r) => s"$wktType ${r(coords)}"
+      }
+      (wkt, typ)
+    }
+
+  /** Every feature of a GeoJSON document as (WKT, GeoJSON type), in
+    * document order; features without a geometry are skipped (reference
+    * `geojson_sf`, index.Rmd:407-408). A null or blank document, one
+    * Jackson cannot read (including one nested deeper than its limit)
+    * and one with any invalid geometry all yield no features.
+    */
+  def geojsonFeatures(geojson: String): Seq[(String, String)] =
+    try geometries(geojson).flatMap(geometryWkt)
+    catch { case _: IOException | _: IllegalArgumentException => Nil }
+
+  /** GeoJSON → WKT of the document's first geometry (a
+    * FeatureCollection's first feature: the reference's single-type
+    * gate G6 has already filtered mixed ones); null where
+    * [[geojsonFeatures]] would find no first geometry.
+    */
+  def geojsonToWktStr(geojson: String): String =
+    try geometries(geojson).headOption.flatMap(geometryWkt).map(_._1).orNull
+    catch { case _: IOException | _: IllegalArgumentException => null }
 
   private val geojsonToWktUdf = udf(geojsonToWktStr _)
   def geojsonToWkt(c: Column): Column = geojsonToWktUdf(c)
@@ -189,57 +148,61 @@ object GeoFunctions {
   // MULTIPOLYGON, plus EMPTY variants. Coordinate lexemes are carried
   // through verbatim (no parse→print float churn).
 
-  private sealed trait W
-  private case class WPair(json: String) extends W
-  private case class WList(items: Seq[W]) extends W
+  /** A WKT coordinate tree: one position's number lexemes, or a
+    * parenthesised list. */
+  private[graft] sealed trait WktTree
+  private[graft] final case class WktPosition(lexemes: Seq[String]) extends WktTree
+  private[graft] final case class WktList(items: Seq[WktTree]) extends WktTree
 
-  // FORMAT whitespace (WKT/JSON grammar separators), deliberately NOT
+  /** WKT → (upper-case type, coordinate tree); no tree for `EMPTY` or
+    * no coordinates. Malformed text may throw. */
+  private[graft] def parseWkt(wkt: String): (String, Option[WktTree]) = {
+    val t = wkt.trim
+    val sp = t.indexWhere(c => c == '(' || c.isWhitespace)
+    val typ = (if (sp < 0) t else t.substring(0, sp)).toUpperCase(Locale.ROOT)
+    val rest = if (sp < 0) "" else t.substring(sp).trim
+    (typ, if (rest == "EMPTY" || rest.isEmpty) None else Some(parseTree(rest, 0)._1))
+  }
+
+  // FORMAT whitespace (WKT grammar separators), deliberately NOT
   // Kernels.isRegexWs: the r17 tokenizer contract governs document-text
   // tokenization against string_split_regex oracles; no oracle ever
-  // tokenizes WKT/GeoJSON text, whose inputs are this engine's own
-  // writers plus the reference's ASCII files. isWhitespace is the
-  // lenient superset parse.
-  private def parseWkt(s: String, start: Int): (W, Int) = {
+  // tokenizes WKT text, whose inputs are this engine's own writers plus
+  // the reference's ASCII files. isWhitespace is the lenient superset.
+  private def parseTree(s: String, start: Int): (WktTree, Int) = {
     var i = start
     while (i < s.length && s.charAt(i).isWhitespace) i += 1
     if (s.charAt(i) == '(') {
       i += 1
-      val items = Seq.newBuilder[W]
+      val items = Seq.newBuilder[WktTree]
       var done = false
       while (!done) {
-        val (item, next) = parseWkt(s, i)
+        val (item, next) = parseTree(s, i)
         items += item
         i = next
         while (i < s.length && s.charAt(i).isWhitespace) i += 1
         if (i < s.length && s.charAt(i) == ',') i += 1
         else { if (i < s.length && s.charAt(i) == ')') i += 1; done = true }
       }
-      (WList(items.result()), i)
+      (WktList(items.result()), i)
     } else {
       val from = i
       while (i < s.length && s.charAt(i) != ',' && s.charAt(i) != ')') i += 1
-      // WKT-grammar whitespace (our writers emit single spaces) — not
-      // the text-tokenizer contract (graft.plans.Kernels.isRegexWs)
-      val nums = s.substring(from, i).trim.split("\\s+")
-      (WPair(s"[${nums.mkString(",")}]"), i)
+      (WktPosition(s.substring(from, i).trim.split("\\s+").toSeq), i)
     }
   }
 
-  private def renderPairs(w: W): String = w match {
-    case WPair(j) => j
-    case WList(Seq(p: WPair)) => p.json // "((x y))" nesting
-    case WList(items) => items.map(renderPairs).mkString("[", ",", "]")
+  private def renderPairs(w: WktTree): String = w match {
+    case WktPosition(lexemes) => lexemes.mkString("[", ",", "]")
+    case WktList(Seq(p: WktPosition)) => renderPairs(p) // "((x y))" nesting
+    case WktList(items) => items.map(renderPairs).mkString("[", ",", "]")
   }
 
   /** General WKT → GeoJSON; null/unparseable → null. */
   def wktToGeoJsonStr(wkt: String): String = {
-    if (wkt == null) return null
-    val t = wkt.trim
-    if (t.isEmpty) return null
+    if (wkt == null || wkt.trim.isEmpty) return null
     try {
-      val sp = t.indexWhere(c => c == '(' || c.isWhitespace)
-      val typ = (if (sp < 0) t else t.substring(0, sp)).toUpperCase(java.util.Locale.ROOT)
-      val rest = if (sp < 0) "" else t.substring(sp).trim
+      val (typ, tree) = parseWkt(wkt)
       val gjType = typ match {
         case "POINT" => "Point"
         case "MULTIPOINT" => "MultiPoint"
@@ -248,22 +211,17 @@ object GeoFunctions {
         case "POLYGON" => "Polygon"
         case "MULTIPOLYGON" => "MultiPolygon"
         case "GEOMETRYCOLLECTION" =>
-          return if (rest == "EMPTY" || rest.isEmpty)
-            """{"type":"GeometryCollection","geometries":[]}"""
+          return if (tree.isEmpty) """{"type":"GeometryCollection","geometries":[]}"""
           else null // nested collections: out of the reference's scope
         case _ => return null
       }
-      if (rest == "EMPTY" || rest.isEmpty)
-        return s"""{"type":"$gjType","coordinates":[]}"""
-      val (tree, _) = parseWkt(rest, 0)
-      val coords = (gjType, tree) match {
-        case ("Point", WList(Seq(p: WPair))) => p.json
-        case ("MultiPoint", WList(items)) =>
-          // both "MULTIPOINT ((1 2), (3 4))" and "MULTIPOINT (1 2, 3 4)"
+      val coords = tree match {
+        case None => "[]"
+        case Some(WktList(Seq(p: WktPosition))) if gjType == "Point" => renderPairs(p)
+        // both "MULTIPOINT ((1 2), (3 4))" and "MULTIPOINT (1 2, 3 4)"
+        case Some(WktList(items)) if gjType == "MultiPoint" || gjType == "LineString" =>
           items.map(renderPairs).mkString("[", ",", "]")
-        case ("LineString", WList(items)) =>
-          items.map(renderPairs).mkString("[", ",", "]")
-        case (_, w) => renderPairs(w)
+        case Some(w) => renderPairs(w)
       }
       s"""{"type":"$gjType","coordinates":$coords}"""
     } catch { case _: Exception => null }

@@ -4,11 +4,15 @@ import java.io.{File, IOException}
 import java.nio.{BufferUnderflowException, ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Paths}
 
+import graft.functions.GeoFunctions.{formatCoordinate => fmt}
+
 /** Minimal ESRI Shapefile (.shp + .dbf) reader (reference `read_sf`,
   * notebooks/index.Rmd:473-474,499). Offline constraint: no GDAL/Sedona
   * jars, so this parses the two binary formats directly and emits WKT
-  * strings — exactly the geometry types the reference data contains:
-  * Point (1), PolyLine (3), Polygon (5), MultiPoint (8), Null (0).
+  * strings, coordinates printed by the codec's one formatter
+  * ([[graft.functions.GeoFunctions.formatCoordinate]]): exactly the
+  * geometry types the reference data contains: Point (1), PolyLine (3),
+  * Polygon (5), MultiPoint (8), Null (0).
   *
   * Polygon ring grouping follows the shapefile spec: outer rings are
   * clockwise (negative shoelace area), holes counter-clockwise; holes
@@ -44,9 +48,6 @@ object Shapefile {
 
   // ------------------------------------------------------------- .shp
 
-  private def fmt(d: Double): String =
-    if (d == math.rint(d) && math.abs(d) < 1e15) d.toLong.toString else d.toString
-
   private def readShp(path: String): Seq[(String, String)] = {
     val bytes = Files.readAllBytes(Paths.get(path))
     def fail(off: Long, detail: String) = throw new MalformedShapefileException(path, off, detail)
@@ -74,39 +75,39 @@ object Shapefile {
   }
 
   private def parseRecord(b: ByteBuffer): (String, String) = {
+    def point() = { val x = b.getDouble; (x, b.getDouble) }
     val shapeType = b.getInt
     shapeType match {
       case 0 => (null, null)
-      case 1 =>
-        val x = b.getDouble; val y = b.getDouble
-        (s"POINT (${fmt(x)} ${fmt(y)})", "POINT")
+      case 1 => (s"POINT (${position(point())})", "POINT")
       case 8 =>
         b.position(b.position() + 32) // bbox
         val n = b.getInt
-        val pts = (0 until n).map(_ => { val x = b.getDouble; val y = b.getDouble; s"(${fmt(x)} ${fmt(y)})" })
-        (s"MULTIPOINT (${pts.mkString(", ")})", "MULTIPOINT")
+        (s"MULTIPOINT ${group((0 until n).map(_ => s"(${position(point())})"))}", "MULTIPOINT")
       case 3 | 5 =>
         b.position(b.position() + 32) // bbox
         val numParts = b.getInt
         val numPoints = b.getInt
         val parts = (0 until numParts).map(_ => b.getInt)
-        val pts = (0 until numPoints).map(_ => { val x = b.getDouble; val y = b.getDouble; (x, y) })
+        val pts = (0 until numPoints).map(_ => point())
         val rings = parts.zipWithIndex.map { case (start, i) =>
           val end = if (i + 1 < numParts) parts(i + 1) else numPoints
           pts.slice(start, end)
         }
-        if (shapeType == 3) {
-          val ls = rings.map(r => r.map { case (x, y) => s"${fmt(x)} ${fmt(y)}" }.mkString(", "))
-          if (ls.length == 1) (s"LINESTRING (${ls.head})", "LINESTRING")
-          else (s"MULTILINESTRING (${ls.map(l => s"($l)").mkString(", ")})", "MULTILINESTRING")
-        } else polygonWkt(rings)
+        if (shapeType == 5) polygonWkt(rings)
+        else if (rings.length == 1) (s"LINESTRING ${line(rings.head)}", "LINESTRING")
+        else (s"MULTILINESTRING ${group(rings.map(line))}", "MULTILINESTRING")
       case other =>
         (null, s"UNSUPPORTED_$other")
     }
   }
 
+  private def position(p: (Double, Double)): String = s"${fmt(p._1)} ${fmt(p._2)}"
+  private def group(items: Seq[String]): String = items.mkString("(", ", ", ")")
+  private def line(points: Seq[(Double, Double)]): String = group(points.map(position))
+
   /** Shoelace signed area: > 0 = counter-clockwise (hole per spec). */
-  private def signedArea(ring: Seq[(Double, Double)]): Double = {
+  private[io] def signedArea(ring: Seq[(Double, Double)]): Double = {
     var a = 0.0
     var i = 0
     while (i < ring.length - 1) {
@@ -117,8 +118,6 @@ object Shapefile {
   }
 
   private def polygonWkt(rings: Seq[Seq[(Double, Double)]]): (String, String) = {
-    def ringStr(r: Seq[(Double, Double)]) =
-      "(" + r.map { case (x, y) => s"${fmt(x)} ${fmt(y)}" }.mkString(", ") + ")"
     // group: outer (CW, area<=0) starts a polygon; holes attach to it
     val polys = Seq.newBuilder[Seq[Seq[(Double, Double)]]]
     var current: List[Seq[(Double, Double)]] = Nil
@@ -132,10 +131,8 @@ object Shapefile {
     }
     if (current.nonEmpty) polys += current.reverse
     val ps = polys.result()
-    if (ps.length == 1)
-      (s"POLYGON (${ps.head.map(ringStr).mkString(", ")})", "POLYGON")
-    else
-      (s"MULTIPOLYGON (${ps.map(p => s"(${p.map(ringStr).mkString(", ")})").mkString(", ")})", "MULTIPOLYGON")
+    if (ps.length == 1) (s"POLYGON ${group(ps.head.map(line))}", "POLYGON")
+    else (s"MULTIPOLYGON ${group(ps.map(p => group(p.map(line))))}", "MULTIPOLYGON")
   }
 
   // ------------------------------------------------------------- .dbf

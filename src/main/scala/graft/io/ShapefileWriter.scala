@@ -4,6 +4,9 @@ import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import graft.functions.GeoFunctions
+import graft.functions.GeoFunctions.{WktList, WktPosition, WktTree}
+
 /** Binary ESRI Shapefile writer — the true K1 sink (reference
   * `write_sf(.../{identifier}/{identifier}.shp)`, notebooks/index.Rmd:
   * 410-411,436,481,500,534,553,584-585), inverse of [[Shapefile]].
@@ -11,13 +14,16 @@ import java.nio.file.{Files, Paths}
   * (record index), `.dbf` (attributes, all fields as type-C text like
   * the reader consumes), `.prj` (WGS84).
   *
-  * Geometry comes in as WKT — the pipeline's carrier format — and maps
-  * onto the same shape types the reader parses: POINT→1,
-  * LINESTRING/MULTILINESTRING→3, POLYGON/MULTIPOLYGON→5, MULTIPOINT→8,
-  * null WKT→0 (null shape, the IMMA attrs-without-geometry case). Ring
-  * orientation is normalized to spec on write (outer rings clockwise,
-  * holes counter-clockwise, rings closed), so `write → Shapefile.read`
-  * round-trips WKT byte-for-byte for spec-oriented input.
+  * Geometry comes in as WKT — the pipeline's carrier format, parsed by
+  * [[graft.functions.GeoFunctions.parseWkt]] — and maps onto the same
+  * shape types the reader parses: POINT→1, LINESTRING/MULTILINESTRING→3,
+  * POLYGON/MULTIPOLYGON→5, MULTIPOINT→8, null WKT and `<TYPE> EMPTY`→0
+  * (null shape: the IMMA attrs-without-geometry case, and an empty
+  * GeoJSON geometry as `geojson_sf` reads it). Ring orientation is
+  * normalized to spec on write (outer rings clockwise, holes
+  * counter-clockwise, rings closed, [[Shapefile.signedArea]]), so
+  * `write → Shapefile.read` round-trips WKT byte-for-byte for
+  * spec-oriented input.
   *
   * Driver-side like the reader (per-dataset layers are config-scale).
   */
@@ -26,55 +32,14 @@ object ShapefileWriter {
   private val Wgs84Prj =
     """GEOGCS["GCS_WGS_1984",DATUM["D_WGS_1984",SPHEROID["WGS_1984",6378137.0,298.257223563]],PRIMEM["Greenwich",0.0],UNIT["Degree",0.0174532925199433]]"""
 
-  // ----------------------------------------------------------- WKT parse
+  // ----------------------------------------------------------- WKT
 
-  private sealed trait T
-  private case class P(x: Double, y: Double) extends T
-  private case class L(items: Seq[T]) extends T
-
-  // FORMAT whitespace (WKT grammar separators), deliberately NOT
-  // Kernels.isRegexWs — see the note on GeoFunctions.parseWkt: the
-  // tokenizer contract governs document text, not geometry formats.
-  private def parseTree(s: String, start: Int): (T, Int) = {
-    var i = start
-    while (i < s.length && s.charAt(i).isWhitespace) i += 1
-    if (s.charAt(i) == '(') {
-      i += 1
-      val items = Seq.newBuilder[T]
-      var done = false
-      while (!done) {
-        val (item, next) = parseTree(s, i)
-        items += item
-        i = next
-        while (i < s.length && s.charAt(i).isWhitespace) i += 1
-        if (i < s.length && s.charAt(i) == ',') i += 1
-        else { if (i < s.length && s.charAt(i) == ')') i += 1; done = true }
-      }
-      (L(items.result()), i)
-    } else {
-      val from = i
-      while (i < s.length && s.charAt(i) != ',' && s.charAt(i) != ')') i += 1
-      // WKT-grammar whitespace (our writers emit single spaces) — not
-      // the text-tokenizer contract (graft.plans.Kernels.isRegexWs)
-      val nums = s.substring(from, i).trim.split("\\s+")
-      (P(java.lang.Double.parseDouble(nums(0)), java.lang.Double.parseDouble(nums(1))), i)
-    }
-  }
-
-  private def pts(t: T): Seq[(Double, Double)] = t match {
-    case P(x, y) => Seq((x, y))
-    case L(items) => items.flatMap(pts)
-  }
-
-  /** Shoelace signed area: > 0 = counter-clockwise. */
-  private def signedArea(ring: Seq[(Double, Double)]): Double = {
-    var a = 0.0
-    var i = 0
-    while (i < ring.length - 1) {
-      a += ring(i)._1 * ring(i + 1)._2 - ring(i + 1)._1 * ring(i)._2
-      i += 1
-    }
-    a / 2
+  /** A tree's positions as (x, y); further ordinates are dropped. */
+  private def points(t: WktTree): Seq[(Double, Double)] = t match {
+    case WktPosition(Seq(x, y, _*)) => Seq((x.toDouble, y.toDouble))
+    case WktPosition(lexemes) =>
+      throw new IllegalArgumentException(s"WKT position '${lexemes.mkString(" ")}' has fewer than two ordinates")
+    case WktList(items) => items.flatMap(points)
   }
 
   private def close(ring: Seq[(Double, Double)]): Seq[(Double, Double)] =
@@ -86,43 +51,31 @@ object ShapefileWriter {
   private def orientPolygon(rings: Seq[Seq[(Double, Double)]]): Seq[Seq[(Double, Double)]] =
     rings.zipWithIndex.map { case (r0, i) =>
       val r = close(r0)
-      val ccw = signedArea(r) > 0
+      val ccw = Shapefile.signedArea(r) > 0
       if ((i == 0 && ccw) || (i > 0 && !ccw)) r.reverse else r
     }
 
   /** (shapeType, parts). Parts are point runs; for type 1/8 a single
     * run, for 3/5 one run per line/ring.
     */
-  private[io] def wktToParts(wkt: String): (Int, Seq[Seq[(Double, Double)]]) = {
-    if (wkt == null) return (0, Nil)
-    val t = wkt.trim
-    val sp = t.indexWhere(c => c == '(' || c.isWhitespace)
-    val typ = (if (sp < 0) t else t.substring(0, sp)).toUpperCase(java.util.Locale.ROOT)
-    val rest = if (sp < 0) "" else t.substring(sp).trim
-    if (rest == "EMPTY" || rest.isEmpty) return (0, Nil)
-    val tree = parseTree(rest, 0)._1
-    typ match {
-      case "POINT" => (1, Seq(pts(tree)))
-      case "MULTIPOINT" => (8, Seq(pts(tree)))
-      case "LINESTRING" => (3, Seq(pts(tree)))
-      case "MULTILINESTRING" => tree match {
-        case L(lines) => (3, lines.map(pts))
-        case _ => (3, Seq(pts(tree)))
-      }
-      case "POLYGON" => tree match {
-        case L(rings) => (5, orientPolygon(rings.map(pts)))
-        case _ => (5, orientPolygon(Seq(pts(tree))))
-      }
-      case "MULTIPOLYGON" => tree match {
-        case L(polys) => (5, polys.flatMap {
-          case L(rings) => orientPolygon(rings.map(pts))
-          case p => orientPolygon(Seq(pts(p)))
-        })
-        case _ => (5, Nil)
-      }
-      case other => throw new IllegalArgumentException(s"unsupported WKT type $other")
+  private[io] def wktToParts(wkt: String): (Int, Seq[Seq[(Double, Double)]]) =
+    if (wkt == null) (0, Nil)
+    else GeoFunctions.parseWkt(wkt) match {
+      case (_, None) => (0, Nil)
+      case ("POINT", Some(tree)) => (1, Seq(points(tree)))
+      case ("MULTIPOINT", Some(tree)) => (8, Seq(points(tree)))
+      case ("LINESTRING", Some(tree)) => (3, Seq(points(tree)))
+      case ("MULTILINESTRING", Some(WktList(lines))) => (3, lines.map(points))
+      case ("MULTILINESTRING", Some(tree)) => (3, Seq(points(tree)))
+      case ("POLYGON", Some(WktList(rings))) => (5, orientPolygon(rings.map(points)))
+      case ("POLYGON", Some(tree)) => (5, orientPolygon(Seq(points(tree))))
+      case ("MULTIPOLYGON", Some(WktList(polys))) => (5, polys.flatMap {
+        case WktList(rings) => orientPolygon(rings.map(points))
+        case p => orientPolygon(Seq(points(p)))
+      })
+      case ("MULTIPOLYGON", Some(_)) => (5, Nil)
+      case (other, _) => throw new IllegalArgumentException(s"unsupported WKT type $other")
     }
-  }
 
   // ----------------------------------------------------------- .shp/.shx
 

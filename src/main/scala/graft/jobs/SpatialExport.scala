@@ -10,7 +10,10 @@ import org.apache.spark.sql.functions._
   * (`notebooks/index.Rmd:396-587`): one geometry file per dataset
   * identifier, sourced from (in the reference's order)
   *
-  *  1. the `geometry_geojson` column (single-geometry-type rows only);
+  *  1. the `geometry_geojson` column (single-geometry-type rows only,
+  *     read by [[graft.functions.GeoFunctions.geojsonFeatures]]; a
+  *     document that is unreadable or has an invalid geometry has no
+  *     features, and an empty geometry is written as a null shape);
   *  2. twenty per-network point CSVs (S5, skipped when step 1 already
   *     produced the file);
   *  3. the windfarm shapefile folder (polygon layers only, gathered);
@@ -108,10 +111,10 @@ object SpatialExport {
     val rows = combined.select(col("name"), col("identifier"), col("geometry_geojson"))
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
 
-    // ---- 1. geometry_geojson column (index.Rmd:400-416); null, blank
-    // and "null" documents parse to no features
+    // ---- 1. geometry_geojson column (index.Rmd:400-416); null, blank,
+    // "null", unreadable and invalid documents yield no features
     val geojson: Seq[(String, Feats)] = rows.toSeq.flatMap { case (_, identifier, document) =>
-      val feats = geojsonFeatures(document)
+      val feats = GeoFunctions.geojsonFeatures(document)
       val types = feats.map(_._2).distinct
       if (feats.nonEmpty && types.length == 1)
         Some(identifier -> feats.map { case (w, _) => (w, Seq.empty[(String, String)]) })
@@ -237,17 +240,23 @@ object SpatialExport {
   private def readShapefile(path: String): Feats =
     Shapefile.read(path)._2.map(f => (f.wkt, f.attrs.toSeq))
 
-  /** Step 5: the Basque TSV's UTM 30N points in WGS84. */
+  /** Step 5: the Basque TSV's UTM 30N points in WGS84. A row whose `x`
+    * or `y` is not a number (`NA`, blank, text) fails naming the file and
+    * the data row, as the reference's `st_as_sf` refuses NA coordinates.
+    */
   private def readSpain(spark: SparkSession, path: String): Feats =
     Sources.tsv(spark, path)
       .select(col("x").cast("double"), col("y").cast("double"))
       .select(col("x"), col("y"),
         GeoFunctions.utm30nLon(col("x"), col("y")).as("lon"),
         GeoFunctions.utm30nLat(col("x"), col("y")).as("lat"))
-      .collect().toSeq
-      .map(r => (
-        s"POINT (${r.getAs[Double]("lon")} ${r.getAs[Double]("lat")})",
-        Seq("x" -> r.getAs[Double]("x").toString, "y" -> r.getAs[Double]("y").toString)))
+      .collect().toSeq.zipWithIndex
+      .map { case (r, i) =>
+        if (r.isNullAt(0) || r.isNullAt(1))
+          throw new IllegalArgumentException(s"$path: data row ${i + 1} has no numeric x and y")
+        (s"POINT (${r.getDouble(2)} ${r.getDouble(3)})",
+          Seq("x" -> r.getDouble(0).toString, "y" -> r.getDouble(1).toString))
+      }
 
   /** Step 6: the WESPAS positions as one LINESTRING. */
   private def readWespas(path: String): Feats = {
@@ -255,49 +264,6 @@ object SpatialExport {
     val pts = rows.collect { case Seq(lonS, latS, _*) if lonS != null && latS != null =>
       s"$lonS $latS" }
     Seq((s"LINESTRING (${pts.mkString(", ")})", Seq.empty))
-  }
-
-  /** GeoJSON document → per-feature (wkt, type); FeatureCollections
-    * yield every feature (reference `geojson_sf`, index.Rmd:407-408).
-    */
-  def geojsonFeatures(geojson: String): Seq[(String, String)] = {
-    import GeoFunctions.ujsonLite._
-    if (geojson == null || geojson.trim.isEmpty || geojson.trim == "null") return Nil
-    try {
-      val v = GeoFunctions.ujsonLite.parse(geojson)
-      val geoms: Seq[Value] = v match {
-        case Obj(m) if m.get("type").contains(Str("FeatureCollection")) =>
-          m.get("features") match {
-            case Some(Arr(fs)) => fs.collect { case Obj(fm) if fm.contains("geometry") => fm("geometry") }
-            case _ => Nil
-          }
-        case Obj(m) if m.get("type").contains(Str("Feature")) => Seq(m("geometry"))
-        case o => Seq(o)
-      }
-      geoms.flatMap {
-        case Obj(m) => (m.get("type"), m.get("coordinates")) match {
-          case (Some(Str(t)), Some(_)) =>
-            val json = renderGeom(m)
-            Option(GeoFunctions.geojsonToWktStr(json)).map(w => (w, t))
-          case _ => None
-        }
-        case _ => None
-      }
-    } catch { case _: Exception => Nil }
-  }
-
-  /** Re-serialize a parsed geometry object minimally for WKT conversion. */
-  private def renderGeom(m: Map[String, GeoFunctions.ujsonLite.Value]): String = {
-    import GeoFunctions.ujsonLite._
-    def render(v: Value): String = v match {
-      case Num(d) => if (d == math.rint(d) && math.abs(d) < 1e15) d.toLong.toString else d.toString
-      case Str(s) => "\"" + s + "\""
-      case Arr(xs) => xs.map(render).mkString("[", ",", "]")
-      case Obj(o) => o.map { case (k, x) => "\"" + k + "\":" + render(x) }.mkString("{", ",", "}")
-      case NullV => "null"
-    }
-    val t = m("type") match { case Str(s) => s; case _ => "" }
-    s"""{"type":"$t","coordinates":${render(m("coordinates"))}}"""
   }
 
   /** Per-dataset sink: the reference's artifact, the shapefile bundle

@@ -6,6 +6,9 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+
 /** Scalar-function unit tests + ScalaCheck-generator properties
   * (SURVEY §5.2/5.3): make_identifier, date edges, string helpers,
   * GeoJSON↔WKT, the ordered concat aggregator, and the kernel
@@ -144,6 +147,7 @@ class FunctionsSpec extends SparkSpec {
       "POINT (1.5 -2)",
       "MULTIPOINT ((1 2), (3 4))",
       "LINESTRING (0 0, 1 1, 2 0)",
+      "MULTILINESTRING ((0 0, 1 1), (2 2, 3 3, 4 2))",
       "POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0), (1 1, 2 1, 2 2, 1 2, 1 1))",
       "MULTIPOLYGON (((0 0, 1 0, 1 1, 0 0)), ((5 5, 6 5, 6 6, 5 5)))")
     cases.foreach { wkt =>
@@ -154,6 +158,82 @@ class FunctionsSpec extends SparkSpec {
     }
     assert(GeoFunctions.wktToGeoJsonStr("GEOMETRYCOLLECTION EMPTY") ===
       """{"type":"GeometryCollection","geometries":[]}""")
+  }
+
+  /** Canonical WKT of every GeoJSON geometry type, coordinates printed
+    * by the codec's formatter (2 or 3 ordinates, integral, fractional,
+    * tiny and huge values). */
+  private val wktGen: Gen[(String, String)] = {
+    val coordinate = Gen.oneOf(Gen.chooseNum(-180.0, 180.0), Gen.chooseNum(-1e6, 1e6).map(math.rint),
+      Gen.chooseNum(-1e-6, 1e-6), Gen.chooseNum(-1e300, 1e300))
+      .map(GeoFunctions.formatCoordinate)
+    val position = Gen.chooseNum(2, 3).flatMap(Gen.listOfN(_, coordinate)).map(_.mkString(" "))
+    def some[A](min: Int, g: Gen[A]) = Gen.chooseNum(min, 4).flatMap(Gen.listOfN(_, g))
+    def group(items: Seq[String]) = items.mkString("(", ", ", ")")
+    val line = some(2, position).map(group)
+    val polygon = some(1, some(4, position).map(group)).map(group)
+    Gen.oneOf(
+      position.map(p => (s"POINT ($p)", "Point")),
+      some(1, position).map(ps => ("MULTIPOINT " + group(ps.map(p => s"($p)")), "MultiPoint")),
+      line.map(l => ("LINESTRING " + l, "LineString")),
+      some(1, line).map(ls => ("MULTILINESTRING " + group(ls), "MultiLineString")),
+      polygon.map(p => ("POLYGON " + p, "Polygon")),
+      some(1, polygon).map(ps => ("MULTIPOLYGON " + group(ps), "MultiPolygon")))
+  }
+
+  /** Runs a property on another thread, so that a hang fails it. */
+  private def within(limit: FiniteDuration)(property: => Unit): Unit =
+    Await.result(Future(property)(ExecutionContext.global), limit)
+
+  test("generated geometries of every type survive WKT → GeoJSON → WKT") {
+    within(2.minutes) {
+      forAllSampled(wktGen, n = 500) { case (wkt, typ) =>
+        val gj = GeoFunctions.wktToGeoJsonStr(wkt)
+        assert(GeoFunctions.geojsonToWktStr(gj) === wkt, gj)
+        assert(GeoFunctions.geojsonFeatures(gj) === Seq((wkt, typ)), gj)
+      }
+    }
+  }
+
+  test("every prefix of a FeatureCollection reads as all of its features or none") {
+    within(2.minutes) {
+      forAllSampled(Gen.chooseNum(1, 4).flatMap(Gen.listOfN(_, wktGen)), n = 60) { geoms =>
+        val doc = geoms.map { case (wkt, _) =>
+          s"""{"type":"Feature","properties":{"n":"a\\u00e9"},"geometry":${GeoFunctions.wktToGeoJsonStr(wkt)}}"""
+        }.mkString("""{"type":"FeatureCollection","features":[""", ",", "]}")
+        assert(GeoFunctions.geojsonFeatures(doc) === geoms)
+        (0 until doc.length).foreach { n =>
+          val got = GeoFunctions.geojsonFeatures(doc.take(n))
+          assert(got.isEmpty || got === geoms, doc.take(n))
+        }
+      }
+    }
+  }
+
+  test("GeoJSON coordinates that are not positions invalidate the whole document") {
+    def features(coordinates: String, typ: String = "Point") =
+      GeoFunctions.geojsonFeatures(s"""{"type":"$typ","coordinates":$coordinates}""")
+    // empty coordinates are the type's empty geometry, as geojson_sf reads them
+    assert(features("[]") === Seq(("POINT EMPTY", "Point")))
+    assert(features("[]", "MultiPolygon") === Seq(("MULTIPOLYGON EMPTY", "MultiPolygon")))
+    Seq("[5]", "[true,false]", "[1,\"2\"]", "[1,null]", "[[1,2]]", "null", "5").foreach { c =>
+      assert(features(c) === Nil, c)
+      assert(GeoFunctions.geojsonToWktStr(s"""{"type":"Point","coordinates":$c}""") === null, c)
+    }
+    assert(features("[[0,0],[]]", "LineString") === Nil)
+    assert(features("[[[0,0],[1,1]],[]]", "MultiLineString") === Nil)
+    // one invalid feature empties the collection
+    val fc = """{"type":"FeatureCollection","features":[""" +
+      """{"type":"Feature","geometry":{"type":"Point","coordinates":[1,2]}},""" +
+      """{"type":"Feature","geometry":{"type":"Point","coordinates":[3]}}]}"""
+    assert(GeoFunctions.geojsonFeatures(fc) === Nil)
+    // nesting past Jackson's limit is refused, not a StackOverflowError
+    val deep = """{"type":"Point","coordinates":""" + "[" * 200000 + "]" * 200000 + "}"
+    assert(GeoFunctions.geojsonFeatures(deep) === Nil)
+    // what a hand-edited cell may hold: raw control characters, any
+    // escaped character, lenient number forms; trailing text is ignored
+    assert(GeoFunctions.geojsonFeatures("{\"type\":\"Point\",\"note\":\"a\tb\\q\",\"coordinates\":[+1,.5]} x") ===
+      Seq(("POINT (1 0.5)", "Point")))
   }
 
   test("geojsonType sniffs FeatureCollections (G6)") {

@@ -3,6 +3,11 @@ package graft.io
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Paths}
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-trip: ShapefileWriter.write → Shapefile.read must reproduce
@@ -146,6 +151,46 @@ class ShapefileWriterSpec extends AnyFunSuite {
     rejects(base, dbf, 8)
     Files.write(Paths.get(dbf), good)
     assert(Shapefile.read(s"$base.shp")._2.map(_.attrs("name")) === Seq("alpha", "beta", "gamma"))
+  }
+
+  test("generated spec-oriented geometries of every shape type round-trip") {
+    import graft.functions.GeoFunctions.formatCoordinate
+    // rectangles: outer rings clockwise, holes counter-clockwise, closed
+    val corner = for {
+      x <- Gen.chooseNum(-1800, 1800); y <- Gen.chooseNum(-900, 900)
+      w <- Gen.chooseNum(1, 500); h <- Gen.chooseNum(1, 500)
+    } yield (x / 10.0, y / 10.0, w / 10.0, h / 10.0)
+    def ring(clockwise: Boolean) = corner.map { case (x, y, w, h) =>
+      val ccw = Seq((x, y), (x + w, y), (x + w, y + h), (x, y + h), (x, y))
+      (if (clockwise) ccw.reverse else ccw)
+        .map { case (a, b) => s"${formatCoordinate(a)} ${formatCoordinate(b)}" }.mkString("(", ", ", ")")
+    }
+    val polygon = for {
+      outer <- ring(clockwise = true)
+      holes <- Gen.chooseNum(0, 2).flatMap(Gen.listOfN(_, ring(clockwise = false)))
+    } yield (outer +: holes).mkString("(", ", ", ")")
+    val position = Gen.chooseNum(-180.0, 180.0).map(formatCoordinate)
+      .flatMap(x => Gen.chooseNum(-90.0, 90.0).map(y => s"$x ${formatCoordinate(y)}"))
+    def some[A](min: Int, g: Gen[A]) = Gen.chooseNum(min, 4).flatMap(Gen.listOfN(_, g))
+    def group(items: Seq[String]) = items.mkString("(", ", ", ")")
+    val line = some(2, position).map(group)
+    val shape = Gen.oneOf(
+      Gen.const(position.map(p => s"POINT ($p)")),
+      Gen.const(some(1, position).map(ps => "MULTIPOINT " + group(ps.map(p => s"($p)")))),
+      Gen.const(line.map("LINESTRING " + _)),
+      Gen.const(some(2, line).map("MULTILINESTRING " + group(_))),
+      Gen.const(polygon.map("POLYGON " + _)),
+      Gen.const(some(2, polygon).map("MULTIPOLYGON " + group(_))))
+    // a layer holds one shape type: several geometries of one generator
+    val layer = shape.flatMap(g => some(1, g))
+    Await.result(Future {
+      (0 until 150).foreach { i =>
+        layer(Gen.Parameters.default, Seed(i.toLong)).foreach { wkts =>
+          val (_, feats) = roundTrip(Nil, wkts.map(w => (w, Nil)))
+          assert(feats.map(_.wkt) === wkts)
+        }
+      }
+    }(ExecutionContext.global), 2.minutes)
   }
 
   test("mixed geometry types in one layer are rejected") {

@@ -129,29 +129,55 @@ class SpatialExportSpec extends SparkSpec {
       ("Null string net", "null_string_net", "null", "u4"),
       ("Null net", "null_net", null, "u5"),
       // registered site CSV whose input file is absent: flagged, empty bundle
-      ("Movebank", "movebank", null, "u6"))
+      ("Movebank", "movebank", null, "u6"),
+      // an empty geometry is one null-shape record
+      ("Empty net", "empty_net", """{"type":"Point","coordinates":[]}""", "u7"),
+      // invalid documents have no features, like unreadable ones
+      ("Short net", "short_net", """{"type":"Point","coordinates":[5]}""", "u8"),
+      ("Boolean net", "boolean_net", """{"type":"Point","coordinates":[true,false]}""", "u9"),
+      ("Deep net", "deep_net", """{"type":"Point","coordinates":""" + "[" * 200000 + "]" * 200000 + "}", "u10"))
       .toDF("name", "identifier", "geometry_geojson", "url")
     val dataDir = Files.createTempDirectory("graft_spatial_data").toString
     val out = Files.createTempDirectory("graft_spatial_out").toString
     val r = SpatialExport.run(spark, combined, dataDir, out)
 
     val dirs = new java.io.File(out).listFiles().map(_.getName).toSet
-    assert(dirs === Set("point_net", "two_net", "mixed_net", "null_string_net", "null_net", "movebank"))
+    assert(dirs === Set("point_net", "two_net", "mixed_net", "null_string_net", "null_net", "movebank",
+      "empty_net", "short_net", "boolean_net", "deep_net"))
     dirs.foreach(id => assert(new java.io.File(out, id).list().toSet === SpatialExportSpec.bundle(id), id))
     val counts = dirs.map(id => id -> Shapefile.read(s"$out/$id/$id.shp")._2.length).toMap
     assert(counts === Map("point_net" -> 1, "two_net" -> 2, "mixed_net" -> 0,
-      "null_string_net" -> 0, "null_net" -> 0, "movebank" -> 0))
+      "null_string_net" -> 0, "null_net" -> 0, "movebank" -> 0,
+      "empty_net" -> 1, "short_net" -> 0, "boolean_net" -> 0, "deep_net" -> 0))
+    assert(Shapefile.read(s"$out/empty_net/empty_net.shp")._2.map(_.wkt) === Seq(null))
 
     val flags = r.withShapefileFlag.select(col("identifier"), col("has_shapefile"))
       .collect().map(row => row.getString(0) -> row.getBoolean(1)).toMap
     assert(flags === Map("point_net" -> true, "two_net" -> true, "mixed_net" -> false,
-      "null_string_net" -> false, "null_net" -> false, "movebank" -> true))
+      "null_string_net" -> false, "null_net" -> false, "movebank" -> true,
+      "empty_net" -> true, "short_net" -> false, "boolean_net" -> false, "deep_net" -> false))
 
-    val missing = Seq(("Mixed net", "mixed_net", "u3"), ("Null net", "null_net", "u5"),
-      ("Null string net", "null_string_net", "u4"))
+    val missing = Seq(("Boolean net", "boolean_net", "u9"), ("Deep net", "deep_net", "u10"),
+      ("Mixed net", "mixed_net", "u3"), ("Null net", "null_net", "u5"),
+      ("Null string net", "null_string_net", "u4"), ("Short net", "short_net", "u8"))
     assert(r.missingSpatial.collect().map(row => (row.getString(0), row.getString(1), row.getString(2))).toSeq
       === missing)
     assert(r.missingIdentifiers === missing.map(_._2))
+  }
+
+  test("a Basque TSV row with an NA coordinate fails naming the file and the data row") {
+    import spark.implicits._
+    val dataDir = Files.createTempDirectory("graft_spain_data")
+    val tsv = dataDir.resolve(SpatialExport.spainTsv)
+    Files.createDirectories(tsv.getParent)
+    // the committed portal sample: its third data row is "NA\t4812003"
+    val in = getClass.getResourceAsStream(s"/portal/${SpatialExport.spainTsv}")
+    try Files.copy(in, tsv) finally in.close()
+    val combined = Seq((SpatialExport.spainName, "basque", null: String, "u1"))
+      .toDF("name", "identifier", "geometry_geojson", "url")
+    val out = Files.createTempDirectory("graft_spain_out").toString
+    val e = intercept[IllegalArgumentException](SpatialExport.run(spark, combined, dataDir.toString, out))
+    assert(e.getMessage === s"$tsv: data row 3 has no numeric x and y")
   }
 
   test("hostile site CSVs: step 2 writes what per-file reads, the F2 filter and the WKT points wrote") {
