@@ -258,12 +258,14 @@ object SpatialExport {
           Seq("x" -> r.getDouble(0).toString, "y" -> r.getDouble(1).toString))
       }
 
-  /** Step 6: the WESPAS positions as one LINESTRING. */
+  /** Step 6: the WESPAS positions as one LINESTRING; a sheet with no
+    * row that has both coordinates is `LINESTRING EMPTY` (a null-shape
+    * record, the reference's `st_linestring` of no points). */
   private def readWespas(path: String): Feats = {
     val (_, rows) = Xlsx.readSheet(path, 1)
     val pts = rows.collect { case Seq(lonS, latS, _*) if lonS != null && latS != null =>
       s"$lonS $latS" }
-    Seq((s"LINESTRING (${pts.mkString(", ")})", Seq.empty))
+    Seq((if (pts.isEmpty) "LINESTRING EMPTY" else s"LINESTRING (${pts.mkString(", ")})", Seq.empty))
   }
 
   /** Per-dataset sink: the reference's artifact, the shapefile bundle

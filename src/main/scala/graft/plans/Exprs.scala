@@ -1,32 +1,102 @@
 package graft.plans
 
+import java.lang.reflect.{InvocationTargetException, Method, Modifier}
+
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen._
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Native Catalyst expressions for the hot per-row kernels.
   *
-  * Each emits a single static call to [[Kernels]] in `doGenCode`, so the
-  * whole pipeline stays inside one WholeStageCodegen span — unlike a
-  * Scala UDF, which forces serialization to/from the closure and breaks
-  * the codegen fence. At 100 TB these run once per document/vector, so
-  * the difference is a full scan-speed factor.
+  * Every kernel is one [[Exprs.KernelCall]]: a static call to a
+  * [[Kernels]] method on the children's values followed by constant
+  * parameters, null when any child is null. Codegen emits that call
+  * inline, so the whole pipeline stays inside one WholeStageCodegen span
+  * — unlike a Scala UDF, which forces serialization to/from the closure
+  * and breaks the codegen fence. The column functions below differ only
+  * in the SQL name, the kernel method, the result type and the
+  * parameters.
   */
 object Exprs {
 
-  case class SimHash64(child: Expression)
-      extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def prettyName: String = "simhash64"
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.simhash(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.plans.Kernels.simhash($c)")
-    override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-      copy(child = newChild)
+  /** `Kernels.<method>(children…, params…)` as a Catalyst expression,
+    * printed as `name(children…, params…)`. `Int` params are inlined
+    * into the generated code; array params (centroids, codebooks,
+    * weights, bloom words) ride in the generated class as reference
+    * objects, so the per-row cost is the kernel itself. The interpreted
+    * path calls the same method by reflection, as Spark's `StaticInvoke`
+    * does; the method is resolved when the expression is built, so an
+    * unknown kernel fails there, naming it.
+    */
+  case class KernelCall(name: String, method: String, dataType: DataType,
+                        children: Seq[Expression], params: Seq[Any])
+      extends Expression {
+    require(kernels.get(method).exists(_.getParameterCount == children.size + params.size),
+      s"no kernel Kernels.$method taking ${children.size} columns and ${params.size} parameters")
+
+    @transient private lazy val kernel: Method = kernels(method)
+
+    override def nullable: Boolean = children.exists(_.nullable)
+    override def foldable: Boolean = children.forall(_.foldable)
+    override def prettyName: String = name
+    override protected def flatArguments: Iterator[Any] = (children ++ params).iterator
+
+    override def eval(input: InternalRow): Any = {
+      val args = children.map(_.eval(input))
+      if (args.contains(null)) null
+      else try kernel.invoke(Kernels, (args ++ params).map(_.asInstanceOf[AnyRef]): _*)
+      catch { case e: InvocationTargetException => throw e.getCause }
+    }
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val gens = children.map(_.genCode(ctx))
+      val consts = params.map {
+        case i: Int => i.toString
+        case a => ctx.addReferenceObj(method, a, a.getClass.getCanonicalName)
+      }
+      val args = (gens.map(_.value.toString) ++ consts).mkString(", ")
+      val init = s"${CodeGenerator.javaType(dataType)} ${ev.value} = ${CodeGenerator.defaultValue(dataType)};"
+      val call = s"${ev.value} = graft.plans.Kernels.$method($args);"
+      val childCode = Block.blocksToBlock(gens.map(_.code))
+      if (nullable) {
+        val anyNull = children.zip(gens).collect { case (c, g) if c.nullable => g.isNull }.mkString(" || ")
+        ev.copy(code = childCode + code"""
+          boolean ${ev.isNull} = $anyNull;
+          $init
+          if (!${ev.isNull}) { $call }""")
+      } else {
+        ev.copy(code = childCode + code"""
+          $init
+          $call""", isNull = FalseLiteral)
+      }
+    }
+
+    override protected def withNewChildrenInternal(
+        newChildren: IndexedSeq[Expression]): KernelCall = copy(children = newChildren)
   }
+
+  private lazy val kernels: Map[String, Method] =
+    Kernels.getClass.getDeclaredMethods.filter(m => Modifier.isPublic(m.getModifiers))
+      .map(m => m.getName -> m).toMap
+
+  // Column-level API ---------------------------------------------------
+
+  private def col(e: Expression): Column = ColumnBridge.column(e)
+  private def ex(c: Column): Expression = ColumnBridge.expression(c)
+
+  private def call(name: String, method: String, dataType: DataType, children: Seq[Column],
+                   params: Any*): Column =
+    col(KernelCall(name, method, dataType, children.map(ex), params))
+
+  private val longs = ArrayType(LongType, containsNull = false)
+  private val ints = ArrayType(IntegerType, containsNull = false)
+  private val doubles = ArrayType(DoubleType, containsNull = false)
+  private val strings = ArrayType(StringType, containsNull = false)
+  private val counts = MapType(StringType, IntegerType, valueContainsNull = false)
 
   /** splitmix64 finalizer over a 64-bit value — the engine's canonical
     * value-hash (the same mixer the text kernels use on token/shingle
@@ -35,714 +105,123 @@ object Exprs {
     * the DuckDB HUGEINT form), which is what lets sketch outputs be
     * oracle-checked cross-engine instead of rows-only.
     */
-  case class Mix64(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def prettyName: String = "mix64"
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.mix64(input.asInstanceOf[Long])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.plans.Kernels.mix64($c)")
-    override protected def withNewChildInternal(newChild: Expression): Mix64 =
-      copy(child = newChild)
-  }
-
-  case class MinHashSig(child: Expression, shingleK: Int, numPerms: Int)
-      extends UnaryExpression {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def prettyName: String = "minhash_sig"
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.minhash(
-        input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-        shingleK, numPerms)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.plans.Kernels.minhash($c, $shingleK, $numPerms)")
-    override protected def withNewChildInternal(newChild: Expression): MinHashSig =
-      copy(child = newChild)
-  }
-
-  case class ShingleHashes(child: Expression, shingleK: Int)
-      extends UnaryExpression {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def prettyName: String = "shingle_hashes"
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.shingleHashes(
-        input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], shingleK)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.plans.Kernels.shingleHashes($c, $shingleK)")
-    override protected def withNewChildInternal(newChild: Expression): ShingleHashes =
-      copy(child = newChild)
-  }
-
-  case class ShingleHashesPos(child: Expression, shingleK: Int)
-      extends UnaryExpression {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def prettyName: String = "shingle_hashes_pos"
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.shingleHashesPos(
-        input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], shingleK)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.plans.Kernels.shingleHashesPos($c, $shingleK)")
-    override protected def withNewChildInternal(newChild: Expression): ShingleHashesPos =
-      copy(child = newChild)
-  }
-
-  /** Token array from the [[Kernels.wsTokens]] scan — the SAME
-    * tokenizer as [[ShingleHashesPos]], so span-removal positions and
-    * the rebuilt token array share one definition of "token i".
-    */
-  case class WsTokens(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def prettyName: String = "ws_tokens"
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.wsTokens(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.plans.Kernels.wsTokens($c)")
-    override protected def withNewChildInternal(newChild: Expression): WsTokens =
-      copy(child = newChild)
-  }
-
-  case class CosineSim(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = DoubleType
-    override def prettyName: String = "cosine_sim"
-    override protected def nullSafeEval(a: Any, b: Any): Any =
-      Kernels.cosineF(
-        a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-        b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (a, b) => s"graft.plans.Kernels.cosineF($a, $b)")
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineSim =
-      copy(left = l, right = r)
-  }
-
-  case class DotProduct(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = DoubleType
-    override def prettyName: String = "dot_product"
-    override protected def nullSafeEval(a: Any, b: Any): Any =
-      Kernels.dotF(
-        a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-        b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (a, b) => s"graft.plans.Kernels.dotF($a, $b)")
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): DotProduct =
-      copy(left = l, right = r)
-  }
-
-  case class SortedIntersectCount(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = IntegerType
-    override def prettyName: String = "sorted_intersect_count"
-    override protected def nullSafeEval(a: Any, b: Any): Any =
-      Kernels.sortedIntersectCount(
-        a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-        b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (a, b) => s"graft.plans.Kernels.sortedIntersectCount($a, $b)")
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): SortedIntersectCount =
-      copy(left = l, right = r)
-  }
-
-  case class JaroWinkler(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = DoubleType
-    override def prettyName: String = "jaro_winkler"
-    override protected def nullSafeEval(a: Any, b: Any): Any =
-      Kernels.jaroWinkler(
-        a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-        b.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (l, r) => s"graft.plans.Kernels.jaroWinkler($l, $r)")
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): JaroWinkler =
-      copy(left = l, right = r)
-  }
-
-  case class TokenCount(child: Expression)
-      extends UnaryExpression {
-    override def dataType: DataType = IntegerType
-    override def prettyName: String = "token_count"
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.tokenCount(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.plans.Kernels.tokenCount($c)")
-    override protected def withNewChildInternal(newChild: Expression): TokenCount =
-      copy(child = newChild)
-  }
-
-  case class MeanTokenLen(child: Expression)
-      extends UnaryExpression {
-    override def dataType: DataType = DoubleType
-    override def prettyName: String = "mean_token_len"
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.meanTokenLen(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.plans.Kernels.meanTokenLen($c)")
-    override protected def withNewChildInternal(newChild: Expression): MeanTokenLen =
-      copy(child = newChild)
-  }
-
-  case class StopwordRatio(child: Expression)
-      extends UnaryExpression {
-    override def dataType: DataType = DoubleType
-    override def prettyName: String = "stopword_ratio"
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.stopwordRatio(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.plans.Kernels.stopwordRatio($c)")
-    override protected def withNewChildInternal(newChild: Expression): StopwordRatio =
-      copy(child = newChild)
-  }
-
-  case class PunctRatio(child: Expression)
-      extends UnaryExpression {
-    override def dataType: DataType = DoubleType
-    override def prettyName: String = "punct_ratio"
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.punctRatio(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.plans.Kernels.punctRatio($c)")
-    override protected def withNewChildInternal(newChild: Expression): PunctRatio =
-      copy(child = newChild)
-  }
-
-  case class TopTokenShare(child: Expression)
-      extends UnaryExpression {
-    override def dataType: DataType = DoubleType
-    override def prettyName: String = "top_token_share"
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.topTokenShare(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.plans.Kernels.topTokenShare($c)")
-    override protected def withNewChildInternal(newChild: Expression): TopTokenShare =
-      copy(child = newChild)
-  }
-
-  case class SubwordCount(child: Expression)
-      extends UnaryExpression {
-    override def dataType: DataType = IntegerType
-    override def prettyName: String = "subword_count"
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.subwordCount(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.plans.Kernels.subwordCount($c)")
-    override protected def withNewChildInternal(newChild: Expression): SubwordCount =
-      copy(child = newChild)
-  }
-
-  case class Fingerprint64(child: Expression)
-      extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def prettyName: String = "fingerprint64"
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.fingerprint64(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.plans.Kernels.fingerprint64($c)")
-    override protected def withNewChildInternal(newChild: Expression): Fingerprint64 =
-      copy(child = newChild)
-  }
-
-  case class LangId(child: Expression)
-      extends UnaryExpression {
-    override def dataType: DataType = StringType
-    override def prettyName: String = "lang_id"
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.langId(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.plans.Kernels.langId($c)")
-    override protected def withNewChildInternal(newChild: Expression): LangId =
-      copy(child = newChild)
-  }
-
-  case class ChunkTokens(child: Expression, n: Int)
-      extends UnaryExpression {
-    override def dataType: DataType = StringType
-    override def prettyName: String = "chunk_tokens"
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.chunkTokens(
-        input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.plans.Kernels.chunkTokens($c, $n)")
-    override protected def withNewChildInternal(newChild: Expression): ChunkTokens =
-      copy(child = newChild)
-  }
-
-  /** [[ChunkTokens]]' sibling on the engine whitespace class (see
+  def mix64(c: Column): Column = call("mix64", "mix64", LongType, Seq(c))
+  def simhash64(c: Column): Column = call("simhash64", "simhash", LongType, Seq(c))
+  def minhashSig(c: Column, shingleK: Int, numPerms: Int): Column =
+    call("minhash_sig", "minhash", longs, Seq(c), shingleK, numPerms)
+  def shingleHashes(c: Column, shingleK: Int): Column =
+    call("shingle_hashes", "shingleHashes", longs, Seq(c), shingleK)
+  /** Token array from the [[Kernels.wsTokens]] scan — the SAME tokenizer
+    * as [[shingleHashesPos]], so span-removal positions and the rebuilt
+    * token array share one definition of "token i". */
+  def wsTokens(c: Column): Column = call("ws_tokens", "wsTokens", strings, Seq(c))
+  def shingleHashesPos(c: Column, shingleK: Int): Column =
+    call("shingle_hashes_pos", "shingleHashesPos", longs, Seq(c), shingleK)
+  def cosineSim(a: Column, b: Column): Column = call("cosine_sim", "cosineF", DoubleType, Seq(a, b))
+  def jaroWinkler(a: Column, b: Column): Column =
+    call("jaro_winkler", "jaroWinkler", DoubleType, Seq(a, b))
+  def sortedIntersectCount(a: Column, b: Column): Column =
+    call("sorted_intersect_count", "sortedIntersectCount", IntegerType, Seq(a, b))
+  def dotProduct(a: Column, b: Column): Column = call("dot_product", "dotF", DoubleType, Seq(a, b))
+  def hyperplaneSig(c: Column, bits: Int): Column =
+    call("hyperplane_sig", "hyperplaneSig", LongType, Seq(c), bits)
+  def prefixTokens(c: Column, n: Int): Column = call("prefix_tokens", "prefixTokens", StringType, Seq(c), n)
+  def scanTokens(c: Column): Column = call("scan_tokens", "scanTokens", IntegerType, Seq(c))
+  def chunkTokens(c: Column, n: Int): Column = call("chunk_tokens", "chunkTokens", StringType, Seq(c), n)
+  /** [[chunkTokens]]' sibling on the engine whitespace class (see
     * [[Kernels.chunkTokensWs]]) — re-lining that stays bit-consistent
     * with regex-tokenized metrics in the same row and with a DuckDB
-    * `string_split_regex('\s+')` oracle on non-ASCII whitespace.
-    * Since the r17 tokenizer unification the two expressions compute
-    * the same function; both names stay because PlanShapeSpec pins
-    * them in different plans. */
-  case class ChunkTokensWs(child: Expression, n: Int)
-      extends UnaryExpression {
-    override def dataType: DataType = StringType
-    override def prettyName: String = "chunk_tokens_ws"
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.chunkTokensWs(
-        input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.plans.Kernels.chunkTokensWs($c, $n)")
-    override protected def withNewChildInternal(newChild: Expression): ChunkTokensWs =
-      copy(child = newChild)
-  }
-
-  case class ChunkWindows(child: Expression, n: Int, stride: Int)
-      extends UnaryExpression {
-    override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def prettyName: String = "chunk_windows"
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.chunkWindows(
-        input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n, stride)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.plans.Kernels.chunkWindows($c, $n, $stride)")
-    override protected def withNewChildInternal(newChild: Expression): ChunkWindows =
-      copy(child = newChild)
-  }
-
-  case class ScanTokens(child: Expression)
-      extends UnaryExpression {
-    override def dataType: DataType = IntegerType
-    override def prettyName: String = "scan_tokens"
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.scanTokens(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.plans.Kernels.scanTokens($c)")
-    override protected def withNewChildInternal(newChild: Expression): ScanTokens =
-      copy(child = newChild)
-  }
-
-  case class PrefixTokens(child: Expression, n: Int)
-      extends UnaryExpression {
-    override def dataType: DataType = StringType
-    override def prettyName: String = "prefix_tokens"
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.prefixTokens(
-        input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.plans.Kernels.prefixTokens($c, $n)")
-    override protected def withNewChildInternal(newChild: Expression): PrefixTokens =
-      copy(child = newChild)
-  }
-
-  /** IVF cell assignment: centroids ride along as a broadcast-style
-    * reference object in the generated class (`addReferenceObj`), so the
-    * per-row cost is one array scan inside codegen — no UDF
-    * serialization fence. `flat` is row-major `k × dim` floats.
-    */
-  case class NearestCentroid(child: Expression, flat: Array[Float], dim: Int)
-      extends UnaryExpression {
-    override def dataType: DataType = IntegerType
-    override def prettyName: String = "nearest_centroid"
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.nearestCentroid(
-        input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], flat, dim)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("centroids", flat, "float[]")
-      defineCodeGen(ctx, ev, c => s"graft.plans.Kernels.nearestCentroid($c, $ref, $dim)")
-    }
-    override protected def withNewChildInternal(newChild: Expression): NearestCentroid =
-      copy(child = newChild)
-  }
-
-  /** IVF probe list: the `nProbe` nearest centroid ids per query vector
-    * (descending similarity). Same reference-object pattern as
-    * [[NearestCentroid]].
-    */
-  case class TopCells(child: Expression, flat: Array[Float], dim: Int, nProbe: Int)
-      extends UnaryExpression {
-    override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-    override def prettyName: String = "top_cells"
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.topCells(
-        input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], flat, dim, nProbe)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("centroids", flat, "float[]")
-      defineCodeGen(ctx, ev, c => s"graft.plans.Kernels.topCells($c, $ref, $dim, $nProbe)")
-    }
-    override protected def withNewChildInternal(newChild: Expression): TopCells =
-      copy(child = newChild)
-  }
-
-  /** Bloom-filter membership probe against a reference bit array (the
-    * [[NearestCentroid]] pattern: the array rides in the generated
-    * class via `addReferenceObj`, so the per-row cost is k masked
-    * loads inside codegen).
-    */
-  case class BloomContains(child: Expression, words: Array[Long], mBits: Int, k: Int)
-      extends UnaryExpression {
-    override def dataType: DataType = BooleanType
-    override def prettyName: String = "bloom_contains"
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.bloomContains(input.asInstanceOf[Long], words, mBits, k)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("bloomWords", words, "long[]")
-      defineCodeGen(ctx, ev, c => s"graft.plans.Kernels.bloomContains($c, $ref, $mBits, $k)")
-    }
-    override protected def withNewChildInternal(newChild: Expression): BloomContains =
-      copy(child = newChild)
-  }
-
-  /** PQ encode: per-subspace nearest sub-centroid indices against a
-    * broadcast codebook ([[Kernels.pqEncode]]).
-    */
-  case class PqEncode(child: Expression, cb: Array[Double], m: Int, k: Int, dsub: Int)
-      extends UnaryExpression {
-    override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-    override def prettyName: String = "pq_encode"
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.pqEncode(
-        input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], cb, m, k, dsub)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("pqCb", cb, "double[]")
-      defineCodeGen(ctx, ev, c => s"graft.plans.Kernels.pqEncode($c, $ref, $m, $k, $dsub)")
-    }
-    override protected def withNewChildInternal(newChild: Expression): PqEncode =
-      copy(child = newChild)
-  }
-
-  /** Per-query ADC distance table ([[Kernels.pqTable]]). */
-  case class PqTable(child: Expression, cb: Array[Double], m: Int, k: Int, dsub: Int)
-      extends UnaryExpression {
-    override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-    override def prettyName: String = "pq_table"
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.pqTable(
-        input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], cb, m, k, dsub)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("pqCb", cb, "double[]")
-      defineCodeGen(ctx, ev, c => s"graft.plans.Kernels.pqTable($c, $ref, $m, $k, $dsub)")
-    }
-    override protected def withNewChildInternal(newChild: Expression): PqTable =
-      copy(child = newChild)
-  }
-
-  /** ADC lookup-sum score ([[Kernels.pqAdc]]): m table loads per
-    * (query, row) pair — the point of PQ.
-    */
-  case class PqAdc(left: Expression, right: Expression, k: Int)
-      extends BinaryExpression {
-    override def dataType: DataType = DoubleType
-    override def prettyName: String = "pq_adc"
-    override protected def nullSafeEval(table: Any, codes: Any): Any =
-      Kernels.pqAdc(
-        table.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-        codes.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], k)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (t, c) => s"graft.plans.Kernels.pqAdc($t, $c, $k)")
-    override protected def withNewChildrenInternal(newLeft: Expression,
-                                                   newRight: Expression): PqAdc =
-      copy(left = newLeft, right = newRight)
-  }
-
-  /** Row-local term-frequency map ([[Kernels.termCounts]]) — exploding
-    * it replaces TF-IDF's corpus-wide `(doc, term)` count shuffle with
-    * in-row counting.
-    */
-  case class TermCounts(child: Expression) extends UnaryExpression {
-    override def dataType: DataType =
-      MapType(StringType, IntegerType, valueContainsNull = false)
-    override def prettyName: String = "term_counts"
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.termCounts(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.plans.Kernels.termCounts($c)")
-    override protected def withNewChildInternal(newChild: Expression): TermCounts =
-      copy(child = newChild)
-  }
-
-  case class PairCounts(child: Expression) extends UnaryExpression {
-    override def dataType: DataType =
-      MapType(StringType, IntegerType, valueContainsNull = false)
-    override def prettyName: String = "pair_counts"
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.pairCounts(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.plans.Kernels.pairCounts($c)")
-    override protected def withNewChildInternal(newChild: Expression): PairCounts =
-      copy(child = newChild)
-  }
-
-  /** Double-precision L2 normalize of a float embedding (index-order
-    * squared-norm fold — see [[Kernels.normalizeD]]). The k-means
-    * entry point: every downstream dot runs on these doubles.
-    */
-  case class NormalizeD(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-    override def prettyName: String = "normalize_d"
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.normalizeD(
-        input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.plans.Kernels.normalizeD($c)")
-    override protected def withNewChildInternal(newChild: Expression): NormalizeD =
-      copy(child = newChild)
-  }
-
-  /** Spherical k-means assignment `[cluster, dot]` against a broadcast
-    * double-precision centroid matrix (the [[NearestCentroid]]
-    * reference-object pattern, but double-exact so the Lloyd's loop is
-    * oracle-reproducible).
-    */
-  case class NearestCentroidScoreD(child: Expression, cents: Array[Double], dim: Int)
-      extends UnaryExpression {
-    override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-    override def prettyName: String = "nearest_centroid_score_d"
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.nearestCentroidScoreD(
-        input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], cents, dim)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("centsD", cents, "double[]")
-      defineCodeGen(ctx, ev, c => s"graft.plans.Kernels.nearestCentroidScoreD($c, $ref, $dim)")
-    }
-    override protected def withNewChildInternal(newChild: Expression): NearestCentroidScoreD =
-      copy(child = newChild)
-  }
-
-  /** IVF-probed spherical k-means assignment `[cluster, dot]` —
-    * [[NearestCentroidScoreD]]'s scale path: the fine-centroid matrix,
-    * coarse-cell matrix and membership lists all ride as codegen
-    * reference objects; per-row cost is O(√k) instead of O(k). See
-    * [[Kernels.ivfAssignScoreD]] for the determinism contract.
-    */
-  case class IvfAssignScoreD(child: Expression, cents: Array[Double], dim: Int,
-      coarse: Array[Double], cellStart: Array[Int], members: Array[Int],
-      nProbe: Int)
-      extends UnaryExpression {
-    override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-    override def prettyName: String = "ivf_assign_score_d"
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.ivfAssignScoreD(
-        input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-        cents, dim, coarse, cellStart, members, nProbe)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val rc = ctx.addReferenceObj("ivfCentsD", cents, "double[]")
-      val rg = ctx.addReferenceObj("ivfCoarseD", coarse, "double[]")
-      val rs = ctx.addReferenceObj("ivfCellStart", cellStart, "int[]")
-      val rm = ctx.addReferenceObj("ivfMembers", members, "int[]")
-      defineCodeGen(ctx, ev, c =>
-        s"graft.plans.Kernels.ivfAssignScoreD($c, $rc, $dim, $rg, $rs, $rm, $nProbe)")
-    }
-    override protected def withNewChildInternal(newChild: Expression): IvfAssignScoreD =
-      copy(child = newChild)
-  }
-
-  /** Hashed-feature linear text score against a broadcast weight
-    * vector ([[Kernels.linearTextScore]]) — apply-a-pretrained-model
-    * at scan speed; the weights ride as a codegen reference object.
-    */
-  case class LinearTextScore(child: Expression, weights: Array[Double])
-      extends UnaryExpression {
-    override def dataType: DataType = DoubleType
-    override def prettyName: String = "linear_text_score"
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.linearTextScore(
-        input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], weights)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("clfWeights", weights, "double[]")
-      defineCodeGen(ctx, ev, c => s"graft.plans.Kernels.linearTextScore($c, $ref)")
-    }
-    override protected def withNewChildInternal(newChild: Expression): LinearTextScore =
-      copy(child = newChild)
-  }
-
-  /** The classifier feature map as data ([[Kernels.termBuckets]]):
-    * hashed unigram+bigram bucket ids in [[LinearTextScore]]'s exact
-    * fold order — the training-side counterpart of the score kernel.
-    */
-  case class TermBuckets(child: Expression, m: Int)
-      extends UnaryExpression {
-    override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-    override def prettyName: String = "term_buckets"
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.termBuckets(
-        input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], m)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.plans.Kernels.termBuckets($c, $m)")
-    override protected def withNewChildInternal(newChild: Expression): TermBuckets =
-      copy(child = newChild)
-  }
-
-  /** Weight-vector fold over a bucket array ([[Kernels.dotBuckets]]) —
-    * the GD training loop's z, compiled; weights ride as a codegen
-    * reference object like [[LinearTextScore]]'s.
-    */
-  case class DotBuckets(child: Expression, weights: Array[Double])
-      extends UnaryExpression {
-    override def dataType: DataType = DoubleType
-    override def prettyName: String = "dot_buckets"
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.dotBuckets(
-        input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], weights)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("gdWeights", weights, "double[]")
-      defineCodeGen(ctx, ev, c => s"graft.plans.Kernels.dotBuckets($c, $ref)")
-    }
-    override protected def withNewChildInternal(newChild: Expression): DotBuckets =
-      copy(child = newChild)
-  }
-
-  case class QuantizeInt8Stats(child: Expression)
-      extends UnaryExpression {
-    override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-    override def prettyName: String = "quantize_int8_stats"
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.quantizeInt8Stats(
-        input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.plans.Kernels.quantizeInt8Stats($c)")
-    override protected def withNewChildInternal(newChild: Expression): QuantizeInt8Stats =
-      copy(child = newChild)
-  }
-
-  case class HyperplaneSig(child: Expression, bits: Int)
-      extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def prettyName: String = "hyperplane_sig"
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.hyperplaneSig(
-        input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], bits)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.plans.Kernels.hyperplaneSig($c, $bits)")
-    override protected def withNewChildInternal(newChild: Expression): HyperplaneSig =
-      copy(child = newChild)
-  }
-
-  /** Aho–Corasick blocklist scan ([[Kernels.blocklistHits]]): text +
-    * the \\u0001-joined pattern literal → `[n_hits, n_patterns]`. The
-    * pattern side is a plan constant, so codegen embeds it once and
-    * the kernel's per-JVM automaton cache keys on it.
-    */
-  case class BlocklistHits(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def prettyName: String = "blocklist_hits"
-    override protected def nullSafeEval(t: Any, p: Any): Any =
-      Kernels.blocklistHits(
-        t.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-        p.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (t, p) => s"graft.plans.Kernels.blocklistHits($t, $p)")
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): BlocklistHits =
-      copy(left = l, right = r)
-  }
-
-  /** Blocklist redaction ([[Kernels.blocklistRedact]]): the action to
-    * [[BlocklistHits]]'s report — maximal covered runs → `<blocked>`.
-    */
-  case class BlocklistRedact(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = StringType
-    override def prettyName: String = "blocklist_redact"
-    override protected def nullSafeEval(t: Any, p: Any): Any =
-      Kernels.blocklistRedact(
-        t.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-        p.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (t, p) => s"graft.plans.Kernels.blocklistRedact($t, $p)")
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): BlocklistRedact =
-      copy(left = l, right = r)
-  }
-
-  /** Within-doc repetition spans ([[Kernels.intraDupSpanStats]]):
-    * `[n_tokens, n_rep_grams, n_spans, rep_tokens]`, one compiled pass.
-    */
-  case class IntraDupSpanStats(child: Expression, shingleK: Int)
-      extends UnaryExpression {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def prettyName: String = "intra_dup_span_stats"
-    override protected def nullSafeEval(input: Any): Any =
-      Kernels.intraDupSpanStats(
-        input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], shingleK)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.plans.Kernels.intraDupSpanStats($c, $shingleK)")
-    override protected def withNewChildInternal(newChild: Expression): IntraDupSpanStats =
-      copy(child = newChild)
-  }
-
-  // Column-level API ---------------------------------------------------
-
-  private def col(e: Expression): Column = ColumnBridge.column(e)
-  private def ex(c: Column): Expression = ColumnBridge.expression(c)
-
-  def mix64(c: Column): Column = col(Mix64(ex(c)))
-  def simhash64(c: Column): Column = col(SimHash64(ex(c)))
-  def minhashSig(c: Column, shingleK: Int, numPerms: Int): Column =
-    col(MinHashSig(ex(c), shingleK, numPerms))
-  def shingleHashes(c: Column, shingleK: Int): Column =
-    col(ShingleHashes(ex(c), shingleK))
-  def wsTokens(c: Column): Column = col(WsTokens(ex(c)))
-  def shingleHashesPos(c: Column, shingleK: Int): Column =
-    col(ShingleHashesPos(ex(c), shingleK))
-  def cosineSim(a: Column, b: Column): Column = col(CosineSim(ex(a), ex(b)))
-  def jaroWinkler(a: Column, b: Column): Column = col(JaroWinkler(ex(a), ex(b)))
-  def sortedIntersectCount(a: Column, b: Column): Column =
-    col(SortedIntersectCount(ex(a), ex(b)))
-  def dotProduct(a: Column, b: Column): Column = col(DotProduct(ex(a), ex(b)))
-  def hyperplaneSig(c: Column, bits: Int): Column = col(HyperplaneSig(ex(c), bits))
-  def prefixTokens(c: Column, n: Int): Column = col(PrefixTokens(ex(c), n))
-  def scanTokens(c: Column): Column = col(ScanTokens(ex(c)))
-  def chunkTokens(c: Column, n: Int): Column = col(ChunkTokens(ex(c), n))
-  def chunkTokensWs(c: Column, n: Int): Column = col(ChunkTokensWs(ex(c), n))
+    * `string_split_regex('\s+')` oracle on non-ASCII whitespace. Since
+    * the r17 tokenizer unification the two compute the same function;
+    * both names stay because PlanShapeSpec pins them in different plans. */
+  def chunkTokensWs(c: Column, n: Int): Column =
+    call("chunk_tokens_ws", "chunkTokensWs", StringType, Seq(c), n)
   def chunkWindows(c: Column, n: Int, stride: Int): Column =
-    col(ChunkWindows(ex(c), n, stride))
+    call("chunk_windows", "chunkWindows", strings, Seq(c), n, stride)
+  /** Bloom-filter membership probe against a packed bit array. */
   def bloomContains(c: Column, words: Array[Long], mBits: Int, k: Int): Column =
-    col(BloomContains(ex(c), words, mBits, k))
-  def tokenCount(c: Column): Column = col(TokenCount(ex(c)))
+    call("bloom_contains", "bloomContains", BooleanType, Seq(c), words, mBits, k)
+  def tokenCount(c: Column): Column = call("token_count", "tokenCount", IntegerType, Seq(c))
+  /** Aho–Corasick blocklist scan ([[Kernels.blocklistHits]]): text + the
+    * \\u0001-joined pattern literal → `[n_hits, n_patterns]`. The
+    * pattern side is a plan constant, so codegen embeds it once and the
+    * kernel's per-JVM automaton cache keys on it. */
   def blocklistHits(text: Column, patternsLit: Column): Column =
-    col(BlocklistHits(ex(text), ex(patternsLit)))
+    call("blocklist_hits", "blocklistHits", longs, Seq(text, patternsLit))
+  /** Blocklist redaction: maximal covered runs → `<blocked>`. */
   def blocklistRedact(text: Column, patternsLit: Column): Column =
-    col(BlocklistRedact(ex(text), ex(patternsLit)))
-  def meanTokenLen(c: Column): Column = col(MeanTokenLen(ex(c)))
-  def stopwordRatio(c: Column): Column = col(StopwordRatio(ex(c)))
-  def punctRatio(c: Column): Column = col(PunctRatio(ex(c)))
-  def topTokenShare(c: Column): Column = col(TopTokenShare(ex(c)))
-  def fingerprint64(c: Column): Column = col(Fingerprint64(ex(c)))
-  def subwordCount(c: Column): Column = col(SubwordCount(ex(c)))
-  def langId(c: Column): Column = col(LangId(ex(c)))
+    call("blocklist_redact", "blocklistRedact", StringType, Seq(text, patternsLit))
+  def meanTokenLen(c: Column): Column = call("mean_token_len", "meanTokenLen", DoubleType, Seq(c))
+  def stopwordRatio(c: Column): Column = call("stopword_ratio", "stopwordRatio", DoubleType, Seq(c))
+  def punctRatio(c: Column): Column = call("punct_ratio", "punctRatio", DoubleType, Seq(c))
+  def topTokenShare(c: Column): Column = call("top_token_share", "topTokenShare", DoubleType, Seq(c))
+  def fingerprint64(c: Column): Column = call("fingerprint64", "fingerprint64", LongType, Seq(c))
+  def subwordCount(c: Column): Column = call("subword_count", "subwordCount", IntegerType, Seq(c))
+  def langId(c: Column): Column = call("lang_id", "langId", StringType, Seq(c))
+  /** IVF cell assignment against row-major `k × dim` float centroids. */
   def nearestCentroid(c: Column, flat: Array[Float], dim: Int): Column =
-    col(NearestCentroid(ex(c), flat, dim))
+    call("nearest_centroid", "nearestCentroid", IntegerType, Seq(c), flat, dim)
+  /** IVF probe list: the `nProbe` nearest centroid ids, by descending similarity. */
   def topCells(c: Column, flat: Array[Float], dim: Int, nProbe: Int): Column =
-    col(TopCells(ex(c), flat, dim, nProbe))
-  def termCounts(c: Column): Column = col(TermCounts(ex(c)))
-  def pairCounts(c: Column): Column = col(PairCounts(ex(c)))
+    call("top_cells", "topCells", ints, Seq(c), flat, dim, nProbe)
+  /** Row-local term-frequency map ([[Kernels.termCounts]]) — exploding it
+    * replaces TF-IDF's corpus-wide `(doc, term)` count shuffle with
+    * in-row counting. */
+  def termCounts(c: Column): Column = call("term_counts", "termCounts", counts, Seq(c))
+  def pairCounts(c: Column): Column = call("pair_counts", "pairCounts", counts, Seq(c))
+  /** PQ encode: per-subspace nearest sub-centroid indices. */
   def pqEncode(c: Column, cb: Array[Double], m: Int, k: Int, dsub: Int): Column =
-    col(PqEncode(ex(c), cb, m, k, dsub))
+    call("pq_encode", "pqEncode", ints, Seq(c), cb, m, k, dsub)
+  /** Per-query ADC distance table ([[Kernels.pqTable]]). */
   def pqTable(c: Column, cb: Array[Double], m: Int, k: Int, dsub: Int): Column =
-    col(PqTable(ex(c), cb, m, k, dsub))
+    call("pq_table", "pqTable", doubles, Seq(c), cb, m, k, dsub)
+  /** ADC lookup-sum score: m table loads per (query, row) pair — the point of PQ. */
   def pqAdc(table: Column, codes: Column, k: Int): Column =
-    col(PqAdc(ex(table), ex(codes), k))
-  def normalizeD(c: Column): Column = col(NormalizeD(ex(c)))
-  def ivfAssignScoreD(c: Column, cents: Array[Double], dim: Int,
-                      coarse: Array[Double], cellStart: Array[Int],
-                      members: Array[Int], nProbe: Int): Column =
-    col(IvfAssignScoreD(ex(c), cents, dim, coarse, cellStart, members, nProbe))
+    call("pq_adc", "pqAdc", DoubleType, Seq(table, codes), k)
+  /** Double-precision L2 normalize of a float embedding (index-order
+    * squared-norm fold — see [[Kernels.normalizeD]]). The k-means entry
+    * point: every downstream dot runs on these doubles. */
+  def normalizeD(c: Column): Column = call("normalize_d", "normalizeD", doubles, Seq(c))
+  /** IVF-probed spherical k-means assignment `[cluster, dot]` —
+    * [[nearestCentroidScoreD]]'s scale path, O(√k) per row instead of
+    * O(k). See [[Kernels.ivfAssignScoreD]] for the determinism contract. */
+  def ivfAssignScoreD(c: Column, cents: Array[Double], dim: Int, coarse: Array[Double],
+                      cellStart: Array[Int], members: Array[Int], nProbe: Int): Column =
+    call("ivf_assign_score_d", "ivfAssignScoreD", doubles, Seq(c),
+      cents, dim, coarse, cellStart, members, nProbe)
+  /** Spherical k-means assignment `[cluster, dot]`, double-exact so the
+    * Lloyd's loop is oracle-reproducible. */
   def nearestCentroidScoreD(c: Column, cents: Array[Double], dim: Int): Column =
-    col(NearestCentroidScoreD(ex(c), cents, dim))
+    call("nearest_centroid_score_d", "nearestCentroidScoreD", doubles, Seq(c), cents, dim)
+  /** Hashed-feature linear text score ([[Kernels.linearTextScore]]) —
+    * apply-a-pretrained-model at scan speed. */
   def linearTextScore(c: Column, weights: Array[Double]): Column =
-    col(LinearTextScore(ex(c), weights))
-  def termBuckets(c: Column, m: Int): Column = col(TermBuckets(ex(c), m))
+    call("linear_text_score", "linearTextScore", DoubleType, Seq(c), weights)
+  /** The classifier feature map as data ([[Kernels.termBuckets]]): hashed
+    * unigram+bigram bucket ids in [[linearTextScore]]'s exact fold order. */
+  def termBuckets(c: Column, m: Int): Column = call("term_buckets", "termBuckets", ints, Seq(c), m)
+  /** Weight-vector fold over a bucket array — the GD training loop's z. */
   def dotBuckets(c: Column, weights: Array[Double]): Column =
-    col(DotBuckets(ex(c), weights))
-  def quantizeInt8Stats(c: Column): Column = col(QuantizeInt8Stats(ex(c)))
+    call("dot_buckets", "dotBuckets", DoubleType, Seq(c), weights)
+  def quantizeInt8Stats(c: Column): Column =
+    call("quantize_int8_stats", "quantizeInt8Stats", doubles, Seq(c))
+  /** Within-doc repetition spans ([[Kernels.intraDupSpanStats]]):
+    * `[n_tokens, n_rep_grams, n_spans, rep_tokens]`, one compiled pass. */
   def intraDupSpanStats(c: Column, shingleK: Int): Column =
-    col(IntraDupSpanStats(ex(c), shingleK))
+    call("intra_dup_span_stats", "intraDupSpanStats", longs, Seq(c), shingleK)
 
   /** Register SQL names for the kernels on a session. */
   def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("mix64", es => Mix64(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("simhash64", es => SimHash64(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("cosine_sim", es => CosineSim(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("dot_product", es => DotProduct(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("token_count", es => TokenCount(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("subword_count", es => SubwordCount(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("mean_token_len", es => MeanTokenLen(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("stopword_ratio", es => StopwordRatio(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("punct_ratio", es => PunctRatio(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("fingerprint64", es => Fingerprint64(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("lang_id", es => LangId(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("scan_tokens", es => ScanTokens(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("sorted_intersect_count",
-      es => SortedIntersectCount(es(0), es(1)), "scala_udf")
+    Seq[(String, Column => Column)]("mix64" -> mix64, "simhash64" -> simhash64,
+      "token_count" -> tokenCount, "subword_count" -> subwordCount, "mean_token_len" -> meanTokenLen,
+      "stopword_ratio" -> stopwordRatio, "punct_ratio" -> punctRatio, "fingerprint64" -> fingerprint64,
+      "lang_id" -> langId, "scan_tokens" -> scanTokens).foreach { case (name, f) =>
+      reg.createOrReplaceTempFunction(name, es => ex(f(col(es.head))), "scala_udf")
+    }
+    Seq[(String, (Column, Column) => Column)]("cosine_sim" -> cosineSim, "dot_product" -> dotProduct,
+      "sorted_intersect_count" -> sortedIntersectCount).foreach { case (name, f) =>
+      reg.createOrReplaceTempFunction(name, es => ex(f(col(es(0)), col(es(1)))), "scala_udf")
+    }
   }
 }

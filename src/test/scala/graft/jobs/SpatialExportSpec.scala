@@ -180,6 +180,24 @@ class SpatialExportSpec extends SparkSpec {
     assert(e.getMessage === s"$tsv: data row 3 has no numeric x and y")
   }
 
+  test("a WESPAS sheet with no row holding both coordinates writes one null-shape record") {
+    import spark.implicits._
+    val dataDir = Files.createTempDirectory("graft_wespas_data")
+    val xlsx = dataDir.resolve(SpatialExport.wespasXlsx)
+    Files.createDirectories(xlsx.getParent)
+    E1ConcurrencySpec.xlsx(xlsx, Seq("Longitude", "Latitude", "Time"),
+      Seq(Seq("-9.5", "", "t1"), Seq("", "52.1", "t2"), Seq("", "", "t3")))
+    val combined = Seq((SpatialExport.wespasName, "wespas", null: String, "u1"))
+      .toDF("name", "identifier", "geometry_geojson", "url")
+    val out = Files.createTempDirectory("graft_wespas_out").toString
+    val r = SpatialExport.run(spark, combined, dataDir.toString, out)
+    assert(new java.io.File(out, "wespas").list().toSet === SpatialExportSpec.bundle("wespas"))
+    assert(Shapefile.read(s"$out/wespas/wespas.shp")._2.map(_.wkt) === Seq(null))
+    assert(r.withShapefileFlag.select(col("has_shapefile")).collect().map(_.getBoolean(0)).toSeq === Seq(true))
+    assert(r.missingSpatial.count() === 0L)
+    assert(r.missingIdentifiers.isEmpty)
+  }
+
   test("hostile site CSVs: step 2 writes what per-file reads, the F2 filter and the WKT points wrote") {
     import spark.implicits._
     val dataDir = Files.createTempDirectory("graft_site_data")
