@@ -20,6 +20,12 @@ import org.apache.spark.sql.SparkSession
   *
   * Built through Spark's own session builder, so `spark.*` system
   * properties (listeners, warehouse dir) still reach the session.
+  *
+  * Which session runs what: the catalog, the spatial export's site-CSV
+  * and TSV scans, the upsert and E2/E3 run on the session [[apply]]
+  * builds, with whole-stage code generation. `LoadPortal` computes its
+  * config-scale frames (hundreds of rows) on an [[interpreted]] child of
+  * it and hands each one back as a frame of the caller's session.
   */
 object GraftSession {
 
@@ -39,5 +45,23 @@ object GraftSession {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
+  }
+
+  /** A child of `spark` that runs its plans interpreted: it shares
+    * `spark`'s SparkContext and catalog, carries every modifiable
+    * `spark.sql.*` setting `spark` has now (time zone, ANSI mode, case
+    * sensitivity, …), and turns off whole-stage code generation and the
+    * generated expression classes. For plans over a few hundred rows,
+    * where compiling a query costs more than running it; `spark` itself
+    * is left as it was.
+    */
+  def interpreted(spark: SparkSession): SparkSession = {
+    val child = spark.newSession()
+    spark.conf.getAll.foreach { case (k, v) =>
+      if (k.startsWith("spark.sql.") && spark.conf.isModifiable(k)) child.conf.set(k, v)
+    }
+    child.conf.set("spark.sql.codegen.wholeStage", "false")
+    child.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    child
   }
 }

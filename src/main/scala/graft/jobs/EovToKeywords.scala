@@ -1,6 +1,7 @@
 package graft.jobs
 
 import graft.io.{GeoNodeApi, JdbcBoundary, Sources}
+import graft.operators.Ckpt
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -47,14 +48,16 @@ object EovToKeywords {
         col("id").as("thesauruskeyword_id"))
 
   /** Full job wiring (production shape): JDBC scan → backup → API scan
-    * → map → JDBC overwrite.
+    * → map → JDBC overwrite. The links (one row per layer↔EOV link) are
+    * scanned once and held on the driver, so the backup and the
+    * migrated table are written from one snapshot of the old database.
     */
   def run(spark: SparkSession,
           oldDbUrl: String, oldDbProps: java.util.Properties,
           newDbUrl: String, newDbProps: java.util.Properties,
           api: GeoNodeApi.HttpJson, apiBaseUrl: String,
           backupPath: String): Unit = {
-    val links = JdbcBoundary.queryScan(spark, oldDbUrl, linksQuery, oldDbProps)
+    val links = Ckpt.toLocal(JdbcBoundary.queryScan(spark, oldDbUrl, linksQuery, oldDbProps))
     backupLinks(links, backupPath)
     val keywords = GeoNodeApi.tkeywords(spark, api, apiBaseUrl)
     val out = mapToKeywords(links, keywords)

@@ -1,6 +1,6 @@
 package graft.jobs
 
-import graft.TaskPool
+import graft.{GraftSession, TaskPool}
 import graft.functions.{DateFunctions, GeoFunctions, Identifier, StringFunctions}
 import graft.io.{Sources, Xlsx}
 import graft.operators.{Aggregators, Ckpt, Relational}
@@ -24,13 +24,22 @@ import org.apache.spark.sql.functions._
   * All joins are broadcast (≤627 rows a side); the only shuffles are
   * the EuroSea group-merge and the order-pinning windows. The frames
   * are config-scale (one row per dataset, hundreds of rows), so
-  * `initial`, `eurosea`, `combined`, `withIdentifiers` and `duplicates`
-  * are each computed once and held on the driver ([[Ckpt.toLocal]]).
-  * Every later reader (spatial export, users, reports, the row counts,
-  * the upsert, E3) reads that copy: left lazy, each action re-read the
-  * surveys and the XLSX and re-ran the whole plan, and at this size the
-  * cost of a Spark action is its planning, code generation and
-  * broadcasts, not its rows.
+  * `initial`, `eurosea`, `combined`, `withIdentifiers`, `duplicates` and
+  * `users` are each computed once and held on the driver
+  * ([[Ckpt.toLocal]]). Every later reader (spatial export, fixtures,
+  * reports, the row counts, the upsert, E3) reads that copy: left lazy,
+  * each action re-read the surveys and the XLSX and re-ran the whole
+  * plan.
+  *
+  * At this size the cost of a Spark action is its planning and code
+  * generation, not its rows. So the six frames are computed on one
+  * child of the caller's session that runs its plans interpreted
+  * ([[GraftSession.interpreted]], built with the instance), and each is
+  * handed out as a copy in the caller's session: frames the caller
+  * joins with its own (the upsert's layer keys) and the spatial
+  * export's scans run there, with code generation. Each frame's
+  * column steps are one `select` ([[LoadPortal.reshape]]), not a chain
+  * of `withColumn` calls that each analyse the whole plan again.
   *
   * `initial` and `eurosea` are independent, so they are computed at
   * once ([[graft.TaskPool]]), the first time either is asked for; never
@@ -41,18 +50,26 @@ import org.apache.spark.sql.functions._
   * `source4` and `euroseaRaw`, are plans that run no job, built afresh by
   * each caller (`def`s), and each task builds its own and collects the
   * plan on top. A task that forced an uninitialized lazy val would wait
-  * for that monitor while its owner waits for the task. `LoadPortalMain` then runs the spatial export, the fixtures and
-  * the duplicates report at once: it holds no monitor while it waits for
-  * them, and of their tasks only the duplicates report initializes a
-  * lazy val (`duplicates`).
+  * for that monitor while its owner waits for the task.
+  *
+  * `LoadPortalMain` then runs the spatial export, the fixtures and the
+  * duplicates report at once. It holds no monitor while it waits for
+  * them. Of their tasks, the fixtures initialize `users` and the
+  * duplicates report `duplicates`; neither task waits for another, so
+  * the two at most take turns at the monitor.
   */
 class LoadPortal(spark: SparkSession, dataDir: String) {
 
   import LoadPortal._
 
+  /** The session the frames are computed on; built here, on the
+    * constructing thread, never in a pool task.
+    */
+  private val local = GraftSession.interpreted(spark)
+
   /** S1 + P1 + C1 (index.Rmd:56-65): survey 2, five columns, ""→null. */
   def source2: DataFrame =
-    Sources.surveyCsv(spark, s"$dataDir/2InfoDataProviderswoSpatialInfo_Final_420_7302020_FINAL_toshare.csv")
+    Sources.surveyCsv(local, s"$dataDir/2InfoDataProviderswoSpatialInfo_Final_420_7302020_FINAL_toshare.csv")
       .select(
         col("ErinSpatialGeoJSON").as("geometry_geojson"),
         col("prog_name").as("name"),
@@ -65,22 +82,22 @@ class LoadPortal(spark: SparkSession, dataDir: String) {
     * implicitly relies on for `id = row_number()`.
     */
   def source4: DataFrame =
-    Sources.surveyCsv(spark, s"$dataDir/4Updated_Spatial_Survey_420_8132020_FINAL_toshare.csv")
+    Sources.surveyCsv(local, s"$dataDir/4Updated_Spatial_Survey_420_8132020_FINAL_toshare.csv")
       .withColumn("_row", monotonically_increasing_id())
 
   /** P2 + J1 + C2/C4/C5/C8/C9 + F5 (index.Rmd:73-128): df_initial. */
-  lazy val initial: DataFrame = sources._1
+  lazy val initial: DataFrame = Ckpt.toLocal(sources._1, spark)
 
   /** C3 + C10/C11/C8/C9 + C6 + C12/C13 + A1 suite (index.Rmd:169-341):
     * normalize EuroSea and merge by (organization, name), 367 → 256.
     */
-  lazy val eurosea: DataFrame = sources._2
+  lazy val eurosea: DataFrame = Ckpt.toLocal(sources._2, spark)
 
-  /** `initial` and `eurosea`, both at once (the monitor rule in the
-    * class comment).
+  /** `initial` and `eurosea` on the child session, both at once (the
+    * monitor rule in the class comment).
     */
   private lazy val sources: (DataFrame, DataFrame) =
-    TaskPool(spark) { pool =>
+    TaskPool(local) { pool =>
       val i = pool.fork(Ckpt.toLocal(initialFrame))
       val e = pool.fork(Ckpt.toLocal(euroseaFrame))
       (i.get, e.get)
@@ -110,19 +127,19 @@ class LoadPortal(spark: SparkSession, dataDir: String) {
         col("Interest_OBIS").as("interest_obis"),
         col("_row")): _*)
     val joined = selected.join(broadcast(source2), Seq("name"), "left")
-    val flagged = eovCols.map(_._1).foldLeft(joined)((df, c) =>
-      df.withColumn(c, col(c).isNotNull))
-    flagged
-      .withColumn("url", StringFunctions.strTrunc(col("url"), 200))
-      .withColumn("source", lit("initial"))
-      .withColumn("start_date", DateFunctions.yearStart(col("start_date")))
-      .withColumn("end_date", DateFunctions.yearEnd(col("end_date")))
-      .withColumn("temporal_resolution",
-        StringFunctions.recode(col("temporal_resolution"), Recodes.initialFrequency))
+    val flags = eovCols.map { case (c, _) => c -> col(c).isNotNull }
+    reshape(joined, flags.map {
       // F5 point fix (index.Rmd:127)
-      .withColumn("eov_benthicinvertebrates",
-        when(col("name") === "Aleutian Islands Benthic Habitat Survey", lit(true))
-          .otherwise(col("eov_benthicinvertebrates")))
+      case (c @ "eov_benthicinvertebrates", flag) =>
+        c -> when(col("name") === "Aleutian Islands Benthic Habitat Survey", lit(true)).otherwise(flag)
+      case other => other
+    } ++ Seq(
+      "url" -> StringFunctions.strTrunc(col("url"), 200),
+      "source" -> lit("initial"),
+      "start_date" -> DateFunctions.yearStart(col("start_date")),
+      "end_date" -> DateFunctions.yearEnd(col("end_date")),
+      "temporal_resolution" ->
+        StringFunctions.recode(col("temporal_resolution"), Recodes.initialFrequency)))
   }
 
   /** S3 + P3 + F1 (index.Rmd:135-162): EuroSea sheet 1, 21 columns,
@@ -137,8 +154,7 @@ class LoadPortal(spark: SparkSession, dataDir: String) {
       "eov_seaturtles" -> "Turtles", "eov_zooplankton" -> "Zooplankton",
       "eov_benthicinvertebrates" -> "`Benthic.invertebrates`",
       "eov_mammals" -> "Mammals")
-    Xlsx.toDataFrame(spark, s"$dataDir/EuroSea.xlsx", 1)
-      .withColumn("_row", monotonically_increasing_id())
+    Xlsx.toDataFrame(local, s"$dataDir/EuroSea.xlsx", 1)
       .select(
         Seq(col("Country").as("country"),
           col("Organisation").as("organization"),
@@ -149,7 +165,7 @@ class LoadPortal(spark: SparkSession, dataDir: String) {
         eovCols.map { case (out, in) => col(in).as(out) } ++
         Seq(col("Website").as("url"),
           col("Lat").as("lat"), col("Lon").as("lon"),
-          col("_row")): _*)
+          monotonically_increasing_id().as("_row")): _*)
       .filter(col("name").isNotNull)
   }
 
@@ -157,25 +173,21 @@ class LoadPortal(spark: SparkSession, dataDir: String) {
   private def euroseaFrame: DataFrame = {
     val raw = euroseaRaw
     val eovFlags = raw.columns.filter(_.startsWith("eov_"))
-    // "x" marks → booleans (C3, index.Rmd:171)
-    val flagged = eovFlags.foldLeft(raw)((df, c) =>
-      df.withColumn(c, StringFunctions.flagEquals(col(c), "x")))
     // time → (start, end) year strings via numeric round-trip
     // (C10/C11, index.Rmd:177-184)
     val (startTok, endTok) = DateFunctions.splitRange(col("time"))
-    val dated = flagged
-      .withColumn("start_date", DateFunctions.yearStart(numericThenChr(startTok)))
-      .withColumn("end_date", DateFunctions.yearEnd(numericThenChr(endTok)))
-      .drop("time")
-      // C6: the verbatim 76-pair map, unmatched passthrough (index.Rmd:192-273)
-      .withColumn("temporal_resolution",
-        StringFunctions.recode(col("frequency"), Recodes.euroseaFrequency))
-      .drop("frequency")
-      // C11/C12 lon/lat (index.Rmd:279-284)
-      .withColumn("lon", col("lon").cast("double"))
-      .withColumn("lat", col("lat").cast("double"))
-    val (latC, lonC) = DateFunctions.mutualNull(col("lat"), col("lon"))
-    val coords = dated.withColumn("lat", latC).withColumn("lon", lonC)
+    // C11/C12 lon/lat (index.Rmd:279-284)
+    val (latC, lonC) = DateFunctions.mutualNull(col("lat").cast("double"), col("lon").cast("double"))
+    val coords = reshape(raw,
+      // "x" marks → booleans (C3, index.Rmd:171)
+      eovFlags.toSeq.map(c => c -> StringFunctions.flagEquals(col(c), "x")) ++ Seq(
+        "start_date" -> DateFunctions.yearStart(numericThenChr(startTok)),
+        "end_date" -> DateFunctions.yearEnd(numericThenChr(endTok)),
+        // C6: the verbatim 76-pair map, unmatched passthrough (index.Rmd:192-273)
+        "temporal_resolution" -> StringFunctions.recode(col("frequency"), Recodes.euroseaFrequency),
+        "lon" -> lonC,
+        "lat" -> latC),
+      drop = Set("time", "frequency"))
 
     // A1 group-merge (index.Rmd:310-334). The ordered url concat uses
     // `_row` (spreadsheet order) as the sort key — the reference
@@ -193,13 +205,13 @@ class LoadPortal(spark: SparkSession, dataDir: String) {
     val merged = coords
       .groupBy(col("organization"), col("name"))
       .agg(min(col("start_date")).as("start_date"), aggs: _*)
-    merged
-      .withColumn("url", when(col("url") === "", lit(null)).otherwise(col("url")))
-      .withColumn("abstract", abstractOf(col("organization"), col("name")))
-      .withColumn("geometry_geojson", GeoFunctions.wktToGeoJson(col("_geom_wkt")))
-      .drop("_geom_wkt")
-      .withColumn("source", lit("eurosea"))
-      .withColumn("url", StringFunctions.strTrunc(col("url"), 500))
+    reshape(merged, Seq(
+        "url" -> StringFunctions.strTrunc(
+          when(col("url") === "", lit(null)).otherwise(col("url")), 500),
+        "abstract" -> abstractOf(col("organization"), col("name")),
+        "geometry_geojson" -> GeoFunctions.wktToGeoJson(col("_geom_wkt")),
+        "source" -> lit("eurosea")),
+      drop = Set("_geom_wkt"))
       // R group_by output order: sorted by group keys, NA last — the
       // order `bind_rows` (and therefore `id`) depends on
       .orderBy(asc_nulls_last("organization"), asc_nulls_last("name"))
@@ -207,63 +219,71 @@ class LoadPortal(spark: SparkSession, dataDir: String) {
   }
 
   /** U1 + W1 (index.Rmd:346-347): bind initial + eurosea, id, flag. */
-  lazy val combined: DataFrame = Ckpt.toLocal {
-    val a = initial.withColumn("_branch", lit(0))
-      .withColumn("_g_org", lit("")).withColumn("_g_name", lit(""))
-      .withColumn("_g_org_null", lit(0))
-    val b = eurosea.withColumn("_branch", lit(1))
-      .withColumn("_g_org", coalesce(col("organization"), lit("")))
-      .withColumn("_g_name", col("name"))
-      .withColumn("_g_org_null", col("organization").isNull.cast("int"))
-    val unioned = a.unionByName(b, allowMissingColumns = true)
+  lazy val combined: DataFrame = Ckpt.toLocal(combinedLocal, spark)
+
+  /** [[combined]] on the child session. */
+  private lazy val combinedLocal: DataFrame = Ckpt.toLocal {
+    val a = reshape(sources._1, Seq(
+      "_branch" -> lit(0), "_g_org" -> lit(""), "_g_name" -> lit(""), "_g_org_null" -> lit(0)))
+    val b = reshape(sources._2, Seq(
+      "_branch" -> lit(1),
+      "_g_org" -> coalesce(col("organization"), lit("")),
+      "_g_name" -> col("name"),
+      "_g_org_null" -> col("organization").isNull.cast("int")))
+    // one partition, which the window below needs: coalesced, not shuffled
+    val unioned = a.unionByName(b, allowMissingColumns = true).coalesce(1)
     // bind order: all initial rows (file order) then eurosea (group
     // order) — a 627-row single-partition window is the correct tool at
     // this scale (globalRowNumberScalable is the big-data variant)
-    Relational.globalRowNumber(unioned, "id",
-        col("_branch"), col("_g_org_null"), col("_g_org"), col("_g_name"), col("_row"))
-      .withColumn("id", col("id").cast("int"))
-      .withColumn("has_shapefile", lit(false))
-      .drop("_row", "_branch", "_g_org", "_g_name", "_g_org_null")
+    reshape(
+      Relational.globalRowNumber(unioned, "id",
+        col("_branch"), col("_g_org_null"), col("_g_org"), col("_g_name"), col("_row")),
+      Seq("id" -> col("id").cast("int"), "has_shapefile" -> lit(false)),
+      drop = Set("_row", "_branch", "_g_org", "_g_name", "_g_org_null"))
   }
 
   /** C14 + W3 (index.Rmd:352-394): identifiers + `_1`-style dedup. */
-  lazy val withIdentifiers: DataFrame = Ckpt.toLocal {
-    val idents = combined.withColumn("identifier",
-      Identifier.makeIdentifierCol(col("name")))
-    Relational.makeUnique(
-        idents.withColumn("original_identifier", col("identifier")),
-        "identifier", "id", "_uniq")
-      .withColumn("identifier", col("_uniq"))
-      .drop("_uniq")
+  lazy val withIdentifiers: DataFrame = Ckpt.toLocal(withIdentifiersLocal, spark)
+
+  /** [[withIdentifiers]] on the child session. */
+  private lazy val withIdentifiersLocal: DataFrame = Ckpt.toLocal {
+    val identifier = Identifier.makeIdentifierCol(col("name"))
+    val unique = Relational.makeUnique(
+      reshape(combinedLocal, Seq("identifier" -> identifier, "original_identifier" -> identifier)),
+      "identifier", "id", "_uniq")
+    reshape(unique, Seq("identifier" -> col("_uniq")), drop = Set("_uniq"))
   }
 
   /** A3 (index.Rmd:381-387): the duplicate-identifier report. */
-  lazy val duplicates: DataFrame = Ckpt.toLocal {
+  lazy val duplicates: DataFrame = Ckpt.toLocal(
     Relational.duplicateReport(
-        combined.withColumn("identifier", Identifier.makeIdentifierCol(col("name"))),
+        combinedLocal.withColumn("identifier", Identifier.makeIdentifierCol(col("name"))),
         "identifier")
       .select(col("id"), col("name"), col("source"), col("abstract"), col("url"),
         col("start_date"), col("end_date"), col("temporal_resolution"),
         col("contact_email"), col("organization"), col("identifier"))
-      .orderBy(col("identifier"))
-  }
+      .orderBy(col("identifier")),
+    spark)
 
-  /** A2 + W2 (index.Rmd:663-671): users — distinct by email, pk 2001+. */
-  lazy val users: DataFrame =
+  /** A2 + W2 (index.Rmd:663-671): users — distinct by email, pk 2001+.
+    * On one partition, which already satisfies both windows: without
+    * it each window's shuffle is one more Spark job.
+    */
+  lazy val users: DataFrame = Ckpt.toLocal(
     Relational.distinctByKey(
-        withIdentifiers
+        withIdentifiersLocal.coalesce(1)
           .filter(col("contact_email").isNotNull)
           .select(
             col("contact_firstname").as("first_name"),
             col("contact_lastname").as("last_name"),
             col("contact_email").as("email"),
             col("contact_email").as("username"),
-            col("id"))
-          .withColumn("is_superuser", lit(false)),
+            col("id"),
+            lit(false).as("is_superuser")),
         "username", "id")
-      .withColumn("pk", (lit(2000) + row_number().over(Window.orderBy(col("id")))).cast("int"))
-      .drop("id")
-      .select("first_name", "last_name", "email", "username", "is_superuser", "pk")
+      .select(col("first_name"), col("last_name"), col("email"), col("username"), col("is_superuser"),
+        (lit(2000) + row_number().over(Window.orderBy(col("id")))).cast("int").as("pk")),
+    spark)
 
   /** J2 (index.Rmd:673-674): user_pk backfill onto the combined table. */
   def withUserPks(combinedDf: DataFrame): DataFrame =
@@ -300,5 +320,19 @@ object LoadPortal {
       array(StringFunctions.squishWhitespace(org), StringFunctions.squishWhitespace(name)),
       _.isNotNull))
     when(size(arr) === 0, lit(null)).otherwise(array_join(arr, " - "))
+  }
+
+  /** `df` with the columns of `set` put in place of their namesakes and
+    * the new ones appended in order, without the columns in `drop`: what
+    * a chain of `withColumn` and `drop` calls gives, as one projection
+    * that is analysed once instead of once per call. Every column of
+    * `set` reads `df`'s columns, not another entry of `set`.
+    */
+  private def reshape(df: DataFrame, set: Seq[(String, Column)],
+                      drop: Set[String] = Set.empty): DataFrame = {
+    val byName = set.toMap
+    val kept = df.columns.toSeq.filterNot(drop).map(c => byName.get(c).fold(col(c))(_.as(c)))
+    val added = set.collect { case (c, e) if !df.columns.contains(c) => e.as(c) }
+    df.select(kept ++ added: _*)
   }
 }

@@ -23,16 +23,14 @@ object LoadPortalMain {
 
     val job = new LoadPortal(spark, dataDir)
     val combined = job.withIdentifiers
-    // plan only; forced here so that no task below waits on the lock
-    // LoadPortal's lazy vals share (the duplicates task forces only
-    // `duplicates`, which nothing else below reads)
-    val users = job.users
     val (spatial, userCount) = TaskPool(spark) { pool =>
       val exported = pool.fork(SpatialExport.run(spark, combined, dataDir, s"$outDir/output"))
-      // K2/K3 Django fixtures (index.Rmd:648-656, 680-688)
+      // K2/K3 Django fixtures (index.Rmd:648-656, 680-688); `users` and
+      // `duplicates` are the only frames the tasks compute, so they wait
+      // for no task, at most for each other's turn at LoadPortal's lock
       val fixtures = pool.fork {
         Fixtures.writeEovs(spark, s"$outDir/output")
-        Fixtures.writeUsers(users, s"$outDir/output")
+        Fixtures.writeUsers(job.users, s"$outDir/output")
       }
       // reports (the reference prints these as notebook tables)
       val duplicates = pool.fork(writeReport(job.duplicates, s"$outDir/reports/duplicates"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Materialization helpers shared by the self-cleaning operators.
   *
@@ -32,10 +32,13 @@ private[graft] object Ckpt {
 
   /** Collect a summary-sized frame into a LocalRelation with the same
     * schema. The caller guarantees the row count is config-bounded. */
-  def toLocal(df: DataFrame): DataFrame = {
+  def toLocal(df: DataFrame): DataFrame = toLocal(df, df.sparkSession)
+
+  /** [[toLocal]], with the copy a frame of `session`: `df` runs on its
+    * own session, its rows are handed to `session`. */
+  def toLocal(df: DataFrame, session: SparkSession): DataFrame = {
     val rows = df.collect()
-    df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(rows: _*), df.schema)
+    session.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
   }
 
   /** Eager lineage truncation: reliable checkpoint when a checkpoint

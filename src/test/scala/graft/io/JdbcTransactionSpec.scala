@@ -7,6 +7,7 @@ import graft.SparkSpec
 import graft.io.JdbcBoundary.{JdbcExecutor, SqlExecutor, Stmt}
 import graft.jobs.EovToKeywords
 import org.apache.spark.SparkException
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 
 /** K5 against a real JDBC target (in-memory Derby): each partition of
   * `upsertMetadata` is one transaction, so a task that dies between a
@@ -92,8 +93,11 @@ class JdbcTransactionSpec extends SparkSpec {
     assert(state(url) === expected)
   }
 
-  test("E2: the K4 backup lists links ordered by (layer_id, eov_id), not in heap order") {
-    val url = "jdbc:derby:memory:e2_backup_order"
+  /** A fresh in-memory database holding six EOV links, listed out of
+    * (layer_id, eov_id) order.
+    */
+  private def seededLinks(name: String): String = {
+    val url = s"jdbc:derby:memory:$name"
     val c = DriverManager.getConnection(s"$url;create=true;territory=en_US")
     try {
       val st = c.createStatement()
@@ -104,14 +108,81 @@ class JdbcTransactionSpec extends SparkSpec {
         "insert into layers_layer_eovs values (9, 2), (7, 5), (8, 1), (7, 1), (9, 1), (8, 5)"
       ).foreach(st.execute)
     } finally c.close()
+    url
+  }
+
+  private val backupLines = Seq(
+    "LAYER_ID,EOV_ID,SHORT_NAME",
+    "7,1,birds", "7,5,seagrass", "8,1,birds", "8,5,seagrass", "9,1,birds", "9,2,fish")
+
+  private def backupPart(backup: String): Seq[String] = {
+    val part = new java.io.File(backup).listFiles().filter(_.getName.startsWith("part-")).toSeq
+    assert(part.length === 1)
+    java.nio.file.Files.readAllLines(part.head.toPath).toArray.toSeq.map(_.toString)
+  }
+
+  test("E2: the K4 backup lists links ordered by (layer_id, eov_id), not in heap order") {
+    val url = seededLinks("e2_backup_order")
     val backup = java.nio.file.Files.createTempDirectory("graft_e2_backup").resolve("links").toString
     EovToKeywords.backupLinks(
       JdbcBoundary.queryScan(spark, url, EovToKeywords.linksQuery, new Properties()), backup)
-    val part = new java.io.File(backup).listFiles().filter(_.getName.startsWith("part-")).toSeq
-    assert(part.length === 1)
-    assert(java.nio.file.Files.readAllLines(part.head.toPath).toArray.toSeq === Seq(
-      "LAYER_ID,EOV_ID,SHORT_NAME",
-      "7,1,birds", "7,5,seagrass", "8,1,birds", "8,5,seagrass", "9,1,birds", "9,2,fish"))
+    assert(backupPart(backup) === backupLines)
+  }
+
+  test("E2: the links are scanned once; the backup and the migrated table share that snapshot") {
+    val url = seededLinks("e2_one_scan_old")
+    val newUrl = "jdbc:derby:memory:e2_one_scan_new"
+    DriverManager.getConnection(s"$newUrl;create=true;territory=en_US").close()
+    val api = new GeoNodeApi.FakeHttpJson(Map("tkeywords" ->
+      """{"tkeywords":[{"id":31,"alt_label":"birds","about":"https://goosocean.org/eov"},
+        |{"id":32,"alt_label":"seagrass","about":"https://goosocean.org/eov"}]}""".stripMargin))
+    val backup = java.nio.file.Files.createTempDirectory("graft_e2_one_scan").resolve("links").toString
+    val scans = jdbcScans {
+      EovToKeywords.run(spark, url, new Properties(), newUrl, new Properties(), api, "http://fake", backup)
+    }
+    assert(scans === 1)
+    assert(backupPart(backup) === backupLines)
+    val c = DriverManager.getConnection(newUrl)
+    try {
+      // Spark's JDBC writer quotes the column names it creates
+      val rs = c.createStatement().executeQuery(
+        "select \"resourcebase_id\", \"thesauruskeyword_id\" from base_resourcebase_tkeywords " +
+          "order by 1, 2")
+      val rows = Iterator.continually(rs.next()).takeWhile(identity)
+        .map(_ => s"${rs.getObject(1)}|${rs.getObject(2)}").toVector
+      assert(rows === Vector("7|31", "7|32", "8|31", "8|32", "9|31", "9|null"))
+    } finally c.close()
+  }
+
+  /** The JDBC scans `body` runs: distinct JDBC RDDs among the stages
+    * its jobs submit.
+    */
+  private def jdbcScans(body: => Unit): Int = {
+    val sentinel = "graft-jdbc-scans-sentinel"
+    val rdds = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    @volatile var sentinelSeen = false
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        e.stageInfo.rddInfos.filter(_.name == "JDBCRDD").foreach(r => rdds.add(r.id))
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == sentinel)) sentinelSeen = true
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      // the listener sees events in order: once the sentinel job's start
+      // arrives, so has every stage `body` submitted
+      sc.setJobDescription(sentinel)
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!sentinelSeen && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(sentinelSeen)
+      rdds.toArray.toSet.size
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
   }
 }
 

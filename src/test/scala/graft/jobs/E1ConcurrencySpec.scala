@@ -17,38 +17,6 @@ import org.apache.spark.sql.{DataFrame, Row}
 class E1ConcurrencySpec extends SparkSpec {
   import E1ConcurrencySpec._
 
-  /** A mini portal directory: the committed portal sample's survey 4
-    * (its header widened to every EOV column the pipeline selects; the
-    * short records read the new columns as null), a tiny survey 2 and an
-    * inline EuroSea.xlsx.
-    */
-  private def portalDir(): Path = {
-    val dir = Files.createTempDirectory("graft_e1_portal")
-    val survey4 = resource("4Updated_Spatial_Survey_420_8132020_FINAL_toshare.csv")
-    val headerEnd = survey4.indexOf('\n')
-    write(dir, "4Updated_Spatial_Survey_420_8132020_FINAL_toshare.csv",
-      survey4.substring(0, headerEnd) + ",Hard_Coral,Macroalgae,Mangroves,Microbes,Ocean_Sound," +
-        "Phytoplankton,Sea_Turtles,Zooplankton,Benthic_Invertebrate,Marine_Mammals" +
-        survey4.substring(headerEnd))
-    write(dir, "2InfoDataProviderswoSpatialInfo_Final_420_7302020_FINAL_toshare.csv",
-      "prog_name,ErinSpatialGeoJSON,resp_firstname,resp_lastname,resp_email\n" +
-        "Seabird Colony Counts,\"{\"\"type\"\":\"\"Point\"\",\"\"coordinates\"\":[1,2]}\",Ana,Lee,ana@example.org\n" +
-        "Continuous Plankton Recorder Survey,NA,Bo,Kim,cpr@example.org\n")
-    val header = Seq("Country", "Organisation", "Program name", "Programs Location", "Time period",
-      "Frequency", "Birds", "Hard coral", "Fish", "Macroalgae", "Mangrove", "Microbes", "Phytoplankton",
-      "Seagrass", "Turtles", "Zooplankton", "Benthic invertebrates", "Mammals", "Website", "Lat", "Lon")
-    def row(org: String, name: String, time: String, birds: String, url: String, lat: String, lon: String) =
-      Seq("Spain", org, name, "Bay", time, "Monthly", birds) ++ Seq.fill(11)("") ++ Seq(url, lat, lon)
-    xlsx(dir.resolve("EuroSea.xlsx"), header, Seq(
-      row("AZTI", "Basque monitoring network for the ecological status assessment", "1995-2020", "x",
-        "https://azti.example", "43.4", "-2.1"),
-      row("AZTI", "Basque monitoring network for the ecological status assessment", "2001", "",
-        "https://azti2.example", "43.5", "-2.2"),
-      row("IEO", "Seabird Colony Counts", "since 2010", "x", "", "", "-3.0"),
-      row("", "Continuous Plankton Recorder Survey", "junk", "", "https://cpr.example", "50", "1")))
-    dir
-  }
-
   private def rows(df: DataFrame): Seq[Row] = df.collect().toSeq
 
   test("LoadPortal's frames asked for from several threads at once equal a one-thread run") {
@@ -138,6 +106,38 @@ class E1ConcurrencySpec extends SparkSpec {
 }
 
 object E1ConcurrencySpec {
+
+  /** A mini portal directory: the committed portal sample's survey 4
+    * (its header widened to every EOV column the pipeline selects; the
+    * short records read the new columns as null), a tiny survey 2 and an
+    * inline EuroSea.xlsx.
+    */
+  def portalDir(): Path = {
+    val dir = Files.createTempDirectory("graft_e1_portal")
+    val survey4 = resource("4Updated_Spatial_Survey_420_8132020_FINAL_toshare.csv")
+    val headerEnd = survey4.indexOf('\n')
+    write(dir, "4Updated_Spatial_Survey_420_8132020_FINAL_toshare.csv",
+      survey4.substring(0, headerEnd) + ",Hard_Coral,Macroalgae,Mangroves,Microbes,Ocean_Sound," +
+        "Phytoplankton,Sea_Turtles,Zooplankton,Benthic_Invertebrate,Marine_Mammals" +
+        survey4.substring(headerEnd))
+    write(dir, "2InfoDataProviderswoSpatialInfo_Final_420_7302020_FINAL_toshare.csv",
+      "prog_name,ErinSpatialGeoJSON,resp_firstname,resp_lastname,resp_email\n" +
+        "Seabird Colony Counts,\"{\"\"type\"\":\"\"Point\"\",\"\"coordinates\"\":[1,2]}\",Ana,Lee,ana@example.org\n" +
+        "Continuous Plankton Recorder Survey,NA,Bo,Kim,cpr@example.org\n")
+    val header = Seq("Country", "Organisation", "Program name", "Programs Location", "Time period",
+      "Frequency", "Birds", "Hard coral", "Fish", "Macroalgae", "Mangrove", "Microbes", "Phytoplankton",
+      "Seagrass", "Turtles", "Zooplankton", "Benthic invertebrates", "Mammals", "Website", "Lat", "Lon")
+    def row(org: String, name: String, time: String, birds: String, url: String, lat: String, lon: String) =
+      Seq("Spain", org, name, "Bay", time, "Monthly", birds) ++ Seq.fill(11)("") ++ Seq(url, lat, lon)
+    xlsx(dir.resolve("EuroSea.xlsx"), header, Seq(
+      row("AZTI", "Basque monitoring network for the ecological status assessment", "1995-2020", "x",
+        "https://azti.example", "43.4", "-2.1"),
+      row("AZTI", "Basque monitoring network for the ecological status assessment", "2001", "",
+        "https://azti2.example", "43.5", "-2.2"),
+      row("IEO", "Seabird Colony Counts", "since 2010", "x", "", "", "-3.0"),
+      row("", "Continuous Plankton Recorder Survey", "junk", "", "https://cpr.example", "50", "1")))
+    dir
+  }
 
   def resource(name: String): String = {
     val in = getClass.getResourceAsStream(s"/portal/$name")
