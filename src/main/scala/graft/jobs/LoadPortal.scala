@@ -54,9 +54,8 @@ import org.apache.spark.sql.functions._
   *
   * `LoadPortalMain` then runs the spatial export, the fixtures and the
   * duplicates report at once. It holds no monitor while it waits for
-  * them. Of their tasks, the fixtures initialize `users` and the
-  * duplicates report `duplicates`; neither task waits for another, so
-  * the two at most take turns at the monitor.
+  * them, and of their tasks only the duplicates report initializes a
+  * lazy val (`duplicates`).
   */
 class LoadPortal(spark: SparkSession, dataDir: String) {
 

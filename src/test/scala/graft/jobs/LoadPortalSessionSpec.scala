@@ -5,8 +5,9 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import graft.{GraftSession, SparkSpec}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkPlanInfo
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 
@@ -106,6 +107,31 @@ class LoadPortalSessionSpec extends SparkSpec {
     val names = plans.asScala.toSeq.flatMap(nodes)
     assert(names.exists(_.startsWith("Scan")), names)
     assert(!names.exists(_.startsWith("WholeStageCodegen")), names)
+  }
+
+  test("forcing the frames compiles only what Spark generates in any mode; the child compiles no plan") {
+    // one count per Janino compile, whole-stage or expression class
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    // building the list forces each frame's lazy val (collecting the
+    // copies would run plans on the caller's session)
+    assert(frames(newJob()).size === 6)
+    // in a fresh JVM 6: the survey scans' row projections and the
+    // orderings of the `orderBy` range partitioning, which Spark
+    // generates directly, whatever the factory mode (97 on the caller's
+    // session with code generation); fewer when an earlier test
+    // compiled the same classes
+    assert(compiles.getCount - before <= 6)
+    // a fresh literal each time, so that Spark's cache of compiled
+    // classes cannot serve the plan and a count that stays put means
+    // nothing was generated, not that it was generated before
+    def freshPlan(s: SparkSession): Unit =
+      s.range(3).selectExpr(s"id * ${System.nanoTime() % 1000003 + 2} as x").filter("x > 2").collect()
+    val afterFrames = compiles.getCount
+    freshPlan(GraftSession.interpreted(spark))
+    assert(compiles.getCount === afterFrames)
+    freshPlan(spark)
+    assert(compiles.getCount > afterFrames)
   }
 }
 

@@ -1,12 +1,13 @@
 """Alternating parent/change A/B of the repo benchmark (perfbench/run.py).
 
     python3 tools/perfbench_ab.py <parent-commit> [--workload etl_ref]
-        [--seeds 12-21] [--seconds 5] [--claim run_s] [--json out.json]
-        [--clone-dir /tmp]
+        [--seeds 12-21] [--seconds 5] [--clone-dir /tmp]
 
 Run from the root of the checkout that holds the change. The parent
-commit is cloned with `git clone` into <clone-dir>/perfbench_ab_<sha>
-(reused when it is already there). For each seed, one pair: `perfbench/run.py
+commit is cloned with `git clone` into <clone-dir>/perfbench_ab_<sha>;
+a clone left there by an earlier run is reused only if it is checked
+out at that commit with no tracked or untracked change, and made again
+otherwise. For each seed, one pair: `perfbench/run.py
 --workload W --seed S --seconds T --trace 0` in the parent clone and in
 this checkout, one after the other, the side that runs first flipping
 from pair to pair. Each run is a fresh process of the benchmark, with
@@ -14,7 +15,7 @@ the same benchmark settings on both sides.
 
 Prints, per end-to-end metric of BENCHMARK.json, each side's median
 [Q1, Q3] and the pairs the change won (ties count for neither), and
-whether a claimed gain holds by the rule of the choosing-metrics guide
+whether a gain holds by the rule of the choosing-metrics guide
 (section 8): at least ten pairs, the change wins at least nine tenths of
 them, and the medians differ, in the metric's better direction, by more
 than the parent's interquartile range. Exits 1 if any run reports a
@@ -24,6 +25,7 @@ import argparse
 import json
 import math
 import os
+import shutil
 import statistics
 import subprocess
 import sys
@@ -60,13 +62,30 @@ def seed_range(text):
     return list(range(int(lo), int(hi or lo) + 1))
 
 
+def git(*args):
+    return subprocess.run(["git", *args], capture_output=True, text=True, check=True).stdout.strip()
+
+
+def is_clean_checkout(path, sha):
+    """`path` is a git checkout at `sha` with nothing changed or added
+    (ignored build output such as .bench_build/ aside)."""
+    try:
+        return git("-C", path, "rev-parse", "HEAD") == sha and git("-C", path, "status", "--porcelain") == ""
+    except subprocess.CalledProcessError:
+        return False
+
+
 def clone(commit, clone_dir):
-    sha = subprocess.run(["git", "rev-parse", commit], capture_output=True, text=True,
-                         check=True).stdout.strip()
+    sha = git("rev-parse", commit)
     path = os.path.join(clone_dir, f"perfbench_ab_{sha[:12]}")
+    if os.path.isdir(path) and not is_clean_checkout(path, sha):
+        print(f"perfbench_ab: {path} is not a clean checkout of {sha[:12]}; cloning it again", flush=True)
+        shutil.rmtree(path)
     if not os.path.isdir(path):
         subprocess.run(["git", "clone", "-q", os.getcwd(), path], check=True)
         subprocess.run(["git", "-C", path, "checkout", "-q", sha], check=True)
+    if not is_clean_checkout(path, sha):
+        sys.exit(f"perfbench_ab: could not check out {sha[:12]} in {path}")
     return sha, path
 
 
@@ -80,7 +99,7 @@ def run_once(cwd, workload, seed, seconds):
     return json.loads(lines[-1])
 
 
-def report(specs, parent_runs, change_runs, claim):
+def report(specs, parent_runs, change_runs):
     """The table lines and whether every run was correct and failure-free."""
     out = [f"{'metric':24s} {'parent median [Q1, Q3]':34s} {'change median [Q1, Q3]':34s} won  gain"]
     for s in specs:
@@ -89,8 +108,7 @@ def report(specs, parent_runs, change_runs, claim):
         c = [r["metrics"][name]["value"] for r in change_runs]
         p1, pm, p3 = quartiles(p)
         c1, cm, c3 = quartiles(c)
-        holds = gain_holds(p, c, better)
-        mark = ("holds" if holds else "NOT MET") if name == claim else ("yes" if holds else "-")
+        mark = "holds" if gain_holds(p, c, better) else "-"
         out.append(f"{name:24s} {f'{pm:.4g} [{p1:.4g}, {p3:.4g}]':34s} "
                    f"{f'{cm:.4g} [{c1:.4g}, {c3:.4g}]':34s} {wins(p, c, better):2d}/{len(p):<2d} {mark}")
     ok = all(r["correct"] and r["failed"] == 0 for r in parent_runs + change_runs)
@@ -104,8 +122,6 @@ def main():
     ap.add_argument("--workload", default="etl_ref")
     ap.add_argument("--seeds", default="12-21", help="inclusive range, one pair per seed")
     ap.add_argument("--seconds", type=float, default=5)
-    ap.add_argument("--claim", default="run_s", help="the metric a gain is claimed on")
-    ap.add_argument("--json", help="also write every run's result line here")
     ap.add_argument("--clone-dir", default="/tmp", help="where the parent is cloned")
     a = ap.parse_args()
 
@@ -120,13 +136,10 @@ def main():
         sides = [("parent", parent_dir, parent_runs), ("change", os.getcwd(), change_runs)]
         for label, cwd, runs in (sides if i % 2 == 0 else sides[::-1]):
             runs.append(run_once(cwd, a.workload, seed, a.seconds))
-            print(f"  seed {seed} {label}: {a.claim}={runs[-1]['metrics'][a.claim]['value']:.4g}", flush=True)
-    lines, ok = report(specs, parent_runs, change_runs, a.claim)
+            print(f"  seed {seed} {label}: " + " ".join(
+                f"{s['name']}={runs[-1]['metrics'][s['name']]['value']:.4g}" for s in specs), flush=True)
+    lines, ok = report(specs, parent_runs, change_runs)
     print("\n".join(lines))
-    if a.json:
-        with open(a.json, "w") as f:
-            json.dump({"workload": a.workload, "parent": sha, "seeds": seeds,
-                       "parent_runs": parent_runs, "change_runs": change_runs}, f)
     sys.exit(0 if ok else 1)
 
 

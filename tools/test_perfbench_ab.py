@@ -4,7 +4,9 @@ gain rule.
     python3 -m unittest tools/test_perfbench_ab.py
 """
 import os
+import subprocess
 import sys
+import tempfile
 import unittest
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -50,16 +52,37 @@ class ArithmeticTest(unittest.TestCase):
         self.assertEqual(ab.seed_range("12-21"), list(range(12, 22)))
         self.assertEqual(ab.seed_range("3"), [3])
 
-    def test_report_marks_the_claim_and_every_run_correct(self):
+    def test_report_marks_each_gain_and_every_run_correct(self):
         specs = [{"name": "run_s", "better": "lower"}, {"name": "records_per_s", "better": "higher"}]
         parent = [result(run_s=20.0 + i % 3, records_per_s=1000.0) for i in range(10)]
         change = [result(run_s=15.0, records_per_s=1000.0) for _ in range(10)]
-        lines, ok = ab.report(specs, parent, change, "run_s")
+        lines, ok = ab.report(specs, parent, change)
         self.assertTrue(ok)
         self.assertIn("10/10 holds", lines[1])
         self.assertIn(" 0/10 -", lines[2])
         change[3]["failed"] = 1
-        self.assertFalse(ab.report(specs, parent, change, "run_s")[1])
+        self.assertFalse(ab.report(specs, parent, change)[1])
+
+
+class CloneCheckTest(unittest.TestCase):
+    def test_a_reused_clone_must_sit_clean_at_the_commit(self):
+        with tempfile.TemporaryDirectory() as d:
+            def git(*args):
+                subprocess.run(["git", "-C", d, "-c", "user.name=t", "-c", "user.email=t@t", *args],
+                               check=True, capture_output=True)
+            git("init", "-q")
+            open(os.path.join(d, "a.txt"), "w").write("a\n")
+            git("add", "a.txt")
+            git("commit", "-q", "-m", "one")
+            first = ab.git("-C", d, "rev-parse", "HEAD")
+            self.assertTrue(ab.is_clean_checkout(d, first))
+            open(os.path.join(d, "a.txt"), "w").write("edited\n")
+            self.assertFalse(ab.is_clean_checkout(d, first))
+            git("commit", "-q", "-am", "two")
+            self.assertFalse(ab.is_clean_checkout(d, first))
+            open(os.path.join(d, "new.txt"), "w").write("x\n")
+            self.assertFalse(ab.is_clean_checkout(d, ab.git("-C", d, "rev-parse", "HEAD")))
+            self.assertFalse(ab.is_clean_checkout(os.path.join(d, "missing"), first))
 
 
 if __name__ == "__main__":
