@@ -1,6 +1,7 @@
 package graft
 
 import scala.collection.immutable.ListMap
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.functions._
 
@@ -19,7 +20,7 @@ object Bench {
     // warm the JVM + parquet footers once so per-query numbers measure
     // the plan, not first-touch JIT/IO
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     // ... and the expression-runtime hot paths the entry query never
     // touches: java.util.regex, the Jackson JSON-path reader, window
     // exec, and the shuffle-join machinery. Without this the FIRST
@@ -43,7 +44,7 @@ object Bench {
       r.join(r.groupBy(col("k")).agg(count(lit(1)).as("n")), "k")
         .groupBy(col("k")).agg(sum(col("n")).as("s"))
         .write.format("noop").mode("overwrite").save()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     // noise canary: a FIXED, IO-free, codegen'd computation whose cost
     // depends only on the machine — catalog edits never touch it, so
     // its history is comparable across rounds. A contaminated run
@@ -116,7 +117,7 @@ object Bench {
       if (composedWarmup(q.name)) {
         try { spark.catalog.clearCache(); System.gc()
           q.fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
-        catch { case _: Throwable => () }
+        catch { case NonFatal(_) => () }
         resetSpill()
       }
       // drop the previous query's cache entries (since round 8 almost
@@ -133,17 +134,19 @@ object Bench {
         val t0 = System.nanoTime()
         try { q.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           Some((System.nanoTime() - t0) / 1e9)
-        } catch { case e: Throwable =>
+        } catch { case NonFatal(e) =>
           System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}")
           None
         }
       }
       Thread.sleep(80) // listener-bus drain before the spill snapshot
       val (dm, dd) = (spillMem.getAndSet(0L), spillDisk.getAndSet(0L))
-      // ok = at least one run completed: a one-off OOM/GC abort on one
-      // of the N runs shouldn't discard a valid min timing, and a
+      // ok = at least one run completed: a one-off failure on one of the
+      // N runs shouldn't discard a valid min timing, and a
       // never-succeeding query must NOT appear in the queries map at
-      // all (a 0.0 entry reads as a 0-second pass to a naive consumer)
+      // all (a 0.0 entry reads as a 0-second pass to a naive consumer).
+      // Only non-fatal failures are caught: an OutOfMemoryError ends
+      // the run rather than timing later queries on a damaged heap.
       (q.name, if (times.isEmpty) 0.0 else times.min, times.nonEmpty, dm, dd)
     }
     canaries += canaryOnce()
@@ -185,7 +188,7 @@ object Bench {
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get(detailPath),
         (detail + "\n").getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     val slowest = ListMap.from(ok.sortBy(-_._2).take(20).map(r => r._1 -> r3(r._2)))
     println(Json(ListMap(
       "metric" -> "total", "value" -> r3(total), "unit" -> "sec",

@@ -23,9 +23,10 @@ import org.apache.spark.sql.SparkSession
   *
   * Which session runs what: the catalog, the spatial export's site-CSV
   * and TSV scans, the upsert and E2/E3 run on the session [[apply]]
-  * builds, with whole-stage code generation. `LoadPortal` computes its
+  * builds, with whole-stage code generation. `LoadPortal` computes E1's
   * config-scale frames (hundreds of rows) on an [[interpreted]] child of
-  * it and hands each one back as a frame of the caller's session.
+  * it, in one pass, and hands out only their copies in the caller's
+  * session; the child-side frames never leave it.
   */
 object GraftSession {
 

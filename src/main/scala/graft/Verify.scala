@@ -47,8 +47,11 @@ object Verify {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         written += 1
-      } catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      } catch {
+        // a fatal error (OutOfMemoryError) ends the sweep: the dirs
+        // written so far stay, later queries do not run on a damaged heap
+        case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
     println(s"[verify] summary: wrote $written/${selected.size} query dirs + oracle_sql.json to $outDir")

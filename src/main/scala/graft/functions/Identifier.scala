@@ -57,17 +57,4 @@ object Identifier {
 
   /** Column form. */
   def makeIdentifierCol(c: Column): Column = makeIdentifierUdf(c)
-
-  /** An ASCII-only equivalent expressed purely in built-in functions —
-    * used as the oracle-SQL-expressible variant on testdata (whose strings
-    * are ASCII, so steps 5's transliteration is the identity).
-    */
-  def makeIdentifierAsciiCol(c: Column): Column = {
-    import org.apache.spark.sql.functions._
-    val stripped = regexp_replace(lower(c), "[()\":',&/.;]", "")
-    val underscored = regexp_replace(trim(stripped), "[\\s\\-]+", "_")
-    val s = regexp_replace(underscored, "[()\":',&/.;]", "")
-    when(length(s) > 58,
-      concat(substring(s, 1, 29), substring(s, -29, 29))).otherwise(s)
-  }
 }

@@ -44,13 +44,14 @@ object Fixtures {
   }
 
   /** `output/users.json` content (index.Rmd:680-688): model
-    * "people.profile", fields = all user columns except pk.
+    * "people.profile", fields = all user columns except pk. The
+    * documents follow `users`' row order, which `LoadPortal.users` gives
+    * in `pk` order.
     */
   def usersJson(users: DataFrame): String = usersDocs(users).mkString("[", ",", "]")
 
   private def usersDocs(users: DataFrame): Array[String] =
     users
-      .orderBy(col("pk"))
       .select(to_json(struct(
         lit("people.profile").as("model"),
         col("pk"),

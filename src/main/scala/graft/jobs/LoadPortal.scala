@@ -21,15 +21,12 @@ import org.apache.spark.sql.functions._
   * html shows 25; row counts are unaffected and `in_obis` is required
   * by E3, notebooks/export_in_obis.R:3.)
   *
-  * All joins are broadcast (≤627 rows a side); the only shuffles are
-  * the EuroSea group-merge and the order-pinning windows. The frames
-  * are config-scale (one row per dataset, hundreds of rows), so
-  * `initial`, `eurosea`, `combined`, `withIdentifiers`, `duplicates` and
-  * `users` are each computed once and held on the driver
-  * ([[Ckpt.toLocal]]). Every later reader (spatial export, fixtures,
-  * reports, the row counts, the upsert, E3) reads that copy: left lazy,
-  * each action re-read the surveys and the XLSX and re-ran the whole
-  * plan.
+  * All joins are broadcast (≤627 rows a side); the only shuffles are the
+  * EuroSea group-merge with its sort and the identifier dedup's window.
+  * The frames are config-scale (one row per dataset, hundreds of rows),
+  * so each is computed once and held on the driver ([[Ckpt.toLocal]]);
+  * every later reader (spatial export, fixtures, reports, the row
+  * counts, the upsert, E3) reads that copy.
   *
   * At this size the cost of a Spark action is its planning and code
   * generation, not its rows. So the six frames are computed on one
@@ -41,21 +38,15 @@ import org.apache.spark.sql.functions._
   * column steps are one `select` ([[LoadPortal.reshape]]), not a chain
   * of `withColumn` calls that each analyse the whole plan again.
   *
-  * `initial` and `eurosea` are independent, so they are computed at
-  * once ([[graft.TaskPool]]), the first time either is asked for; never
-  * at construction, so building the frames still fires no Spark job.
-  * Every `lazy val` of one instance initializes under the instance's one
-  * monitor, and the thread that asks holds it while the two run. So the
-  * two pool tasks read no lazy val: the inputs they build on, `source2`,
-  * `source4` and `euroseaRaw`, are plans that run no job, built afresh by
-  * each caller (`def`s), and each task builds its own and collects the
-  * plan on top. A task that forced an uninitialized lazy val would wait
-  * for that monitor while its owner waits for the task.
-  *
-  * `LoadPortalMain` then runs the spatial export, the fixtures and the
-  * duplicates report at once. It holds no monitor while it waits for
-  * them, and of their tasks only the duplicates report initializes a
-  * lazy val (`duplicates`).
+  * E1's chain runs straight through, the first time any of its frames is
+  * asked for (never at construction, so building the frames fires no
+  * Spark job): `initial` ∥ `eurosea` ([[graft.TaskPool]]), then
+  * `combined`, `withIdentifiers` and `users`, each read from the held
+  * rows of the one before. That one lazy val is the entry point, so
+  * there is no lock order to keep: its two pool tasks build their inputs
+  * from `def`s and read no lazy val. Only the duplicates report, which
+  * the upsert does not need, is computed apart, from the held
+  * `withIdentifiers` rows.
   */
 class LoadPortal(spark: SparkSession, dataDir: String) {
 
@@ -85,22 +76,89 @@ class LoadPortal(spark: SparkSession, dataDir: String) {
       .withColumn("_row", monotonically_increasing_id())
 
   /** P2 + J1 + C2/C4/C5/C8/C9 + F5 (index.Rmd:73-128): df_initial. */
-  lazy val initial: DataFrame = Ckpt.toLocal(sources._1, spark)
+  def initial: DataFrame = frames.initial
 
   /** C3 + C10/C11/C8/C9 + C6 + C12/C13 + A1 suite (index.Rmd:169-341):
     * normalize EuroSea and merge by (organization, name), 367 → 256.
     */
-  lazy val eurosea: DataFrame = Ckpt.toLocal(sources._2, spark)
+  def eurosea: DataFrame = frames.eurosea
 
-  /** `initial` and `eurosea` on the child session, both at once (the
-    * monitor rule in the class comment).
+  /** U1 + W1 (index.Rmd:346-347): bind initial + eurosea, id, flag. */
+  def combined: DataFrame = frames.combined
+
+  /** C14 + W3 (index.Rmd:352-394): identifiers + `_1`-style dedup. */
+  def withIdentifiers: DataFrame = frames.withIdentifiers
+
+  /** A2 + W2 (index.Rmd:663-671): users — distinct by email, pk 2001+,
+    * in `pk` order.
     */
-  private lazy val sources: (DataFrame, DataFrame) =
-    TaskPool(local) { pool =>
+  def users: DataFrame = frames.users
+
+  /** A3 (index.Rmd:381-387): the duplicate-identifier report, in
+    * (`identifier`, `id`) order. Its `identifier` is the one before the
+    * `_1`-style dedup: `withIdentifiers`' `original_identifier`.
+    */
+  lazy val duplicates: DataFrame = Ckpt.toLocal(
+    Relational.duplicateReport(
+        Ckpt.toLocal(withIdentifiers, local).coalesce(1)
+          .select(col("id"), col("name"), col("source"), col("abstract"), col("url"),
+            col("start_date"), col("end_date"), col("temporal_resolution"),
+            col("contact_email"), col("organization"), col("original_identifier").as("identifier")),
+        "identifier")
+      .orderBy(col("identifier"), col("id")),
+    spark)
+
+  /** E1's chain on the child session, each step read from the held rows
+    * of the one before; only the copies in the caller's session leave it.
+    */
+  private lazy val frames: Frames = {
+    val (initial, eurosea) = TaskPool(local) { pool =>
       val i = pool.fork(Ckpt.toLocal(initialFrame))
       val e = pool.fork(Ckpt.toLocal(euroseaFrame))
       (i.get, e.get)
     }
+    // U1 + W1: bind order is all initial rows (file order), then eurosea
+    // (group order); one partition, which the window needs: coalesced,
+    // not shuffled (globalRowNumberScalable is the big-data variant)
+    val unioned = reshape(initial, Seq(
+        "_branch" -> lit(0), "_g_org" -> lit(""), "_g_name" -> lit(""), "_g_org_null" -> lit(0)))
+      .unionByName(reshape(eurosea, Seq(
+        "_branch" -> lit(1),
+        "_g_org" -> coalesce(col("organization"), lit("")),
+        "_g_name" -> col("name"),
+        "_g_org_null" -> col("organization").isNull.cast("int"))), allowMissingColumns = true)
+      .coalesce(1)
+    val combined = Ckpt.toLocal(reshape(
+      Relational.globalRowNumber(unioned, "id",
+        col("_branch"), col("_g_org_null"), col("_g_org"), col("_g_name"), col("_row")),
+      Seq("id" -> col("id").cast("int"), "has_shapefile" -> lit(false)),
+      drop = Set("_row", "_branch", "_g_org", "_g_name", "_g_org_null")))
+    // C14 + W3
+    val identifier = Identifier.makeIdentifierCol(col("name"))
+    val withIdentifiers = Ckpt.toLocal(reshape(
+      Relational.makeUnique(
+        reshape(combined, Seq("identifier" -> identifier, "original_identifier" -> identifier)),
+        "identifier", "id", "_uniq"),
+      Seq("identifier" -> col("_uniq")), drop = Set("_uniq")))
+    // A2 + W2, on one partition, which already satisfies both windows
+    // (without it each window's shuffle is one more Spark job); the last
+    // window leaves the rows in `pk` order
+    val users = Relational.distinctByKey(
+        withIdentifiers.coalesce(1)
+          .filter(col("contact_email").isNotNull)
+          .select(
+            col("contact_firstname").as("first_name"),
+            col("contact_lastname").as("last_name"),
+            col("contact_email").as("email"),
+            col("contact_email").as("username"),
+            col("id"),
+            lit(false).as("is_superuser")),
+        "username", "id")
+      .select(col("first_name"), col("last_name"), col("email"), col("username"), col("is_superuser"),
+        (lit(2000) + row_number().over(Window.orderBy(col("id")))).cast("int").as("pk"))
+    Frames(Ckpt.toLocal(initial, spark), Ckpt.toLocal(eurosea, spark), Ckpt.toLocal(combined, spark),
+      Ckpt.toLocal(withIdentifiers, spark), Ckpt.toLocal(users, spark))
+  }
 
   /** The plan of [[initial]]. */
   private def initialFrame: DataFrame = {
@@ -217,73 +275,6 @@ class LoadPortal(spark: SparkSession, dataDir: String) {
       .withColumn("_row", monotonically_increasing_id())
   }
 
-  /** U1 + W1 (index.Rmd:346-347): bind initial + eurosea, id, flag. */
-  lazy val combined: DataFrame = Ckpt.toLocal(combinedLocal, spark)
-
-  /** [[combined]] on the child session. */
-  private lazy val combinedLocal: DataFrame = Ckpt.toLocal {
-    val a = reshape(sources._1, Seq(
-      "_branch" -> lit(0), "_g_org" -> lit(""), "_g_name" -> lit(""), "_g_org_null" -> lit(0)))
-    val b = reshape(sources._2, Seq(
-      "_branch" -> lit(1),
-      "_g_org" -> coalesce(col("organization"), lit("")),
-      "_g_name" -> col("name"),
-      "_g_org_null" -> col("organization").isNull.cast("int")))
-    // one partition, which the window below needs: coalesced, not shuffled
-    val unioned = a.unionByName(b, allowMissingColumns = true).coalesce(1)
-    // bind order: all initial rows (file order) then eurosea (group
-    // order) — a 627-row single-partition window is the correct tool at
-    // this scale (globalRowNumberScalable is the big-data variant)
-    reshape(
-      Relational.globalRowNumber(unioned, "id",
-        col("_branch"), col("_g_org_null"), col("_g_org"), col("_g_name"), col("_row")),
-      Seq("id" -> col("id").cast("int"), "has_shapefile" -> lit(false)),
-      drop = Set("_row", "_branch", "_g_org", "_g_name", "_g_org_null"))
-  }
-
-  /** C14 + W3 (index.Rmd:352-394): identifiers + `_1`-style dedup. */
-  lazy val withIdentifiers: DataFrame = Ckpt.toLocal(withIdentifiersLocal, spark)
-
-  /** [[withIdentifiers]] on the child session. */
-  private lazy val withIdentifiersLocal: DataFrame = Ckpt.toLocal {
-    val identifier = Identifier.makeIdentifierCol(col("name"))
-    val unique = Relational.makeUnique(
-      reshape(combinedLocal, Seq("identifier" -> identifier, "original_identifier" -> identifier)),
-      "identifier", "id", "_uniq")
-    reshape(unique, Seq("identifier" -> col("_uniq")), drop = Set("_uniq"))
-  }
-
-  /** A3 (index.Rmd:381-387): the duplicate-identifier report. */
-  lazy val duplicates: DataFrame = Ckpt.toLocal(
-    Relational.duplicateReport(
-        combinedLocal.withColumn("identifier", Identifier.makeIdentifierCol(col("name"))),
-        "identifier")
-      .select(col("id"), col("name"), col("source"), col("abstract"), col("url"),
-        col("start_date"), col("end_date"), col("temporal_resolution"),
-        col("contact_email"), col("organization"), col("identifier"))
-      .orderBy(col("identifier")),
-    spark)
-
-  /** A2 + W2 (index.Rmd:663-671): users — distinct by email, pk 2001+.
-    * On one partition, which already satisfies both windows: without
-    * it each window's shuffle is one more Spark job.
-    */
-  lazy val users: DataFrame = Ckpt.toLocal(
-    Relational.distinctByKey(
-        withIdentifiersLocal.coalesce(1)
-          .filter(col("contact_email").isNotNull)
-          .select(
-            col("contact_firstname").as("first_name"),
-            col("contact_lastname").as("last_name"),
-            col("contact_email").as("email"),
-            col("contact_email").as("username"),
-            col("id"),
-            lit(false).as("is_superuser")),
-        "username", "id")
-      .select(col("first_name"), col("last_name"), col("email"), col("username"), col("is_superuser"),
-        (lit(2000) + row_number().over(Window.orderBy(col("id")))).cast("int").as("pk")),
-    spark)
-
   /** J2 (index.Rmd:673-674): user_pk backfill onto the combined table. */
   def withUserPks(combinedDf: DataFrame): DataFrame =
     combinedDf.join(
@@ -299,6 +290,10 @@ class LoadPortal(spark: SparkSession, dataDir: String) {
 }
 
 object LoadPortal {
+
+  /** The caller-session copies of E1's chain. */
+  private final case class Frames(initial: DataFrame, eurosea: DataFrame, combined: DataFrame,
+                                  withIdentifiers: DataFrame, users: DataFrame)
 
   /** R `as.numeric` → `as.character` round-trip (index.Rmd:179-180):
     * junk → null, integral values print without a decimal point.

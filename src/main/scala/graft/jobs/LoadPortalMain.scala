@@ -23,15 +23,12 @@ object LoadPortalMain {
 
     val job = new LoadPortal(spark, dataDir)
     val combined = job.withIdentifiers
-    // forced here so that, of the tasks below, only the duplicates
-    // report initializes one of LoadPortal's lazy vals (its lock)
-    val users = job.users
     val (spatial, userCount) = TaskPool(spark) { pool =>
       val exported = pool.fork(SpatialExport.run(spark, combined, dataDir, s"$outDir/output"))
       // K2/K3 Django fixtures (index.Rmd:648-656, 680-688)
       val fixtures = pool.fork {
         Fixtures.writeEovs(spark, s"$outDir/output")
-        Fixtures.writeUsers(users, s"$outDir/output")
+        Fixtures.writeUsers(job.users, s"$outDir/output")
       }
       // reports (the reference prints these as notebook tables)
       val duplicates = pool.fork(writeReport(job.duplicates, s"$outDir/reports/duplicates"))

@@ -33,22 +33,6 @@ class FunctionsSpec extends SparkSpec {
     assert(Identifier.makeIdentifier("L'étude (côtière) & Co.; x/y") === "letude_cotiere_co_xy")
   }
 
-  test("make_identifier: built-in ASCII column variant agrees with the UDF on ASCII") {
-    import spark.implicits._
-    val samples = Seq("Ocean Tracking Network", "A - B  well, C",
-      "L'etude (cotiere) & Co.; x/y", "  padded  name  ", "",
-      "The Unbelievably Long Network Name For Monitoring Absolutely Everything In The Ocean",
-      "x", "a/b.c;d,e") ++
-      (0 until 100).map(i => s"Part #$i name-with dashes and.dots ${"y" * (i % 70)}")
-    val df = samples.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("i", "s")
-    val got = df.select(col("i"),
-        graft.functions.Identifier.makeIdentifierAsciiCol(col("s")).as("a"))
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    samples.zipWithIndex.foreach { case (t, i) =>
-      assert(got(i.toLong) === graft.functions.Identifier.makeIdentifier(t), s"on '$t'")
-    }
-  }
-
   test("make_identifier: >58 chars folds to first 29 + last 29 (index.Rmd:353-359)") {
     val long = "The Unbelievably Long Network Name For Monitoring Absolutely Everything In The Ocean"
     val id = Identifier.makeIdentifier(long)
